@@ -1,9 +1,11 @@
 #!/usr/bin/env python3
 """Local mirror of the driver's correctness gate: run Verify's parquet
 dumps against DuckDB executing oracle_sql.json on the same sf tables.
-Columns sorted by name, rows sorted, exact value compare."""
+Columns sorted by name, rows sorted, exact value compare (floats by bit
+pattern)."""
 import json, sys, glob, os
 import duckdb
+import numpy as np
 import pandas as pd
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -81,9 +83,11 @@ for d in sorted(glob.glob(f"{OUT_DIR}/*/")):
         gv, wv = g[c], w[c]
         try:
             if gv.dtype.kind == 'f' or wv.dtype.kind == 'f':
-                import numpy as np
+                # bit patterns, as the gate hashes them: -0.0 != 0.0,
+                # and every NaN equals every NaN
                 ga, wa = gv.to_numpy(dtype=float), wv.to_numpy(dtype=float)
-                neq = ~((ga == wa) | (pd.isna(ga) & pd.isna(wa)))
+                neq = ~((ga.view(np.int64) == wa.view(np.int64)) |
+                        (np.isnan(ga) & np.isnan(wa)))
             else:
                 neq = ~((gv.astype(str) == wv.astype(str)) | (gv.isna() & wv.isna()))
         except Exception as e:

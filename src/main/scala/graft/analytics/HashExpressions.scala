@@ -848,8 +848,9 @@ object HashFunctions {
     * regr_slope/regr_intercept pair, whose per-partition float fold
     * order is NOT stable (the r18 text_heaps hash flip: 6-dp rounding
     * of a partition-order-dependent double is not determinism).
-    * Returns struct(slope, intercept), both rounded to 6 dp; the
-    * intercept uses the UNROUNDED slope, as does the oracle.
+    * Returns struct(slope, intercept), both rounded to 6 dp with a
+    * zero always +0.0; the intercept uses the UNROUNDED slope, as does
+    * the oracle.
     */
   def ols_fit6(pts: Column): Column = {
     import org.apache.spark.sql.functions.{aggregate, lit, round, size, struct, array_sort, when}
@@ -867,6 +868,12 @@ object HashFunctions {
     val denom = n * sxx - sx * sx
     val slope = when(denom =!= lit(0.0), (n * sxy - sx * sy) / denom)
     val intercept = when(denom =!= lit(0.0), (sy - slope * sx) / n)
-    struct(round(slope, 6).as("slope"), round(intercept, 6).as("intercept"))
+    // -0.0 → 0.0: DuckDB's round keeps the sign of a zero result, and
+    // the oracle normalizes it the same way
+    def round6(v: Column): Column = {
+      val r = round(v, 6)
+      when(r === lit(0.0), lit(0.0)).otherwise(r)
+    }
+    struct(round6(slope).as("slope"), round6(intercept).as("intercept"))
   }
 }

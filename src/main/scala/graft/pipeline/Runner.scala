@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.JsonExpressions
 import graft.model.Cdc
-import graft.ops.Registry
+import graft.ops.{RefCols, Registry}
 
 /** `builtin:s3` connector config mapping (reference
   * `pkg/plugin/connector/builtin/registry.go:47`,
@@ -218,15 +218,30 @@ object Runner {
     // destination-specific record validation: a record the sink cannot
     // accept (e.g. a payload field name that is not a legal SQL
     // identifier) nacks to the DLQ instead of failing the write task
-    val processed = cfg.plugin match {
-      case "builtin:postgres" | "jdbc" => JdbcWriter.validate(chained)
-      case _ => chained
-    }
+    val processed = if (isJdbc(cfg)) JdbcWriter.validate(chained) else chained
     val out = Cdc.ok(processed)
     val failed = Cdc.failed(processed)
     write(out, cfg)
     failed
   }
+
+  private def isJdbc(cfg: ConnectorConfig): Boolean =
+    cfg.plugin == "builtin:postgres" || cfg.plugin == "jdbc"
+
+  /** Whether a destination can nack records: it runs processors, or
+    * validates records before writing (JDBC).
+    */
+  private def canNack(cfg: ConnectorConfig): Boolean = cfg.processors.nonEmpty || isJdbc(cfg)
+
+  /** Failed records as the DLQ receives them: each carries its error in
+    * the reference's DLQ metadata key, which every sink renders.
+    */
+  private def dlqRecords(failed: DataFrame): DataFrame =
+    Cdc.withErrorChannel(failed).withColumn(Cdc.Metadata,
+      RefCols.metaSet(col(Cdc.Metadata), DlqErrorKey, col(Cdc.Error)))
+
+  /** Metadata key of a DLQ record's error, the reference's. */
+  val DlqErrorKey = "conduit.dlq.nack.error"
 
   /** Per-record wire size (payload-after + key bytes) for the
     * Prometheus byte counters — string payloads (the wire-JSON
@@ -329,27 +344,28 @@ object Runner {
             ins.offer(renderJson(batch.limit(100)).collect().map(_.getString(0)).toSeq)
           }
           val ok = ordered(Cdc.ok(batch), pipeline)
-          val srcFailed = Cdc.failed(batch)
           // fan-out barrier: every destination writes before the batch
           // (and so its offsets) commits — all-or-nothing ack.
-          // Destination-level processor failures nack too.
-          val destFailed = pipeline.destinations.map(d => writeBatch(ok, d))
-          val failed = (srcFailed +: destFailed).reduce(_.unionByName(_))
-          val nacks = failed.count()
-          // records + wire bytes in ONE aggregate over the persisted
-          // batch (this pass existed as batch.count() before the bytes
-          // counter) — feeds the Prometheus per-pipeline totals
+          // Destination-level failures nack too; only destinations
+          // that can fail a record are counted (one job each).
+          val destFailed = pipeline.destinations.map(d => d -> writeBatch(ok, d))
+            .collect { case (d, f) if canNack(d) => f }
+          val failed = (Cdc.failed(batch) +: destFailed).reduce(_.unionByName(_))
+          // records, source nacks and wire bytes in ONE aggregate over
+          // the persisted batch — feeds the Prometheus per-pipeline totals
           val statsRow = batch.agg(count(lit(1)).cast("long").as("c"),
+            count(col(Cdc.Error)).cast("long").as("n"),
             coalesce(sum(wireBytes(batch)), lit(0L)).cast("long").as("b")).head()
           val total = statsRow.getLong(0)
+          val nacks = statsRow.getLong(1) + destFailed.map(_.count()).sum
           val acks = math.max(0L, total - nacks)
           if (nacks > 0) dlqSink match {
-            case Some(sink) => write(Cdc.withErrorChannel(failed), sink)
+            case Some(sink) => write(dlqRecords(failed), sink)
             case None => throw new IllegalStateException(
               s"pipeline ${pipeline.id}: $nacks failed records and no DLQ configured")
           }
           nackWindow.foreach(_.observe(acks, nacks))
-          Metrics.observeBatch(pipeline.id, total, statsRow.getLong(1),
+          Metrics.observeBatch(pipeline.id, total, statsRow.getLong(2),
             nacks, System.nanoTime() - t0)
         } finally batch.unpersist()
       }
@@ -370,7 +386,7 @@ object Runner {
       val dlqCount = failed.count()
       pipeline.dlq.foreach(d =>
         if (dlqCount > 0)
-          write(Cdc.withErrorChannel(failed),
+          write(dlqRecords(failed),
             ConnectorConfig(s"${pipeline.id}-dlq", d.plugin, d.settings)))
       Map("ok" -> (ok.count() - destFailed.map(_.count()).sum), "dlq" -> dlqCount)
     } finally df.unpersist()

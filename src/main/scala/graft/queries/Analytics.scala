@@ -4129,8 +4129,11 @@ object Analytics {
          fit AS (SELECT n_types, n, sx, sy,
              (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope_raw
            FROM sums)
-         SELECT n_types, round(slope_raw, 6) AS slope,
-           round((sy - slope_raw * sx) / n, 6) AS intercept
+         SELECT n_types,
+           CASE WHEN round(slope_raw, 6) = 0 THEN 0.0
+             ELSE round(slope_raw, 6) END AS slope,
+           CASE WHEN round((sy - slope_raw * sx) / n, 6) = 0 THEN 0.0
+             ELSE round((sy - slope_raw * sx) / n, 6) END AS intercept
          FROM fit""",
     // Heaps replay: bucketed (bucket, token) counts, first-occurrence
     // MIN per type, checkpoint prefix sums, 6-dp log-log OLS
@@ -4176,8 +4179,10 @@ object Analytics {
            (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope_raw
          FROM sums)
        SELECT n_points, n_tokens, n_types,
-         round(slope_raw, 6) AS beta,
-         round((sy - slope_raw * sx) / n, 6) AS log10_k
+         CASE WHEN round(slope_raw, 6) = 0 THEN 0.0
+           ELSE round(slope_raw, 6) END AS beta,
+         CASE WHEN round((sy - slope_raw * sx) / n, 6) = 0 THEN 0.0
+           ELSE round((sy - slope_raw * sx) / n, 6) END AS log10_k
        FROM fit""",
     "sample_temperature" ->
       """WITH c AS (SELECT CAST(18446744073709551616 AS HUGEINT) AS m64),

@@ -2555,8 +2555,10 @@ object Temporal {
              (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope_raw
            FROM sums),
          o AS (SELECT g AS event_type, n_scales, n_blocks,
-             round(slope_raw, 6) AS hurst,
-             round((sy - slope_raw * sx) / n, 6) AS log_c
+             CASE WHEN round(slope_raw, 6) = 0 THEN 0.0
+               ELSE round(slope_raw, 6) END AS hurst,
+             CASE WHEN round((sy - slope_raw * sx) / n, 6) = 0 THEN 0.0
+               ELSE round((sy - slope_raw * sx) / n, 6) END AS log_c
            FROM fit)
          SELECT * FROM o WHERE n_scales >= 2"""
 

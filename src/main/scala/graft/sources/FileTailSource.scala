@@ -1,9 +1,11 @@
 package graft.sources
 
+import java.nio.charset.{Charset, StandardCharsets}
 import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -27,14 +29,28 @@ import graft.model.Cdc
   * mid-line). Restart from the checkpoint resumes at the committed
   * byte offset: no loss, no re-read.
   *
-  * A single file is inherently one reader's worth of I/O, so each
-  * batch is one partition — parallelism in a tail pipeline comes from
-  * the processors downstream (Spark repartitions after the scan).
+  * Parallelism: a micro-batch's range is cut into up to
+  * `defaultParallelism` contiguous byte ranges of at least
+  * [[FileTailStream.MinSplitBytes]], each ending at a newline (the
+  * driver reads forward from each nominal cut to the next `\n`), and
+  * each range is one input partition. So a bulk batch runs the
+  * processor chain and the sink encoders on every core, while a small
+  * trickle batch stays one task. Positions are byte offsets either
+  * way, so checkpoints do not depend on the split.
+  *
+  * Ordering: in the default delivery mode the ranges are processed and
+  * written by parallel tasks, so a sink sees the batch's records in no
+  * particular order across ranges (within a range, file order).
+  * `ordered: global` (one writer, sorted by position) and
+  * `ordered: key` (per-key position order) sort after the scan and are
+  * unaffected by the split.
+  *
   * Truncation (offset > file length) restarts from 0, matching tail's
   * `-F` reopen behavior.
   *
   * Options: `path` (one file), `collection` (metadata), `charset`
-  * (default UTF-8), `maxBytesPerBatch` (default 64 MiB).
+  * (default UTF-8), `maxBytesPerBatch` (default 64 MiB, at most
+  * `Int.MaxValue`).
   */
 class FileTailSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -55,7 +71,16 @@ object FileTailConfig {
       path = lower("path"),
       collection = lower.getOrElse("collection", "file"),
       charset = lower.getOrElse("charset", "UTF-8"),
-      maxBytes = lower.getOrElse("maxbytesperbatch", (64L * 1024 * 1024).toString).toLong)
+      maxBytes = lower.get("maxbytesperbatch").fold(64L * 1024 * 1024)(maxBytes))
+  }
+
+  /** One reader buffers a whole range, so a batch must fit an array. */
+  private def maxBytes(v: String): Long = {
+    val n = v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"conduit-file-tail: maxBytesPerBatch must be a whole number of bytes, got '$v'"))
+    if (n < 1 || n > Int.MaxValue) throw new IllegalArgumentException(
+      s"conduit-file-tail: maxBytesPerBatch must be in 1..${Int.MaxValue}, got $n")
+    n
   }
 }
 
@@ -69,7 +94,8 @@ class FileTailTable(options: Map[String, String]) extends Table with SupportsRea
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = Cdc.schema
         override def toMicroBatchStream(checkpoint: String): MicroBatchStream =
-          new FileTailStream(FileTailConfig(options))
+          new FileTailStream(FileTailConfig(options),
+            SparkSession.active.sparkContext.defaultParallelism)
       }
     }
 }
@@ -78,54 +104,74 @@ case class FileTailPartition(path: String, fromByte: Long, toByte: Long)
     extends InputPartition
 
 class FileTailReaderFactory(config: FileTailConfig) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[FileTailPartition]
-    new PartitionReader[InternalRow] {
-      private lazy val lines: Iterator[(Long, String)] = {
-        val raf = new java.io.RandomAccessFile(part.path, "r")
-        try {
-          raf.seek(part.fromByte)
-          val buf = new Array[Byte]((part.toByte - part.fromByte).toInt)
-          raf.readFully(buf)
-          // the range always ends at a newline (the stream only offers
-          // complete lines), so a simple split is loss-free
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-          var lineStart = 0
-          var i = 0
-          while (i < buf.length) {
-            if (buf(i) == '\n') {
-              out += ((part.fromByte + lineStart,
-                new String(buf, lineStart, i - lineStart, config.charset)
-                  .stripSuffix("\r")))
-              lineStart = i + 1
-            }
-            i += 1
-          }
-          out.iterator
-        } finally raf.close()
-      }
-      private var current: (Long, String) = _
-      override def next(): Boolean = {
-        if (!lines.hasNext) return false
-        current = lines.next(); true
-      }
-      override def get(): InternalRow = new GenericInternalRow(Array[Any](
-        current._1.toString.getBytes("UTF-8"), // position = byte offset
-        UTF8String.fromString("create"),
-        ArrayBasedMapData(
-          Array[Any](UTF8String.fromString("opencdc.collection")),
-          Array[Any](UTF8String.fromString(config.collection))),
-        null,
-        null,
-        null,
-        UTF8String.fromString(current._2)))
-      override def close(): Unit = ()
-    }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new FileTailReader(p.asInstanceOf[FileTailPartition], config)
+}
+
+/** Reads one newline-terminated byte range, one line per `next()`.
+  * The scan lives in `next()` rather than in a one-shot bulk loop so
+  * the JIT compiles it after a few hundred lines. Valid UTF-8 lines
+  * become `UTF8String`s over the range's bytes with no decode; other
+  * charsets and invalid UTF-8 go through `String` decoding, which
+  * replaces bad bytes with U+FFFD.
+  */
+class FileTailReader(part: FileTailPartition, config: FileTailConfig)
+    extends PartitionReader[InternalRow] {
+  private val buf: Array[Byte] = {
+    val raf = new java.io.RandomAccessFile(part.path, "r")
+    try {
+      raf.seek(part.fromByte)
+      val b = new Array[Byte]((part.toByte - part.fromByte).toInt)
+      raf.readFully(b)
+      b
+    } finally raf.close()
   }
+  private val utf8 =
+    Charset.forName(config.charset) == StandardCharsets.UTF_8
+  private var cursor = 0
+  // columns other than position and payload are the same on every row
+  private val row = new GenericInternalRow(Array[Any](
+    null,
+    UTF8String.fromString("create"),
+    ArrayBasedMapData(
+      Array[Any](UTF8String.fromString("opencdc.collection")),
+      Array[Any](UTF8String.fromString(config.collection))),
+    null,
+    null,
+    null,
+    null))
+
+  // the stream only offers ranges that end at a newline; should the
+  // file change under the reader, a last unterminated line is dropped
+  override def next(): Boolean = {
+    val start = cursor
+    var nl = start
+    while (nl < buf.length && buf(nl) != '\n') nl += 1
+    if (nl == buf.length) return false
+    cursor = nl + 1
+    row.update(0, java.lang.Long.toString(part.fromByte + start)
+      .getBytes(StandardCharsets.US_ASCII)) // position = byte offset
+    row.update(6, text(start, nl))
+    true
+  }
+
+  /** The line `[start, nl)` without a trailing `\r`. */
+  private def text(start: Int, nl: Int): UTF8String = {
+    if (utf8) {
+      val end = if (nl > start && buf(nl - 1) == '\r') nl - 1 else nl
+      val s = UTF8String.fromBytes(buf, start, end - start)
+      if (s.isValid) return s
+    }
+    UTF8String.fromString(
+      new String(buf, start, nl - start, config.charset).stripSuffix("\r"))
+  }
+
+  override def get(): InternalRow = row
+  override def close(): Unit = ()
 }
 
 /** Byte-offset micro-batch stream over one append-only file. */
-class FileTailStream(config: FileTailConfig) extends MicroBatchStream
+class FileTailStream(config: FileTailConfig, parallelism: Int) extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
   /** Last byte (exclusive) of the final COMPLETE line at or below
@@ -185,9 +231,54 @@ class FileTailStream(config: FileTailConfig) extends MicroBatchStream
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[CountOffset].count
     val e = end.asInstanceOf[CountOffset].count
-    if (e <= s) Array.empty
-    else Array(FileTailPartition(config.path, s, e))
+    val cuts = splitPoints(s, e)
+    cuts.zip(cuts.drop(1)).map { case (from, to) =>
+      FileTailPartition(config.path, from, to): InputPartition }.toArray
   }
+
+  /** `s`, then the end of the line that holds each nominal cut of
+    * `[s, e)` into `parallelism` equal parts (no more parts than
+    * `MinSplitBytes` allows), then `e`; without duplicates, so one long
+    * line spanning several nominal cuts makes one range. `e` must end
+    * a line.
+    */
+  private def splitPoints(s: Long, e: Long): Seq[Long] =
+    if (e <= s) Nil
+    else {
+      val parts = math.max(1L, math.min(parallelism.toLong,
+        (e - s) / FileTailStream.MinSplitBytes)).toInt
+      val raf = new java.io.RandomAccessFile(config.path, "r")
+      try {
+        val inner = (1 until parts).map(i => lineEndFrom(raf, s + (e - s) * i / parts, e))
+        (s +: inner :+ e).distinct
+      } finally raf.close()
+    }
+
+  /** The position just past the first newline at or after `from - 1`
+    * (a cut that already starts a line stays put), at most `e`.
+    */
+  private def lineEndFrom(raf: java.io.RandomAccessFile, from: Long, e: Long): Long = {
+    val chunk = new Array[Byte](8192)
+    var pos = from - 1
+    while (pos < e) {
+      val n = math.min(chunk.length.toLong, e - pos).toInt
+      raf.seek(pos)
+      raf.readFully(chunk, 0, n)
+      var i = 0
+      while (i < n) {
+        if (chunk(i) == '\n') return pos + i + 1
+        i += 1
+      }
+      pos += n
+    }
+    e
+  }
+
   override def createReaderFactory(): PartitionReaderFactory =
     new FileTailReaderFactory(config)
+}
+
+object FileTailStream {
+  /** Smallest range worth its own task: a trickle batch stays one. */
+  val MinSplitBytes: Long = 1L << 20
 }

@@ -123,6 +123,38 @@ class PipelineSpec extends AnyFunSuite {
     assert(counts("dlq") == dlqd)
   }
 
+  test("DLQ records carry their error in conduit.dlq.nack.error (JSON DLQ, batch and streaming)") {
+    // source-level rejects (id % 4 = 0) and destination-level ones (id % 4 = 1)
+    def pipeline(id: String, dlq: String) = Pipeline(id)
+      .source("gen", "builtin:generator",
+        "format.options.id" -> "int", "recordCount" -> "40")
+      .processorWhen("err", "error", condition = "cast(.Payload.After.id as long) % 4 = 0",
+        "message" -> "rejected {{ .Payload.After.id }}")
+      .copy(destinations = Seq(ConnectorConfig(s"$id-out", "memory",
+        processors = Seq(graft.pipeline.ProcessorConfig("boom", "error",
+          Map("message" -> "dest rejects {{ .Payload.After.id }}"),
+          condition = Some("cast(.Payload.After.id as long) % 4 = 1"))))))
+      .withDlq("builtin:file", windowSize = 0, nackThreshold = 0, "path" -> dlq)
+    def checkDlq(id: String, dlq: String): Unit = {
+      val recs = spark.read.text(dlq).collect().map(r => JsonOps.parse(r.getString(0)))
+      assert(recs.nonEmpty)
+      assert(recs.length + Runner.memorySink(s"$id-out").size == 40)
+      recs.foreach { r =>
+        val recId = r.get("payload").get("after").get("id").asLong()
+        val want = if (recId % 4 == 0) s"rejected $recId" else s"dest rejects $recId"
+        assert(r.get("metadata").get(Runner.DlqErrorKey).asText() == want, r.toString)
+      }
+    }
+    Runner.memorySinks.clear()
+    val batchDlq = tmp("dlq-batch")
+    Runner.runBatch(spark, pipeline("p-dlqmsg-b", batchDlq))
+    checkDlq("p-dlqmsg-b", batchDlq)
+    val streamDlq = tmp("dlq-stream")
+    Runner.start(spark, pipeline("p-dlqmsg-s", streamDlq), tmp("ckpt-dlqmsg"),
+      Trigger.AvailableNow()).awaitTermination(60000)
+    checkDlq("p-dlqmsg-s", streamDlq)
+  }
+
   test("streaming: generator runs as a StructuredStreaming query to memory") {
     Runner.memorySinks.clear()
     val p = Pipeline("p6")
