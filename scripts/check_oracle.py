@@ -1,12 +1,14 @@
 #!/usr/bin/env python3
 """Local mirror of the driver's correctness gate: run Verify's parquet
 dumps against DuckDB executing oracle_sql.json on the same sf tables.
-Columns sorted by name, rows sorted, exact value compare (floats by bit
-pattern)."""
+Columns sorted by name, rows sorted, exact value compare (floats: null
+masks, then bit patterns)."""
 import json, sys, glob, os
 import duckdb
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT_DIR = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
@@ -40,11 +42,30 @@ ONLY = set(x for x in os.environ.get("CHECK_ONLY", "").split(",") if x)
 
 oracles = json.load(open(f"{OUT_DIR}/oracle_sql.json"))
 
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    df = df.sort_values(by=list(df.columns), ignore_index=True,
-                        key=lambda s: s.astype(str))
+# pandas reads NULL and NaN alike in a float column, so each float
+# column's null mask is taken from Arrow into a column of this prefix
+NULL_MASK = "\0null:"
+
+def frame(t: pa.Table, df: pd.DataFrame = None) -> pd.DataFrame:
+    df = t.to_pandas() if df is None else df
+    for c in list(df.columns):
+        if df[c].dtype.kind == 'f':
+            df[NULL_MASK + c] = t.column(c).is_null().to_numpy(zero_copy_only=False)
     return df
+
+def values(df: pd.DataFrame) -> list:
+    return [c for c in df.columns if not c.startswith(NULL_MASK)]
+
+def canon(df: pd.DataFrame) -> pd.DataFrame:
+    # rows sort by their values; the null masks only break ties, so a
+    # NULL/NaN difference shows in its own column, not as a row shift
+    cols = sorted(values(df))
+    cols += [NULL_MASK + c for c in cols if NULL_MASK + c in df.columns]
+    return df[cols].sort_values(by=cols, ignore_index=True, kind="stable",
+                                key=lambda s: s.astype(str))
+
+def shown(v: pd.Series, null, i: int) -> str:
+    return "NULL" if null is not None and null.iloc[i] else repr(v.iloc[i])
 
 results = {}
 for d in sorted(glob.glob(f"{OUT_DIR}/*/")):
@@ -52,7 +73,7 @@ for d in sorted(glob.glob(f"{OUT_DIR}/*/")):
     if ONLY and name not in ONLY:
         continue
     try:
-        got = pd.read_parquet(d)
+        got = frame(pq.read_table(d))
     except Exception as e:
         results[name] = f"READ-FAIL {e}"
         continue
@@ -61,33 +82,41 @@ for d in sorted(glob.glob(f"{OUT_DIR}/*/")):
         continue
     try:
         con = fresh_con(threads=1 if name in SINGLE_THREADED else None)
-        want = con.execute(oracles[name]).df()
+        # the values through DuckDB's own pandas conversion (DECIMAL
+        # becomes float64 there, an object column through Arrow's)
+        res = con.execute(oracles[name]).arrow()
+        want = frame(res, con.from_arrow(res).df())
         con.close()
     except Exception as e:
         results[name] = f"ORACLE-SQL-FAIL {e}"
         continue
     g, w = canon(got), canon(want)
-    if list(g.columns) != list(w.columns):
-        results[name] = f"SCHEMA-MISMATCH got={list(g.columns)} want={list(w.columns)}"
+    if values(g) != values(w):
+        results[name] = f"SCHEMA-MISMATCH got={values(g)} want={values(w)}"
         continue
     if len(g) != len(w):
         results[name] = f"ROWCOUNT got={len(g)} want={len(w)}"
         continue
-    dtype_diff = [(c, str(g[c].dtype), str(w[c].dtype)) for c in g.columns
+    dtype_diff = [(c, str(g[c].dtype), str(w[c].dtype)) for c in values(g)
                   if str(g[c].dtype) != str(w[c].dtype)]
     if dtype_diff:
         results[name] = f"DTYPE-DIFF {dtype_diff}"
         continue
     mismatch = None
-    for c in g.columns:
+    for c in values(g):
         gv, wv = g[c], w[c]
+        gn = wn = None
         try:
-            if gv.dtype.kind == 'f' or wv.dtype.kind == 'f':
-                # bit patterns, as the gate hashes them: -0.0 != 0.0,
-                # and every NaN equals every NaN
-                ga, wa = gv.to_numpy(dtype=float), wv.to_numpy(dtype=float)
-                neq = ~((ga.view(np.int64) == wa.view(np.int64)) |
-                        (np.isnan(ga) & np.isnan(wa)))
+            if NULL_MASK + c in g.columns:
+                # null masks first, then the bit patterns of the non-null
+                # values, as the gate hashes them: -0.0 != 0.0, and
+                # every NaN equals every NaN
+                gn, wn = g[NULL_MASK + c], w[NULL_MASK + c]
+                neq = gn != wn
+                if not neq.any():
+                    ga, wa = gv.to_numpy(dtype=float), wv.to_numpy(dtype=float)
+                    neq = pd.Series(~(gn.to_numpy() | (ga.view(np.int64) == wa.view(np.int64)) |
+                                      (np.isnan(ga) & np.isnan(wa))))
             else:
                 neq = ~((gv.astype(str) == wv.astype(str)) | (gv.isna() & wv.isna()))
         except Exception as e:
@@ -96,7 +125,7 @@ for d in sorted(glob.glob(f"{OUT_DIR}/*/")):
         if neq.any():
             i = int(neq.idxmax()) if hasattr(neq, 'idxmax') else int(neq.argmax())
             mismatch = (f"col {c}: {int(neq.sum())} diffs, first at row {i}: "
-                        f"got={gv.iloc[i]!r} want={wv.iloc[i]!r}")
+                        f"got={shown(gv, gn, i)} want={shown(wv, wn, i)}")
             break
     results[name] = "OK" if mismatch is None else f"VALUE-MISMATCH {mismatch}"
     print(f"progress: {name} {results[name][:40]}", file=sys.stderr, flush=True)

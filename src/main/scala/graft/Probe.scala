@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Probe {
   def main(args: Array[String]): Unit = {
+    val passes = passesFrom(sys.env.get("PROBE_PASSES"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder().master(s"local[$cpus]")
@@ -18,7 +19,6 @@ object Probe {
     // warmup like Bench
     SparkEntry.queries.get("q1_pricing_summary").foreach(q =>
       try q(spark, sfDir).write.format("noop").mode("overwrite").save() catch { case _: Throwable => () })
-    val passes = sys.env.getOrElse("PROBE_PASSES", "3").toInt
     names.foreach { n =>
       for (i <- 1 to passes) {
         val t0 = System.nanoTime()
@@ -27,5 +27,13 @@ object Probe {
       }
     }
     spark.stop()
+  }
+
+  /** `PROBE_PASSES`, the runs of each named query: 3 when unset. */
+  private[graft] def passesFrom(v: Option[String]): Int = v.fold(3) { s =>
+    val n = s.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+      s"PROBE_PASSES must be a whole number, got '$s'"))
+    if (n < 1) throw new IllegalArgumentException(s"PROBE_PASSES must be at least 1, got $n")
+    n
   }
 }

@@ -864,7 +864,7 @@ object HashFunctions {
     val sxx = fsum(e => e.getField("x") * e.getField("x"))
     // degenerate fits (< 2 points, or all-equal x) have a zero
     // denominator: NULL, like the regr_* pair, instead of an ANSI
-    // divide-by-zero — every call site filters such groups out
+    // divide-by-zero; the oracle replays divide by NULLIF(denom, 0)
     val denom = n * sxx - sx * sx
     val slope = when(denom =!= lit(0.0), (n * sxy - sx * sy) / denom)
     val intercept = when(denom =!= lit(0.0), (sy - slope * sx) / n)

@@ -56,6 +56,10 @@ object S3Config {
   * Delivery: checkpointed offsets + idempotent sinks give
   * at-least-once, upgraded to effectively-once for file/parquet sinks
   * (SURVEY §2.7 — strictly stronger than the reference's guarantee).
+  *
+  * Restarts (control-plane stop/start, supervisor recovery) reuse the
+  * code an earlier start compiled: queries start through
+  * [[StreamStarts.sharingCode]].
   */
 object Runner {
 
@@ -331,7 +335,7 @@ object Runner {
     val dlqSink = pipeline.dlq.map(d =>
       ConnectorConfig(s"${pipeline.id}-dlq", d.plugin, d.settings))
 
-    stream.writeStream
+    val writer = stream.writeStream
       .queryName(pipeline.id)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -369,7 +373,7 @@ object Runner {
             nacks, System.nanoTime() - t0)
         } finally batch.unpersist()
       }
-      .start()
+    StreamStarts.sharingCode(spark)(writer.start())
   }
 
   /** Run a bounded pipeline to completion (batch semantics): same

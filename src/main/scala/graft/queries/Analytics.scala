@@ -18,24 +18,6 @@ object Analytics {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** [[Temporal.withScopedShuffle]]'s twin for this object's streaming
-    * rows (r18): the MemoryStream harness twins pay per-micro-batch
-    * planning/shuffle/file-commit machinery proportional to
-    * `spark.sql.shuffle.partitions` — for a few-thousand-key harness
-    * feed, 4 is the honest state-partition sizing (a real deployment
-    * sizes to key cardinality). Scoped to the stream ONLY (the conf is
-    * captured when the streaming query STARTS, the session value is
-    * restored before the returned batch frame executes) and every sink
-    * here is a join/fold whose result is partition-count-invariant,
-    * so gate hashes are unchanged.
-    */
-  private def withScopedShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
   /** The constructed per-doc URL with deterministic case/port/utm/
     * param-order/fragment noise — shared by `dedup_url` and its
     * streaming twin; the oracle re-derives the canonical form from
@@ -112,7 +94,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val state = java.nio.file.Files
         .createTempDirectory("dedup_exact_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -156,7 +138,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("url_filter_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "url")
           .writeStream
@@ -195,7 +177,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val base = java.nio.file.Files
         .createTempDirectory("url_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "url")
           .writeStream
@@ -510,7 +492,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("gopher_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -546,7 +528,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("c4_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -581,7 +563,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("fineweb_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -608,7 +590,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("tokens_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -636,7 +618,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("quality_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -667,7 +649,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("langid_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -697,7 +679,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("normalize_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -726,7 +708,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("chunk_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -773,7 +755,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("pii_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -799,7 +781,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("fp_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -826,7 +808,7 @@ object Analytics {
       val (b1, b2) = ids.partition(_ % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("sample_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[Long]
         val q = in.toDF().toDF("doc_id")
           .writeStream
@@ -919,7 +901,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("striphtml_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -986,7 +968,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("nb_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -1027,7 +1009,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val state = java.nio.file.Files
         .createTempDirectory("divergence_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String, String)]
         val q = in.toDF().toDF("doc_id", "lang", "text")
           .writeStream
@@ -1077,7 +1059,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("sbo_stream").toString + "/scores"
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text").writeStream
           .foreachBatch {
@@ -1146,7 +1128,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("classifier_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -1240,7 +1222,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("epochs_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "lang")
           .writeStream
@@ -1314,7 +1296,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val state = java.nio.file.Files
         .createTempDirectory("unimax_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String, Long)]
         val q = in.toDF().toDF("doc_id", "lang", "n_toks")
           .writeStream
@@ -1355,7 +1337,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val state = java.nio.file.Files
         .createTempDirectory("doremi_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String, Double)]
         val q = in.toDF().toDF("doc_id", "lang", "loss")
           .withColumn("step", expr("cast(doc_id as bigint) div 100"))
@@ -1390,7 +1372,7 @@ object Analytics {
         .createTempDirectory("mixkl_stream").toString
       val targets = Seq(("en", 0.5), ("fr", 0.2), ("es", 0.15),
         ("zh", 0.1), ("de", 0.05))
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String, Long)]
         val q = in.toDF().toDF("doc_id", "lang", "n_tokens")
           .writeStream
@@ -1426,7 +1408,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val state = java.nio.file.Files
         .createTempDirectory("zipf_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -1463,7 +1445,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val state = java.nio.file.Files
         .createTempDirectory("heaps_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .withColumn("_hb", expr("cast(doc_id as bigint) div 64"))
@@ -1522,7 +1504,7 @@ object Analytics {
       val out = java.nio.file.Files
         .createTempDirectory("winnow_stream").toString
       val in = MemoryStream[(Long, String)]
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
           .foreachBatch(StreamingOps.winnowTriageSink(out, hist,
@@ -1602,7 +1584,7 @@ object Analytics {
           concat_ws(" ", slice(toks, lit(1), size(toks) - 1)).as("text"))
         .as[(Long, String)].collect()
       val (b1, b2) = streamDocs.partition(_._1 % 40 == 0)
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val out = StreamingOps.nearDupAgainstHistory(
           in.toDF().toDF("doc_id", "text"), base, "doc_id", "text",
@@ -1816,7 +1798,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("entropy_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -1843,7 +1825,7 @@ object Analytics {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("hashing_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -4127,7 +4109,7 @@ object Analytics {
                list(x * x ORDER BY x)), (a, v) -> a + v) AS sxx
            FROM pts),
          fit AS (SELECT n_types, n, sx, sy,
-             (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope_raw
+             (n * sxy - sx * sy) / NULLIF(n * sxx - sx * sx, 0) AS slope_raw
            FROM sums)
          SELECT n_types,
            CASE WHEN round(slope_raw, 6) = 0 THEN 0.0
@@ -4176,7 +4158,7 @@ object Analytics {
              list(x * x ORDER BY x)), (a, v) -> a + v) AS sxx
          FROM pts),
        fit AS (SELECT n_points, n_tokens, n_types, n, sx, sy,
-           (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope_raw
+           (n * sxy - sx * sy) / NULLIF(n * sxx - sx * sx, 0) AS slope_raw
          FROM sums)
        SELECT n_points, n_tokens, n_types,
          CASE WHEN round(slope_raw, 6) = 0 THEN 0.0

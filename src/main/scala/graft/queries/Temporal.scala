@@ -27,26 +27,6 @@ object Temporal {
       expr("ts div 1000000000")
     else unix_timestamp(col("ts"))
 
-  /** The streaming-twin gate rows drive REAL multi-batch streams via
-    * a MemoryStream harness; their cost is dominated not by data but
-    * by per-micro-batch state-store machinery proportional to
-    * `spark.sql.shuffle.partitions` (e.g. stream_join: 32 state
-    * partitions × 2 sides × 2 batches of store init/commit for 40k
-    * fed rows). A real deployment sizes state partitions to key
-    * cardinality; for a few-thousand-key harness feed, 4 is the
-    * honest setting. Scoped to the harness-driven query ONLY — the
-    * session value is restored before the returned (batch) frame is
-    * executed, and join/fold results are partition-count-invariant,
-    * so gate hashes are unchanged (measured: stream_join 13.4 → ~4 s,
-    * PERF round 9).
-    */
-  private def withScopedShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Purchase attribution: every click/view gets the same user's most
     // recent purchase at-or-before it (left-outer as-of). The purchase
@@ -113,7 +93,7 @@ object Temporal {
         .withColumn("p_ts_s", col("ts"))
         .write.mode("overwrite").parquet(dimDir)
       val (b1, b2) = rows.partition(_._2 % 2 == 0)
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, Long, Long)]
         val proc = graft.ops.Registry.create("enrich.asof", Map(
           "key" -> ".Payload.After.user_id",
@@ -337,7 +317,7 @@ object Temporal {
       val out = java.nio.file.Files
         .createTempDirectory("jw_stream").toString
       val in = MemoryStream[(Long, String, String)]
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val q = in.toDF().toDF("p_partkey", "p_name", "blk")
           .writeStream
           .foreachBatch(graft.streaming.StreamingOps.fuzzyLinkSink(
@@ -394,7 +374,7 @@ object Temporal {
       val (b1, b2) = rows.partition(_._1 % 2 == 0)
       val out = java.nio.file.Files
         .createTempDirectory("scripts_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "text")
           .writeStream
@@ -1249,7 +1229,7 @@ object Temporal {
         .as[(Long, String, Long)].collect()
       val split = 1705363200L // 2024-01-16T00:00:00Z
       val (b1, b2) = rows.partition(_._3 <= split)
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String, Long)]
         val out = graft.streaming.StreamingOps.funnelStepsStream(
           in.toDF().toDF("user_id", "event_type", "ts_s"),
@@ -1353,7 +1333,7 @@ object Temporal {
         .as[(Long, Long, Long)].collect()
       val split = 1705363200L // 2024-01-16T00:00:00Z
       val (b1, b2) = rows.partition(_._3 <= split)
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, Long, Long)]
         val out = graft.streaming.StreamingOps.sessionizeStream(
           in.toDF().toDF("event_id", "user_id", "ts_s"),
@@ -1386,7 +1366,7 @@ object Temporal {
       val (b1, b2) = rows.partition(_._3 <= split)
       val state = java.nio.file.Files
         .createTempDirectory("hll_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(String, Long, Long)]
         val q = in.toDF().toDF("event_type", "user_id", "ts_s")
           .writeStream
@@ -1419,7 +1399,7 @@ object Temporal {
       val state = java.nio.file.Files
         .createTempDirectory("kmv_stream").toString
       val in = MemoryStream[(String, Long, Long)]
-      val q = withScopedShuffle(s, 4) {
+      val q = Twins.scope(s) {
         val qq = in.toDF().toDF("event_type", "user_id", "ts_s")
           .writeStream
           .foreachBatch(graft.streaming.StreamingOps.kmvSink(
@@ -1452,7 +1432,7 @@ object Temporal {
       val state = java.nio.file.Files
         .createTempDirectory("kmv_setops_stream").toString
       val in = MemoryStream[(String, Long, Long)]
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val qq = in.toDF().toDF("event_type", "user_id", "ts_s")
           .writeStream
           .foreachBatch(graft.streaming.StreamingOps.kmvSink(
@@ -1485,7 +1465,7 @@ object Temporal {
       val state = java.nio.file.Files
         .createTempDirectory("kll_stream").toString
       val in = MemoryStream[(String, Double, Long, Long)]
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val qq = in.toDF().toDF("event_type", "value", "event_id", "ts_s")
           .writeStream
           .foreachBatch(graft.streaming.StreamingOps.kllSink(
@@ -1517,7 +1497,7 @@ object Temporal {
       val state = java.nio.file.Files
         .createTempDirectory("bloom_stream").toString
       val in = MemoryStream[(Long, Long)]
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val qq = in.toDF().toDF("user_id", "ts_s")
           .writeStream
           .foreachBatch(graft.streaming.StreamingOps.bloomSink(
@@ -1550,7 +1530,7 @@ object Temporal {
       val state = java.nio.file.Files
         .createTempDirectory("scd2_stream").toString
       val in = MemoryStream[(Long, Long, Long, String, Double)]
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val q = in.toDF().toDF("user_id", "event_id", "pos", "op", "value")
           .writeStream
           .foreachBatch(graft.streaming.StreamingOps.scd2Sink(
@@ -1688,7 +1668,7 @@ object Temporal {
       val (b1, b2) = rows.partition(_._1 < 250L)
       val state = java.nio.file.Files
         .createTempDirectory("cms_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(Long, String)]
         val q = in.toDF().toDF("doc_id", "token")
           .writeStream
@@ -1812,7 +1792,7 @@ object Temporal {
         custs.filter(_._1 % 3 == 0).map(rRow).toSeq
       val state = java.nio.file.Files
         .createTempDirectory("join_view").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(String, Long, Option[Long], Option[Double],
           Option[String], Option[String])]
         val q = in.toDF().toDF("_side", "cust", "o_orderkey", "o_total",
@@ -1845,7 +1825,7 @@ object Temporal {
         .as[(String, Long)].collect()
       val split = 1705363200L
       val (b1, b2) = rows.partition(_._2 <= split)
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(String, Long)]
         val agg = in.toDF().toDF("event_type", "ts_s")
           .withColumn("_ts", timestamp_seconds(col("ts_s")))
@@ -2025,7 +2005,7 @@ object Temporal {
       val (b1, b2) = rows.partition(_._2 % 2 == 0)
       val state = java.nio.file.Files
         .createTempDirectory("cp_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(String, Long, Long)]
         val q = in.toDF().toDF("event_type", "day", "cents")
           .writeStream
@@ -2059,7 +2039,7 @@ object Temporal {
       val (b1, b2) = rows.partition(_._2 % 2 == 0)
       val state = java.nio.file.Files
         .createTempDirectory("hurst_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(String, Long, Long)]
         val q = in.toDF().toDF("event_type", "day", "cents")
           .writeStream
@@ -2146,7 +2126,7 @@ object Temporal {
         .select(col("user_id"), col("event_id"), secs.as("ts_s"))
         .as[(Long, Long, Long)].collect()
       val split = 1705363200L
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val inC = MemoryStream[(Long, Long, Long)]
         val inP = MemoryStream[(Long, Long, Long)]
         val c = inC.toDF().toDF("c_uid", "c_id", "c_ts_s")
@@ -2257,7 +2237,7 @@ object Temporal {
       val (b1, b2) = rows.partition(_._2 <= split)
       val state = java.nio.file.Files
         .createTempDirectory("hist_stream").toString
-      withScopedShuffle(s, 4) {
+      Twins.scope(s) {
         val in = MemoryStream[(String, Long, Double)]
         val q = in.toDF().toDF("event_type", "ts_s", "value")
           .writeStream
@@ -2552,7 +2532,7 @@ object Temporal {
                list(x * x ORDER BY x)), (a, v) -> a + v) AS sxx
            FROM pts GROUP BY g),
          fit AS (SELECT g, n_scales, n_blocks, n, sx, sy,
-             (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope_raw
+             (n * sxy - sx * sy) / NULLIF(n * sxx - sx * sx, 0) AS slope_raw
            FROM sums),
          o AS (SELECT g AS event_type, n_scales, n_blocks,
              CASE WHEN round(slope_raw, 6) = 0 THEN 0.0

@@ -695,4 +695,15 @@ class AnalyticsSpec extends AnyFunSuite {
     val seedSims = rows.filter(_.getLong(0) < 8).map(_.getDouble(2))
     assert(seedSims.forall(s => s > 0.999999))
   }
+
+  test("a streaming twin compiles nothing when it runs again") {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    def run(): Long = {
+      val c0 = METRIC_COMPILATION_TIME.getCount
+      assert(SparkEntry.queries("text_heaps_stream")(spark, dir).count() == 1)
+      METRIC_COMPILATION_TIME.getCount - c0
+    }
+    run()
+    assert(run() == 0)
+  }
 }

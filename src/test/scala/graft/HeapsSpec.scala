@@ -81,4 +81,36 @@ class HeapsSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("batch-only"))
   }
+
+  test("a one-point fit is NULL on Spark and in the DuckDB oracle (text_heaps, text_zipf)") {
+    // one document "a a": one checkpoint (heaps) and one token type
+    // with freq >= 2 (zipf), so n = 1 and the OLS denominator is 0
+    val dir = java.nio.file.Files.createTempDirectory("onepoint").toString
+    Seq((0L, "a a")).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val fits = Seq("text_heaps" -> Seq("beta", "log10_k"),
+      "text_zipf" -> Seq("slope", "intercept"))
+    fits.foreach { case (q, cols) =>
+      val row = SparkEntry.queries(q)(spark, dir).head()
+      cols.foreach(c => assert(row.isNullAt(row.fieldIndex(c)), s"Spark $q.$c"))
+    }
+    // the oracle side, where python3 with duckdb is installed
+    val script =
+      """import sys, duckdb
+        |c = duckdb.connect()
+        |c.execute(f"CREATE VIEW documents AS SELECT * FROM '{sys.argv[1]}/documents.parquet/*.parquet'")
+        |r = c.execute(sys.stdin.read())
+        |names = [d[0] for d in r.description]
+        |for row in r.fetchall():
+        |    print(" ".join(f"{n}={v!r}" for n, v in zip(names, row)))
+        |""".stripMargin
+    val hasDuckDb = scala.util.Try(
+      scala.sys.process.Process(Seq("python3", "-c", "import duckdb")).! == 0).getOrElse(false)
+    assume(hasDuckDb, "python3 with duckdb is not installed")
+    fits.foreach { case (q, cols) =>
+      val sql = new java.io.ByteArrayInputStream(
+        SparkEntry.oracleSql(q).getBytes("UTF-8"))
+      val out = (scala.sys.process.Process(Seq("python3", "-c", script, dir)) #< sql).!!
+      cols.foreach(c => assert(out.contains(s"$c=None"), s"DuckDB $q: $out"))
+    }
+  }
 }

@@ -170,6 +170,32 @@ class PipelineSpec extends AnyFunSuite {
     assert(rec.get("payload").get("after").get("tagged").asText() == "yes")
   }
 
+  test("a restart reuses the code the first start compiled") {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    // a literal no other test compiles, so the first start must compile
+    val nonce = 1000000000000L + System.nanoTime() % 1000000000L
+    val p = Pipeline("p-reuse")
+      .source("gen", "builtin:generator",
+        "format.options.id" -> "int", "recordCount" -> "200")
+      .processorWhen("set", "field.set",
+        condition = s"cast(.Payload.After.id as long) < $nonce",
+        "field" -> ".Payload.After.tag", "value" -> "x")
+    def start(): Long = {
+      val before = spark.conf.getOption(isolation)
+      val c0 = METRIC_COMPILATION_TIME.getCount
+      val out = tmp("reuse-out")
+      Runner.start(spark, p.destination("out", "builtin:file", "path" -> out),
+        tmp("reuse-ckpt"), Trigger.AvailableNow()).awaitTermination(60000)
+      val compiles = METRIC_COMPILATION_TIME.getCount - c0
+      assert(spark.conf.getOption(isolation) == before)
+      assert(spark.read.text(out).count() == 200)
+      compiles
+    }
+    assert(start() > 0, "the first start compiles its generated code")
+    assert(start() == 0, "a restart compiles nothing again")
+  }
+
   test("DLQ circuit breaker trips the pipeline") {
     Runner.memorySinks.clear()
     val p = Pipeline("p7")
