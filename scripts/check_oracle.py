@@ -2,7 +2,9 @@
 """Local mirror of the driver's correctness gate: run Verify's parquet
 dumps against DuckDB executing oracle_sql.json on the same sf tables.
 Columns sorted by name, rows sorted, exact value compare (floats: null
-masks, then bit patterns)."""
+masks, then bit patterns). Exits 0 only when it checked at least one
+row and every checked row is OK or rows-only; a CHECK_ONLY name with no
+oracle is an error."""
 import json, sys, glob, os
 import duckdb
 import numpy as np
@@ -41,6 +43,11 @@ def fresh_con(threads=None):
 ONLY = set(x for x in os.environ.get("CHECK_ONLY", "").split(",") if x)
 
 oracles = json.load(open(f"{OUT_DIR}/oracle_sql.json"))
+# a typo in CHECK_ONLY must fail, not check nothing and pass
+unknown = sorted(ONLY - set(oracles))
+if unknown:
+    sys.exit(f"CHECK_ONLY names no oracle in {OUT_DIR}/oracle_sql.json: "
+             + ", ".join(unknown))
 
 # pandas reads NULL and NaN alike in a float column, so each float
 # column's null mask is taken from Arrow into a column of this prefix
@@ -138,3 +145,5 @@ for name in sorted(set(list(results) +
 
 n_ok = sum(1 for v in results.values() if v == "OK" or v.startswith("rows-only"))
 print(f"\n{n_ok}/{len(results)} pass")
+# exit 0 only when rows were checked and every one passed
+sys.exit(0 if results and n_ok == len(results) else 1)

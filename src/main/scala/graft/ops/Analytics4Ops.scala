@@ -390,7 +390,10 @@ case class TextBpeProc(idField: Ref, textField: Ref, mergesTable: String)
   * record binary-searches a per-key sorted version array — the record
   * stream is never shuffled or sorted, which is the right physical
   * shape for 100 TB streams × feature-store-sized dims, and the
-  * stream-static formulation Structured Streaming requires.
+  * stream-static formulation Structured Streaming requires. The
+  * dimension is a snapshot: it is read once, the first time a
+  * processor instance transforms a frame, and versions added to
+  * `table` later are not seen until the processor is re-created.
   */
 case class EnrichAsofProc(keyField: Ref, timeField: Ref, table: String,
                           tableKey: String, tableTime: String,
@@ -399,11 +402,13 @@ case class EnrichAsofProc(keyField: Ref, timeField: Ref, table: String,
   val plugin = "enrich.asof"
   // The dimension is STATIC for the processor's lifetime (snapshot
   // semantics — the enrichment contract), so the packed version-array
-  // table is materialized ONCE (localCheckpoint, the [[Fences]]
-  // contract: blocks free with the frame, nothing leaks into the
-  // CacheManager) and every micro-batch's stream-static join re-reads
-  // those blocks instead of re-scanning the parquet dim and re-running
-  // the dedup + pack aggregations (two shuffles) per batch.
+  // table is materialized ONCE (the [[Fences]] policy: a reliable
+  // checkpoint when the session has a checkpoint dir, so the blocks
+  // survive executor loss; localCheckpoint otherwise, whose blocks
+  // free with the frame and never enter the CacheManager) and every
+  // micro-batch's stream-static join re-reads those blocks instead of
+  // re-scanning the parquet dim and re-running the dedup + pack
+  // aggregations (two shuffles) per batch.
   @transient private var packedCache: DataFrame = null
   private def packedDim(spark: org.apache.spark.sql.SparkSession): DataFrame =
     synchronized {
@@ -412,9 +417,9 @@ case class EnrichAsofProc(keyField: Ref, timeField: Ref, table: String,
           .select(Seq(col(tableKey).cast("string").as("_rk"),
             col(tableTime).cast("long").as("_rt"), lit(1L).as("_asof_hit")) ++
             valueCols.map(col): _*)
-        packedCache = graft.analytics.Temporal.packAsOfRight(right,
-          "_rk", "_rt", valueCols :+ "_asof_hit", dedupRight = true)
-          .localCheckpoint(true)
+        packedCache = graft.analytics.Fences.fence(
+          graft.analytics.Temporal.packAsOfRight(right,
+            "_rk", "_rt", valueCols :+ "_asof_hit", dedupRight = true))
       }
       packedCache
     }

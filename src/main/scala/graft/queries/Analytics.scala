@@ -86,25 +86,10 @@ object Analytics {
     // laws are order-insensitive, so the final state must equal the
     // one-shot batch vote. Oracle = dedup_exact's verbatim.
     "dedup_exact_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val state = java.nio.file.Files
-        .createTempDirectory("dedup_exact_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.exactDedupSink(state, "doc_id", "text"))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val state = Twins.tempDir("dedup_exact_stream")
+      Twins.twoBatch(s, t(s, dir, "documents").select(col("doc_id"), col("text")),
+        col("doc_id") % 2 === 0)(Twins.sink(
+        StreamingOps.exactDedupSink(state, "doc_id", "text")))
       s.read.parquet(s"$state/batch=1")
         .select(col("keep_id"), col("dup_count"))
     }),
@@ -129,29 +114,11 @@ object Analytics {
     // the row's own URL — batch-decomposable by construction. Oracle
     // = url_filter's verbatim.
     "url_filter_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents")
+      val input = t(s, dir, "documents")
         .select(col("doc_id"), gateUrl(col("doc_id")).as("url"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("url_filter_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "url")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Urls.urlFilter(b, "doc_id", "url",
-              blockWords = Seq("casino", "poker"))))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Urls.urlFilter(b, "doc_id", "url",
+          blockWords = Seq("casino", "poker")))
     }),
 
     "dedup_url" -> ((s, dir) =>
@@ -168,27 +135,12 @@ object Analytics {
     // batch vote (canonicalization is row-local; min is
     // order-insensitive). Oracle = the dedup_url closed form.
     "dedup_url_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents")
+      val input = t(s, dir, "documents")
         .select(col("doc_id"), noisyUrl(col("doc_id")).as("url"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val base = java.nio.file.Files
-        .createTempDirectory("url_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "url")
-          .writeStream
-          .foreachBatch(StreamingOps.urlDedupSink(
-            s"$base/rows", s"$base/state", "doc_id", "url"))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val base = Twins.tempDir("url_stream")
+      Twins.twoBatch(s, input, col("doc_id") % 2 === 0)(Twins.sink(
+        StreamingOps.urlDedupSink(
+          s"$base/rows", s"$base/state", "doc_id", "url")))
       val state = s.read.parquet(s"$base/state/batch=1")
       s.read.parquet(s"$base/rows/b*")
         .join(state, "canonical_url")
@@ -484,27 +436,9 @@ object Analytics {
     // only the row's own tokens/lines — batch-decomposable by
     // construction. Oracle = text_gopher's verbatim.
     "text_gopher_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("gopher_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Text.gopherRules(b, "doc_id", "text")))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Text.gopherRules(b, "doc_id", "text"))
     }),
 
     // C4 cleanup rules (Raffel et al. 2020 §2.2 + released c4_utils
@@ -520,27 +454,9 @@ object Analytics {
     // row's own lines — batch-decomposable by construction. Oracle =
     // text_c4's verbatim.
     "text_c4_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("c4_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Text.c4Rules(b, "doc_id", "text")))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Text.c4Rules(b, "doc_id", "text"))
     }),
 
     // FineWeb line-shape heuristics (Penedo et al. 2024 §3.6): the
@@ -555,54 +471,18 @@ object Analytics {
     // the row's own lines — batch-decomposable by construction.
     // Oracle = text_fineweb's verbatim.
     "text_fineweb_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("fineweb_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Text.finewebRules(b, "doc_id", "text")))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Text.finewebRules(b, "doc_id", "text"))
     }),
 
     // Streaming token-count twin (rowLocalSink): whitespace + BPE-ish
     // regex counts read only the row — batch-decomposable by
     // construction. Oracle = text_tokens' verbatim.
     "text_tokens_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("tokens_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Text.tokenCounts(b, "doc_id", "text")))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Text.tokenCounts(b, "doc_id", "text"))
     }),
 
     // Streaming quality-scoring twin: row-local features are
@@ -610,27 +490,9 @@ object Analytics {
     // two-batch split must equal the one-shot batch run. Oracle = the
     // text_quality oracle verbatim.
     "text_quality_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("quality_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Text.qualityScore(b, "doc_id", "text")))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Text.qualityScore(b, "doc_id", "text"))
     }),
 
     "text_langid" -> ((s, dir) =>
@@ -641,27 +503,9 @@ object Analytics {
     // two-batch split equals the one-shot batch run. Oracle =
     // text_langid's replicated bigram-overlap SQL verbatim.
     "text_langid_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("langid_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Text.langId(b, "doc_id", "text")))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Text.langId(b, "doc_id", "text"))
     }),
 
     "text_fingerprint" -> ((s, dir) =>
@@ -671,27 +515,9 @@ object Analytics {
     // whitespace cleanup reads only the row. Oracle =
     // text_normalize's verbatim.
     "text_normalize_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("normalize_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Text.normalize(b, "doc_id", "text")))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Text.normalize(b, "doc_id", "text"))
     }),
 
     // Streaming chunking twin (rowLocalSink): the overlapping-window
@@ -700,28 +526,10 @@ object Analytics {
     // two-batch split equals the one-shot batch run. Oracle =
     // text_chunk's verbatim.
     "text_chunk_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("chunk_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Text.chunk(b, "doc_id", "text",
-              chunkTokens = 50, overlap = 10)))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Text.chunk(b, "doc_id", "text",
+          chunkTokens = 50, overlap = 10))
     }),
 
     "text_vocab" -> ((s, dir) =>
@@ -742,86 +550,32 @@ object Analytics {
     // tail as the batch row (the corpus carries no real PII); oracle =
     // text_pii's.
     "text_pii_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"),
+      val input = t(s, dir, "documents").select(col("doc_id"),
         concat(col("text"),
           lit(" contact user"), col("doc_id").cast("string"),
           lit("@example.com at 10."), (col("doc_id") % 256).cast("string"),
           lit(".0.1 or +1-555-"),
           (lit(1000) + col("doc_id") % 9000).cast("string")).as("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("pii_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Text.piiRedact(b, "doc_id", "text")))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Text.piiRedact(b, "doc_id", "text"))
     }),
 
     // Streaming fingerprint twin (rowLocalSink): the rolling hash is
     // row-local. Oracle = text_fingerprint's.
     "text_fingerprint_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("fp_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Text.fingerprint(b, "doc_id", "text")))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Text.fingerprint(b, "doc_id", "text"))
     }),
 
     // Streaming hash-gate twin: the splitmix bucket filter reads only
     // the row's id, so the appended kept-set over a two-batch split
     // must equal the one-shot sample. Oracle = the sample_hash replay.
     "sample_hash_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-        .as[Long].collect()
-      val (b1, b2) = ids.partition(_ % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("sample_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[Long]
-        val q = in.toDF().toDF("doc_id")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Sampling.hashSample(b, "doc_id", 0.25, seed = 7)
-              .select(col("doc_id"))))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Sampling.hashSample(b, "doc_id", 0.25, seed = 7)
+          .select(col("doc_id")))
     }),
 
     // Poisson bootstrap: 3 deterministic resampled estimates of the
@@ -893,30 +647,12 @@ object Analytics {
     // Streaming strip-html twin (rowLocalSink): the extraction reads
     // only the row. Oracle = text_strip_html's verbatim.
     "text_strip_html_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("striphtml_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Text.stripHtml(
-              b.select(col("doc_id"),
-                noisyHtml(col("doc_id"), col("text")).as("text")),
-              "doc_id", "text")))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Text.stripHtml(
+          b.select(col("doc_id"),
+            noisyHtml(col("doc_id"), col("text")).as("text")),
+          "doc_id", "text"))
     }),
 
     // model-based quality classification: hashed unigram+bigram linear
@@ -950,37 +686,18 @@ object Analytics {
     // equals the one-shot run. Train once (batch), persist the model
     // to parquet, score forever. Oracle = text_nb_score's verbatim.
     "text_nb_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val docs = t(s, dir, "documents")
         .withColumn("_lab", col("lang") === "en")
-      val modelDir = java.nio.file.Files
-        .createTempDirectory("nb_model").toString
+      val modelDir = Twins.tempDir("nb_model")
       Text.nbTrain(docs, "doc_id", "text", "_lab")
         .write.mode("overwrite").parquet(s"$modelDir/model")
       Text.nbPrior(docs, "_lab")
         .write.mode("overwrite").parquet(s"$modelDir/prior")
       val model = s.read.parquet(s"$modelDir/model")
       val prior = s.read.parquet(s"$modelDir/prior")
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("nb_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Text.nbScore(b, "doc_id", "text", model, prior)))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Text.nbScore(b, "doc_id", "text", model, prior))
     }),
 
     // pairwise Jensen–Shannon divergence between the language slices'
@@ -1000,26 +717,11 @@ object Analytics {
     // Sum-merge is order-insensitive, so the state equals the one-shot
     // aggregate and the batch oracle applies verbatim.
     "text_divergence_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents")
+      val input = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"))
-        .as[(Long, String, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val state = java.nio.file.Files
-        .createTempDirectory("divergence_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String, String)]
-        val q = in.toDF().toDF("doc_id", "lang", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.stratumCountSink(state, "lang", "text"))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val state = Twins.tempDir("divergence_stream")
+      Twins.twoBatch(s, input, col("doc_id") % 2 === 0)(Twins.sink(
+        StreamingOps.stratumCountSink(state, "lang", "text")))
       Text.jsDivergenceFromCounts(s.read.parquet(s"$state/batch=1"))
         .select(col("stratum_a"), col("stratum_b"), col("n_common"),
           round(col("jsd"), 9).as("jsd"))
@@ -1048,33 +750,18 @@ object Analytics {
     // only the batch's own rows. Two batches through foreachBatch
     // must equal the one-shot score — oracle = text_sbo_score's.
     "text_sbo_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val docs = t(s, dir, "documents")
       val model = Text.sboTrain(docs.filter(col("lang") === "en"),
         "doc_id", "text")
-      val rows = docs.select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("sbo_stream").toString + "/scores"
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text").writeStream
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             _: Long) =>
-              Text.sboScore(batch.toDF(), model, "doc_id", "text")
-                .write.mode("append").parquet(out)
-              ()
-          }
-          .outputMode("append").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val out = Twins.tempDir("sbo_stream") + "/scores"
+      Twins.twoBatch(s, docs.select(col("doc_id"), col("text")),
+        col("doc_id") % 2 === 0)(_.writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          Text.sboScore(batch, model, "doc_id", "text")
+            .write.mode("append").parquet(out)
+          ()
+        }
+        .outputMode("append"))
       s.read.parquet(out)
     }),
 
@@ -1120,27 +807,9 @@ object Analytics {
     // and the seed-derived weights read only the row. Oracle =
     // text_classifier's verbatim.
     "text_classifier_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("classifier_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Text.classifierScore(b, "doc_id", "text", seed = 42L)))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Text.classifierScore(b, "doc_id", "text", seed = 42L))
     }),
 
     // the corpus carries no PII, so the gate query injects a
@@ -1214,29 +883,11 @@ object Analytics {
     // union over a two-batch split equals the one-shot run. Oracle =
     // sample_epochs' verbatim.
     "sample_epochs_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("lang"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("epochs_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "lang")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Sampling.epochsUpsample(b, "doc_id", "lang",
-              Seq(("en", 1.0), ("de", 2.3), ("fr", 0.5), ("zh", 0.0)),
-              seed = 7)))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("lang"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Sampling.epochsUpsample(b, "doc_id", "lang",
+          Seq(("en", 1.0), ("de", 2.3), ("fr", 0.5), ("zh", 0.0)),
+          seed = 7))
     }),
 
     // TOKEN-budget mixture: the same target shares measured in tokens
@@ -1286,27 +937,12 @@ object Analytics {
     // sum-merge into (stratum, n_tokens) state; the plan over the
     // final state must equal the batch plan — oracle verbatim.
     "sample_unimax_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("lang"),
-          size(filter(split(trim(lower(col("text"))), "\\s+"),
-            x => x =!= "")).cast("long").as("n_toks"))
-        .as[(Long, String, Long)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val state = java.nio.file.Files
-        .createTempDirectory("unimax_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String, Long)]
-        val q = in.toDF().toDF("doc_id", "lang", "n_toks")
-          .writeStream
-          .foreachBatch(StreamingOps.stratumSumSink(state, "lang", "n_toks"))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val input = t(s, dir, "documents").select(col("doc_id"), col("lang"),
+        size(filter(split(trim(lower(col("text"))), "\\s+"),
+          x => x =!= "")).cast("long").as("n_toks"))
+      val state = Twins.tempDir("unimax_stream")
+      Twins.twoBatch(s, input, col("doc_id") % 2 === 0)(Twins.sink(
+        StreamingOps.stratumSumSink(state, "lang", "n_toks")))
       Sampling.unimaxFromCounts(s.read.parquet(s"$state/batch=1"),
         budget = 200000L, maxEpochs = 4.0)
     }),
@@ -1327,29 +963,14 @@ object Analytics {
     // sum-merge into state; means at read time feed the same tail —
     // oracle verbatim.
     "sample_doremi_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("lang"),
-          (size(filter(split(trim(lower(col("text"))), "\\s+"),
-            x => x =!= "")).cast("double") / lit(100.0)).as("loss"))
-        .as[(Long, String, Double)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val state = java.nio.file.Files
-        .createTempDirectory("doremi_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String, Double)]
-        val q = in.toDF().toDF("doc_id", "lang", "loss")
-          .withColumn("step", expr("cast(doc_id as bigint) div 100"))
-          .writeStream
-          .foreachBatch(StreamingOps.keyedMeanSink(state, "lang", "step",
-            "loss"))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val input = t(s, dir, "documents").select(col("doc_id"), col("lang"),
+        (size(filter(split(trim(lower(col("text"))), "\\s+"),
+          x => x =!= "")).cast("double") / lit(100.0)).as("loss"))
+      val state = Twins.tempDir("doremi_stream")
+      val sink = Twins.sink(
+        StreamingOps.keyedMeanSink(state, "lang", "step", "loss"))
+      Twins.twoBatch(s, input, col("doc_id") % 2 === 0)(in =>
+        sink(in.withColumn("step", expr("cast(doc_id as bigint) div 100"))))
       val st = s.read.parquet(s"$state/batch=1")
       Sampling.doremiFromLosses(
         st.select(col("domain"), col("step"),
@@ -1361,29 +982,13 @@ object Analytics {
     // (stratum, target, tokens) state; the KL verdict over the final
     // state must equal the batch verdict — oracle = sample_mixture_kl's
     "sample_mixture_kl_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("lang"),
-          size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
-        .as[(Long, String, Long)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val state = java.nio.file.Files
-        .createTempDirectory("mixkl_stream").toString
+      val input = t(s, dir, "documents").select(col("doc_id"), col("lang"),
+        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
+      val state = Twins.tempDir("mixkl_stream")
       val targets = Seq(("en", 0.5), ("fr", 0.2), ("es", 0.15),
         ("zh", 0.1), ("de", 0.05))
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String, Long)]
-        val q = in.toDF().toDF("doc_id", "lang", "n_tokens")
-          .writeStream
-          .foreachBatch(StreamingOps.mixtureKlSink(
-            state, "lang", "n_tokens", targets))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      Twins.twoBatch(s, input, col("doc_id") % 2 === 0)(Twins.sink(
+        StreamingOps.mixtureKlSink(state, "lang", "n_tokens", targets)))
       Sampling.mixtureKlFromCounts(
         s.read.parquet(s"$state/batch=1"), "lang")
     }),
@@ -1400,25 +1005,10 @@ object Analytics {
     // per-batch threshold would drop tokens whose total crosses it
     // across batches); fit over the final state = the batch fit
     "text_zipf_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val state = java.nio.file.Files
-        .createTempDirectory("zipf_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.vocabCountSink(state, "text"))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val state = Twins.tempDir("zipf_stream")
+      Twins.twoBatch(s, t(s, dir, "documents").select(col("doc_id"), col("text")),
+        col("doc_id") % 2 === 0)(Twins.sink(
+        StreamingOps.vocabCountSink(state, "text")))
       Text.zipfFitFromCounts(
         s.read.parquet(s"$state/batch=1").filter(col("freq") >= 2),
         topN = 4096)
@@ -1437,26 +1027,12 @@ object Analytics {
     // bucket); first buckets are MINs over the merged state, so the
     // fit over the final state = the batch fit — oracle verbatim.
     "text_heaps_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val state = java.nio.file.Files
-        .createTempDirectory("heaps_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .withColumn("_hb", expr("cast(doc_id as bigint) div 64"))
-          .writeStream
-          .foreachBatch(StreamingOps.stratumCountSink(state, "_hb", "text"))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val state = Twins.tempDir("heaps_stream")
+      val sink = Twins.sink(
+        StreamingOps.stratumCountSink(state, "_hb", "text"))
+      Twins.twoBatch(s, t(s, dir, "documents").select(col("doc_id"), col("text")),
+        col("doc_id") % 2 === 0)(in =>
+        sink(in.withColumn("_hb", expr("cast(doc_id as bigint) div 64"))))
       Text.heapsFitFromCounts(s.read.parquet(s"$state/batch=1"))
     }),
 
@@ -1488,35 +1064,18 @@ object Analytics {
     // one-shot crossWinnowPairs run the oracle replays. The driver
     // .collect() is harness glue feeding MemoryStream.
     "dedup_winnow_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val base = t(s, dir, "documents")
       val toks = split(trim(col("text")), "\\s+")
       val streamDocs = base
         .filter(col("doc_id") % 20 === 0 && size(toks) >= 5)
         .select((col("doc_id") + 1000000).as("doc_id"),
           concat_ws(" ", slice(toks, lit(1), size(toks) - 1)).as("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = streamDocs.partition(_._1 % 40 == 0)
       val hist = Dedup.winnowHistoryPostings(base, "doc_id", "text")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val out = java.nio.file.Files
-        .createTempDirectory("winnow_stream").toString
-      val in = MemoryStream[(Long, String)]
-      Twins.scope(s) {
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.winnowTriageSink(out, hist,
-            "doc_id", "text"))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally {
-          q.stop(); hist.unpersist()
-        }
-      }
+      val out = Twins.tempDir("winnow_stream")
+      try Twins.twoBatch(s, streamDocs, col("doc_id") % 40 === 0)(Twins.sink(
+        StreamingOps.winnowTriageSink(out, hist, "doc_id", "text")))
+      finally hist.unpersist()
       s.read.parquet(s"$out/b*")
     }),
 
@@ -1573,29 +1132,17 @@ object Analytics {
     // dedup_minhash_incr, documented there). The driver .collect() is
     // harness glue feeding MemoryStream — |docs|/20 short strings.
     "dedup_stream_triage" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val base = t(s, dir, "documents")
       val toks = split(trim(col("text")), "\\s+")
       val streamDocs = base
         .filter(col("doc_id") % 20 === 0 && size(toks) >= 5)
         .select((col("doc_id") + 1000000).as("doc_id"),
           concat_ws(" ", slice(toks, lit(1), size(toks) - 1)).as("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = streamDocs.partition(_._1 % 40 == 0)
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val out = StreamingOps.nearDupAgainstHistory(
-          in.toDF().toDF("doc_id", "text"), base, "doc_id", "text",
-          threshold = 0.5)
-        val q = out.writeStream.format("memory")
-          .queryName("dedup_stream_triage_out").outputMode("append").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      Twins.twoBatch(s, streamDocs, col("doc_id") % 40 === 0)(in =>
+        StreamingOps.nearDupAgainstHistory(in, base, "doc_id", "text",
+            threshold = 0.5)
+          .writeStream.format("memory")
+          .queryName("dedup_stream_triage_out").outputMode("append"))
       s.table("dedup_stream_triage_out")
     }),
 
@@ -1790,54 +1337,18 @@ object Analytics {
     // Streaming entropy twin (rowLocalSink): the per-doc token
     // distribution reads only the row. Oracle = text_entropy's.
     "text_entropy_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("entropy_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Text.tokenEntropy(b, "doc_id", "text")))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Text.tokenEntropy(b, "doc_id", "text"))
     }),
 
     // Streaming hashing-trick twin (rowLocalSink): fnv1a buckets and
     // splitmix sign bits read only the row; the exploded feature rows
     // of one doc never depend on another. Oracle = text_hashing's.
     "text_hashing_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("hashing_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(StreamingOps.rowLocalSink(out)(
-            b => Text.hashingTrick(b, "doc_id", "text", dim = 256)))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => Text.hashingTrick(b, "doc_id", "text", dim = 256))
     }),
 
     // CCNet-style unigram LM quality proxy: mean -ln p(token) under

@@ -74,16 +74,11 @@ object Temporal {
     // join_asof_broadcast — the enrichment operator is oracle-checked
     // in both modes.
     "enrich_asof_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = t(s, dir, "events")
       val secs = tsEpochSeconds(ev)
-      val rows = ev.filter(col("event_type").isin("click", "view"))
+      val input = ev.filter(col("event_type").isin("click", "view"))
         .select(col("user_id"), col("event_id"), secs.as("ts_s"))
-        .as[(Long, Long, Long)].collect()
-      val dimDir = java.nio.file.Files
-        .createTempDirectory("asof_dim").toString
+      val dimDir = Twins.tempDir("asof_dim")
       ev.filter(col("event_type") === "purchase")
         .select(col("user_id").as("key"), secs.as("ts"),
           col("event_id"), col("value"))
@@ -92,9 +87,7 @@ object Temporal {
           max_by(col("value"), col("event_id")).as("p_value"))
         .withColumn("p_ts_s", col("ts"))
         .write.mode("overwrite").parquet(dimDir)
-      val (b1, b2) = rows.partition(_._2 % 2 == 0)
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, Long, Long)]
+      Twins.twoBatch(s, input, col("event_id") % 2 === 0) { in =>
         val proc = graft.ops.Registry.create("enrich.asof", Map(
           "key" -> ".Payload.After.user_id",
           "time" -> ".Payload.After.ts_s",
@@ -103,15 +96,9 @@ object Temporal {
         // a harness artifact (a real source is partitioned) that
         // serializes the per-record JSON wrap/parse work; repartition
         // restores source parallelism, results are row-identical
-        val out = proc(graft.model.Cdc.wrap(
-          in.toDF().toDF("user_id", "event_id", "ts_s").repartition(4),
-          "event_id", "events"))
-        val q = out.writeStream.format("memory")
-          .queryName("enrich_asof_stream_out").outputMode("append").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
+        proc(graft.model.Cdc.wrap(in.repartition(4), "event_id", "events"))
+          .writeStream.format("memory")
+          .queryName("enrich_asof_stream_out").outputMode("append")
       }
       val m = col(graft.model.Cdc.Metadata)
       val pa = col(graft.model.Cdc.PayloadAfter)
@@ -303,31 +290,16 @@ object Temporal {
     // matching is batch-decomposable). Oracle = the link_jw_incr
     // replay.
     "link_jw_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val p = t(s, dir, "part").withColumn("blk",
         concat_ws("|", col("p_brand"), col("p_size")))
       val noisy = p.select(
         (col("p_partkey") + 5000000L).as("p_partkey"),
         expr("substring(p_name, 1, length(p_name) - 1)").as("p_name"),
         col("blk"))
-        .as[(Long, String, String)].collect()
-      val (b1, b2) = noisy.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("jw_stream").toString
-      val in = MemoryStream[(Long, String, String)]
-      Twins.scope(s) {
-        val q = in.toDF().toDF("p_partkey", "p_name", "blk")
-          .writeStream
-          .foreachBatch(graft.streaming.StreamingOps.fuzzyLinkSink(
-            p, "p_partkey", "blk", "p_name", minSim = 0.95, outDir = out))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val out = Twins.tempDir("jw_stream")
+      Twins.twoBatch(s, noisy, col("p_partkey") % 2 === 0)(Twins.sink(
+        graft.streaming.StreamingOps.fuzzyLinkSink(
+          p, "p_partkey", "blk", "p_name", minSim = 0.95, outDir = out)))
       s.read.parquet(s"$out/b*")
     }),
 
@@ -366,27 +338,9 @@ object Temporal {
     // Streaming script-profile twin (rowLocalSink): the regexp counts
     // read only the row. Oracle = text_scripts' verbatim.
     "text_scripts_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 % 2 == 0)
-      val out = java.nio.file.Files
-        .createTempDirectory("scripts_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "text")
-          .writeStream
-          .foreachBatch(graft.streaming.StreamingOps.rowLocalSink(out)(
-            b => graft.analytics.Text.scriptProfile(b, "doc_id", "text")))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$out/b*")
+      val input = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      Twins.rowLocal(s, input, col("doc_id") % 2 === 0)(
+        b => graft.analytics.Text.scriptProfile(b, "doc_id", "text"))
     }),
 
     // Benjamini-Hochberg FDR over a wide screen: deterministic
@@ -1218,29 +1172,17 @@ object Temporal {
     // reached-step times never change), which the batch min-cascade
     // join-chain oracle checks exactly.
     "funnel_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = t(s, dir, "events")
-      val rows = ev
+      val input = ev
         .filter(col("event_type").isin("view", "click", "purchase"))
         .select(col("user_id"), col("event_type"),
           tsEpochSeconds(ev).as("ts_s"))
-        .as[(Long, String, Long)].collect()
       val split = 1705363200L // 2024-01-16T00:00:00Z
-      val (b1, b2) = rows.partition(_._3 <= split)
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String, Long)]
-        val out = graft.streaming.StreamingOps.funnelStepsStream(
-          in.toDF().toDF("user_id", "event_type", "ts_s"),
-          "user_id", "event_type", "ts_s", Seq("view", "click", "purchase"))
-        val q = out.writeStream.format("memory")
-          .queryName("funnel_stream_out").outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      Twins.twoBatch(s, input, col("ts_s") <= split)(in =>
+        graft.streaming.StreamingOps.funnelStepsStream(in,
+            "user_id", "event_type", "ts_s", Seq("view", "click", "purchase"))
+          .writeStream.format("memory")
+          .queryName("funnel_stream_out").outputMode("update"))
       s.table("funnel_stream_out")
         .select(col("user_id"),
           struct(col("steps_reached"),
@@ -1324,27 +1266,15 @@ object Temporal {
     // exact oracle. The driver .collect() is harness glue feeding
     // MemoryStream, same as dedup_stream_triage.
     "session_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = t(s, dir, "events")
-      val rows = ev.select(col("event_id"), col("user_id"),
-          tsEpochSeconds(ev).as("ts_s"))
-        .as[(Long, Long, Long)].collect()
+      val input = ev.select(col("event_id"), col("user_id"),
+        tsEpochSeconds(ev).as("ts_s"))
       val split = 1705363200L // 2024-01-16T00:00:00Z
-      val (b1, b2) = rows.partition(_._3 <= split)
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, Long, Long)]
-        val out = graft.streaming.StreamingOps.sessionizeStream(
-          in.toDF().toDF("event_id", "user_id", "ts_s"),
-          "user_id", "ts_s", "event_id", gapSeconds = 1800L)
-        val q = out.writeStream.format("memory")
-          .queryName("session_stream_out").outputMode("append").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      Twins.twoBatch(s, input, col("ts_s") <= split)(in =>
+        graft.streaming.StreamingOps.sessionizeStream(in,
+            "user_id", "ts_s", "event_id", gapSeconds = 1800L)
+          .writeStream.format("memory")
+          .queryName("session_stream_out").outputMode("append"))
       s.table("session_stream_out")
         .select(col("event_id"), col("user_id"), col("ts_s"),
           col("session_seq"))
@@ -1355,29 +1285,14 @@ object Temporal {
     // the merge law under micro-batch delivery. Oracle = the direct
     // batch HLL replication.
     "sketch_hll_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = t(s, dir, "events")
-      val rows = ev.select(col("event_type"), col("user_id"),
-          tsEpochSeconds(ev).as("ts_s"))
-        .as[(String, Long, Long)].collect()
+      val input = ev.select(col("event_type"), col("user_id"),
+        tsEpochSeconds(ev).as("ts_s"))
       val split = 1705363200L // 2024-01-16T00:00:00Z
-      val (b1, b2) = rows.partition(_._3 <= split)
-      val state = java.nio.file.Files
-        .createTempDirectory("hll_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(String, Long, Long)]
-        val q = in.toDF().toDF("event_type", "user_id", "ts_s")
-          .writeStream
-          .foreachBatch(graft.streaming.StreamingOps.hllRegisterSink(
-            state, Seq("event_type"), "user_id"))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val state = Twins.tempDir("hll_stream")
+      Twins.twoBatch(s, input, col("ts_s") <= split)(Twins.sink(
+        graft.streaming.StreamingOps.hllRegisterSink(
+          state, Seq("event_type"), "user_id")))
       Sketch.hllEstimate(s.read.parquet(s"$state/batch=1"),
         Seq("event_type"))
     }),
@@ -1387,30 +1302,14 @@ object Temporal {
     // (k-smallest-of-a-union law) — oracle = the batch sketch_kmv
     // formulation.
     "sketch_kmv_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = t(s, dir, "events")
-      val rows = ev.select(col("event_type"), col("user_id"),
-          tsEpochSeconds(ev).as("ts_s"))
-        .as[(String, Long, Long)].collect()
+      val input = ev.select(col("event_type"), col("user_id"),
+        tsEpochSeconds(ev).as("ts_s"))
       val split = 1705363200L
-      val (b1, b2) = rows.partition(_._3 <= split)
-      val state = java.nio.file.Files
-        .createTempDirectory("kmv_stream").toString
-      val in = MemoryStream[(String, Long, Long)]
-      val q = Twins.scope(s) {
-        val qq = in.toDF().toDF("event_type", "user_id", "ts_s")
-          .writeStream
-          .foreachBatch(graft.streaming.StreamingOps.kmvSink(
-            state, Seq("event_type"), "user_id", k = 64))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); qq.processAllAvailable()
-          in.addData(b2.toSeq); qq.processAllAvailable()
-        } finally qq.stop()
-        qq
-      }
+      val state = Twins.tempDir("kmv_stream")
+      Twins.twoBatch(s, input, col("ts_s") <= split)(Twins.sink(
+        graft.streaming.StreamingOps.kmvSink(
+          state, Seq("event_type"), "user_id", k = 64)))
       Sketch.kmvEstimate(s.read.parquet(s"$state/batch=1"),
         Seq("event_type"), k = 64)
     }),
@@ -1420,29 +1319,14 @@ object Temporal {
     // a-union merge law the streamed state equals the batch state, so
     // the pairwise estimates match the batch oracle bit-for-bit.
     "sketch_kmv_setops_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = t(s, dir, "events")
-      val rows = ev.select(col("event_type"), col("user_id"),
-          tsEpochSeconds(ev).as("ts_s"))
-        .as[(String, Long, Long)].collect()
+      val input = ev.select(col("event_type"), col("user_id"),
+        tsEpochSeconds(ev).as("ts_s"))
       val split = 1705363200L
-      val (b1, b2) = rows.partition(_._3 <= split)
-      val state = java.nio.file.Files
-        .createTempDirectory("kmv_setops_stream").toString
-      val in = MemoryStream[(String, Long, Long)]
-      Twins.scope(s) {
-        val qq = in.toDF().toDF("event_type", "user_id", "ts_s")
-          .writeStream
-          .foreachBatch(graft.streaming.StreamingOps.kmvSink(
-            state, Seq("event_type"), "user_id", k = 64))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); qq.processAllAvailable()
-          in.addData(b2.toSeq); qq.processAllAvailable()
-        } finally qq.stop()
-      }
+      val state = Twins.tempDir("kmv_setops_stream")
+      Twins.twoBatch(s, input, col("ts_s") <= split)(Twins.sink(
+        graft.streaming.StreamingOps.kmvSink(
+          state, Seq("event_type"), "user_id", k = 64)))
       Sketch.kmvSetOps(s.read.parquet(s"$state/batch=1"),
         "event_type", k = 64)
     }),
@@ -1452,30 +1336,15 @@ object Temporal {
     // (per-item hash levels make the merge exact) — oracle = the
     // batch sketch_kll replay.
     "sketch_kll_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = t(s, dir, "events")
-      val rows = ev.filter(col("value").isNotNull)
+      val input = ev.filter(col("value").isNotNull)
         .select(col("event_type"), col("value"), col("event_id"),
           tsEpochSeconds(ev).as("ts_s"))
-        .as[(String, Double, Long, Long)].collect()
       val split = 1705363200L
-      val (b1, b2) = rows.partition(_._4 <= split)
-      val state = java.nio.file.Files
-        .createTempDirectory("kll_stream").toString
-      val in = MemoryStream[(String, Double, Long, Long)]
-      Twins.scope(s) {
-        val qq = in.toDF().toDF("event_type", "value", "event_id", "ts_s")
-          .writeStream
-          .foreachBatch(graft.streaming.StreamingOps.kllSink(
-            state, Seq("event_type"), "value", "event_id", k = 64))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); qq.processAllAvailable()
-          in.addData(b2.toSeq); qq.processAllAvailable()
-        } finally qq.stop()
-      }
+      val state = Twins.tempDir("kll_stream")
+      Twins.twoBatch(s, input, col("ts_s") <= split)(Twins.sink(
+        graft.streaming.StreamingOps.kllSink(
+          state, Seq("event_type"), "value", "event_id", k = 64)))
       Sketch.kllQuantiles(s.read.parquet(s"$state/batch=1"),
         Seq("event_type"))
     }),
@@ -1485,29 +1354,14 @@ object Temporal {
     // the whole set (OR idempotence/associativity) — oracle = the
     // direct position-set replay.
     "sketch_bloom_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = t(s, dir, "events")
-      val rows = ev.filter(col("event_type") === "purchase")
+      val input = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), tsEpochSeconds(ev).as("ts_s"))
-        .as[(Long, Long)].collect()
       val split = 1705363200L
-      val (b1, b2) = rows.partition(_._2 <= split)
-      val state = java.nio.file.Files
-        .createTempDirectory("bloom_stream").toString
-      val in = MemoryStream[(Long, Long)]
-      Twins.scope(s) {
-        val qq = in.toDF().toDF("user_id", "ts_s")
-          .writeStream
-          .foreachBatch(graft.streaming.StreamingOps.bloomSink(
-            state, "user_id", mBits = 1 << 16, kHashes = 4))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); qq.processAllAvailable()
-          in.addData(b2.toSeq); qq.processAllAvailable()
-        } finally qq.stop()
-      }
+      val state = Twins.tempDir("bloom_stream")
+      Twins.twoBatch(s, input, col("ts_s") <= split)(Twins.sink(
+        graft.streaming.StreamingOps.bloomSink(
+          state, "user_id", mBits = 1 << 16, kHashes = 4)))
       s.read.parquet(s"$state/batch=1")
     }),
 
@@ -1516,31 +1370,16 @@ object Temporal {
     // batch 2's first change per key. Oracle = the batch cdc_scd2
     // formulation over the whole log.
     "scd2_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = t(s, dir, "events")
-      val rows = ev.select(col("user_id"), col("event_id"),
-          tsEpochSeconds(ev).as("pos"),
-          when(col("event_type") === "error", lit("delete"))
-            .otherwise(lit("update")).as("op"), col("value"))
-        .as[(Long, Long, Long, String, Double)].collect()
+      val input = ev.select(col("user_id"), col("event_id"),
+        tsEpochSeconds(ev).as("pos"),
+        when(col("event_type") === "error", lit("delete"))
+          .otherwise(lit("update")).as("op"), col("value"))
       val split = 1705363200L
-      val (b1, b2) = rows.partition(_._3 <= split)
-      val state = java.nio.file.Files
-        .createTempDirectory("scd2_stream").toString
-      val in = MemoryStream[(Long, Long, Long, String, Double)]
-      Twins.scope(s) {
-        val q = in.toDF().toDF("user_id", "event_id", "pos", "op", "value")
-          .writeStream
-          .foreachBatch(graft.streaming.StreamingOps.scd2Sink(
-            state, Seq("user_id"), Seq("pos", "event_id"), "pos", "op"))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val state = Twins.tempDir("scd2_stream")
+      Twins.twoBatch(s, input, col("pos") <= split)(Twins.sink(
+        graft.streaming.StreamingOps.scd2Sink(
+          state, Seq("user_id"), Seq("pos", "event_id"), "pos", "op")))
       s.read.parquet(s"$state/batch=1")
         .select(col("user_id"), col("event_id"), col("valid_from"),
           col("valid_to"), col("value"), col("is_current"))
@@ -1657,29 +1496,13 @@ object Temporal {
     // not idempotent the way HLL's min-merge is). Oracle = the direct
     // batch counter replication (same splitmix chain as sketch_cms).
     "sketch_cm_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val docs = t(s, dir, "documents")
-      val rows = docs.select(col("doc_id"),
+      val input = t(s, dir, "documents").select(col("doc_id"),
           explode(split(trim(lower(col("text"))), "\\s+")).as("token"))
         .filter(col("token") =!= "")
-        .as[(Long, String)].collect()
-      val (b1, b2) = rows.partition(_._1 < 250L)
-      val state = java.nio.file.Files
-        .createTempDirectory("cms_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(Long, String)]
-        val q = in.toDF().toDF("doc_id", "token")
-          .writeStream
-          .foreachBatch(graft.streaming.StreamingOps.cmsCounterSink(
-            state, "token", depth = 4, width = 16))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val state = Twins.tempDir("cms_stream")
+      Twins.twoBatch(s, input, col("doc_id") < 250L)(Twins.sink(
+        graft.streaming.StreamingOps.cmsCounterSink(
+          state, "token", depth = 4, width = 16)))
       s.read.parquet(s"$state/batch=1")
         .select(col("_row").as("cms_row"), col("_idx").as("cms_idx"),
           col("_c").cast("long").as("cnt"))
@@ -1771,42 +1594,23 @@ object Temporal {
     // stream: delta-join rule (dL⋈R ∪ L⋈dR ∪ dL⋈dR); the final view
     // must equal the batch join of both full tables.
     "cdc_incr_join" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val ords = t(s, dir, "orders").select(col("o_custkey"),
-        col("o_orderkey"), col("o_totalprice"))
-        .as[(Long, Long, Double)].collect()
-      val custs = t(s, dir, "customer").select(col("c_custkey"),
-        col("c_name"), col("c_mktsegment")).as[(Long, String, String)]
-        .collect()
-      type R = (String, Long, Option[Long], Option[Double],
-        Option[String], Option[String])
-      def lRow(o: (Long, Long, Double)): R =
-        ("l", o._1, Some(o._2), Some(o._3), None, None)
-      def rRow(c: (Long, String, String)): R =
-        ("r", c._1, None, None, Some(c._2), Some(c._3))
-      val b1: Seq[R] = ords.filter(_._2 % 2 == 0).map(lRow).toSeq ++
-        custs.filter(_._1 % 3 != 0).map(rRow).toSeq
-      val b2: Seq[R] = ords.filter(_._2 % 2 != 0).map(lRow).toSeq ++
-        custs.filter(_._1 % 3 == 0).map(rRow).toSeq
-      val state = java.nio.file.Files
-        .createTempDirectory("join_view").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(String, Long, Option[Long], Option[Double],
-          Option[String], Option[String])]
-        val q = in.toDF().toDF("_side", "cust", "o_orderkey", "o_total",
-            "c_name", "c_seg")
-          .writeStream
-          .foreachBatch(graft.streaming.StreamingOps.joinViewSink(
-            state, "cust", Seq("o_orderkey", "o_total"),
-            Seq("c_name", "c_seg")))
-          .outputMode("update").start()
-        try {
-          in.addData(b1); q.processAllAvailable()
-          in.addData(b2); q.processAllAvailable()
-        } finally q.stop()
-      }
+      // one tagged feed: order rows ('l') and customer rows ('r')
+      val ords = t(s, dir, "orders").select(lit("l").as("_side"),
+        col("o_custkey").as("cust"), col("o_orderkey"),
+        col("o_totalprice").as("o_total"),
+        lit(null).cast("string").as("c_name"),
+        lit(null).cast("string").as("c_seg"))
+      val custs = t(s, dir, "customer").select(lit("r").as("_side"),
+        col("c_custkey").as("cust"), lit(null).cast("long").as("o_orderkey"),
+        lit(null).cast("double").as("o_total"), col("c_name"),
+        col("c_mktsegment").as("c_seg"))
+      val state = Twins.tempDir("join_view")
+      Twins.twoBatch(s, ords.unionAll(custs),
+        when(col("_side") === "l", col("o_orderkey") % 2 === 0)
+          .otherwise(col("cust") % 3 =!= 0))(Twins.sink(
+        graft.streaming.StreamingOps.joinViewSink(
+          state, "cust", Seq("o_orderkey", "o_total"),
+          Seq("c_name", "c_seg"))))
       s.read.parquet(s"$state/view/batch=1")
         .select(col("cust"), col("o_orderkey"), col("o_total"),
           col("c_name"), col("c_seg"))
@@ -1817,27 +1621,15 @@ object Temporal {
     // equal the batch hourly rollup — the mapping proof for the
     // engine's windowed-agg surface.
     "window_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = t(s, dir, "events")
-      val rows = ev.select(col("event_type"), tsEpochSeconds(ev).as("ts_s"))
-        .as[(String, Long)].collect()
+      val input = ev.select(col("event_type"), tsEpochSeconds(ev).as("ts_s"))
       val split = 1705363200L
-      val (b1, b2) = rows.partition(_._2 <= split)
-      Twins.scope(s) {
-        val in = MemoryStream[(String, Long)]
-        val agg = in.toDF().toDF("event_type", "ts_s")
-          .withColumn("_ts", timestamp_seconds(col("ts_s")))
+      Twins.twoBatch(s, input, col("ts_s") <= split)(
+        _.withColumn("_ts", timestamp_seconds(col("ts_s")))
           .groupBy(window(col("_ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("cnt"))
-        val q = agg.writeStream.format("memory")
-          .queryName("window_stream_out").outputMode("complete").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+          .writeStream.format("memory")
+          .queryName("window_stream_out").outputMode("complete"))
       s.table("window_stream_out")
         .select(col("event_type"),
           col("window.start").cast("long").as("window_start_s"),
@@ -1993,30 +1785,15 @@ object Temporal {
     // double accumulator), then the SAME changepoint runs over the
     // state — shares the batch oracle.
     "ts_changepoint_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = t(s, dir, "events")
-      val rows = ev.select(col("event_type"), tsEpochSeconds(ev).as("_secs"),
+      val input = ev.select(col("event_type"), tsEpochSeconds(ev).as("_secs"),
           (col("value").cast(d2) * lit(100)).cast("long").as("cents"))
         .select(col("event_type"), expr("_secs div 86400").as("day"),
           col("cents"))
-        .as[(String, Long, Long)].collect()
-      val (b1, b2) = rows.partition(_._2 % 2 == 0)
-      val state = java.nio.file.Files
-        .createTempDirectory("cp_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(String, Long, Long)]
-        val q = in.toDF().toDF("event_type", "day", "cents")
-          .writeStream
-          .foreachBatch(graft.streaming.StreamingOps.keyedMeanSink(
-            state, "event_type", "day", "cents"))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val state = Twins.tempDir("cp_stream")
+      Twins.twoBatch(s, input, col("day") % 2 === 0)(Twins.sink(
+        graft.streaming.StreamingOps.keyedMeanSink(
+          state, "event_type", "day", "cents")))
       val daily = s.read.parquet(s"$state/batch=1")
         .select(col("domain").as("event_type"), col("step").as("day"),
           col("s").cast("long").as("cents"))
@@ -2027,30 +1804,15 @@ object Temporal {
     // sum state as ts_changepoint_stream feeds the batch R/S fit —
     // integer-exact state, shared batch oracle.
     "stats_hurst_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = t(s, dir, "events")
-      val rows = ev.select(col("event_type"), tsEpochSeconds(ev).as("_secs"),
+      val input = ev.select(col("event_type"), tsEpochSeconds(ev).as("_secs"),
           (col("value").cast(d2) * lit(100)).cast("long").as("cents"))
         .select(col("event_type"), expr("_secs div 86400").as("day"),
           col("cents"))
-        .as[(String, Long, Long)].collect()
-      val (b1, b2) = rows.partition(_._2 % 2 == 0)
-      val state = java.nio.file.Files
-        .createTempDirectory("hurst_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(String, Long, Long)]
-        val q = in.toDF().toDF("event_type", "day", "cents")
-          .writeStream
-          .foreachBatch(graft.streaming.StreamingOps.keyedMeanSink(
-            state, "event_type", "day", "cents"))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val state = Twins.tempDir("hurst_stream")
+      Twins.twoBatch(s, input, col("day") % 2 === 0)(Twins.sink(
+        graft.streaming.StreamingOps.keyedMeanSink(
+          state, "event_type", "day", "cents")))
       val daily = s.read.parquet(s"$state/batch=1")
         .select(col("domain").as("event_type"), col("step").as("day"),
           col("s").cast("long").as("cents"))
@@ -2114,21 +1876,20 @@ object Temporal {
     // emit on match, so the final table equals the batch interval
     // join — the all-pairs-in-window sibling of ts_nearest.
     "stream_join" -> ((s, dir) => {
+      import org.apache.spark.sql.{Encoders, Row}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = t(s, dir, "events")
       val secs = tsEpochSeconds(ev)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id"), secs.as("ts_s"))
-        .as[(Long, Long, Long)].collect()
       val purch = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id"), secs.as("ts_s"))
-        .as[(Long, Long, Long)].collect()
       val split = 1705363200L
+      val (c0, c1) = clicks.collect().toSeq.partition(_.getLong(2) <= split)
+      val (p0, p1) = purch.collect().toSeq.partition(_.getLong(2) <= split)
       Twins.scope(s) {
-        val inC = MemoryStream[(Long, Long, Long)]
-        val inP = MemoryStream[(Long, Long, Long)]
+        val inC = MemoryStream[Row](Encoders.row(clicks.schema), s)
+        val inP = MemoryStream[Row](Encoders.row(purch.schema), s)
         val c = inC.toDF().toDF("c_uid", "c_id", "c_ts_s")
           .withColumn("c_ts", timestamp_seconds(col("c_ts_s")))
           .withWatermark("c_ts", "2 hours")
@@ -2142,12 +1903,8 @@ object Temporal {
         val q = joined.writeStream.format("memory")
           .queryName("stream_join_out").outputMode("append").start()
         try {
-          inC.addData(clicks.filter(_._3 <= split).toSeq)
-          inP.addData(purch.filter(_._3 <= split).toSeq)
-          q.processAllAvailable()
-          inC.addData(clicks.filter(_._3 > split).toSeq)
-          inP.addData(purch.filter(_._3 > split).toSeq)
-          q.processAllAvailable()
+          inC.addData(c0); inP.addData(p0); q.processAllAvailable()
+          inC.addData(c1); inP.addData(p1); q.processAllAvailable()
         } finally q.stop()
       }
       s.table("stream_join_out")
@@ -2226,30 +1983,15 @@ object Temporal {
     // 2-batch stream must equal the batch histogram sketch — the
     // third sketch sink (HLL min-merge, CMS sum, histogram sum).
     "sketch_hist_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val ev = t(s, dir, "events")
-      val rows = ev.select(col("event_type"), tsEpochSeconds(ev).as("ts_s"),
-          col("value"))
-        .as[(String, Long, Double)].collect()
+      val input = ev.select(col("event_type"), tsEpochSeconds(ev).as("ts_s"),
+        col("value"))
       val split = 1705363200L
-      val (b1, b2) = rows.partition(_._2 <= split)
-      val state = java.nio.file.Files
-        .createTempDirectory("hist_stream").toString
-      Twins.scope(s) {
-        val in = MemoryStream[(String, Long, Double)]
-        val q = in.toDF().toDF("event_type", "ts_s", "value")
-          .writeStream
-          .foreachBatch(graft.streaming.StreamingOps.histogramBinSink(
-            state, Seq("event_type"), "value",
-            lo = 0.0, width = 0.5, bins = 1024))
-          .outputMode("update").start()
-        try {
-          in.addData(b1.toSeq); q.processAllAvailable()
-          in.addData(b2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val state = Twins.tempDir("hist_stream")
+      Twins.twoBatch(s, input, col("ts_s") <= split)(Twins.sink(
+        graft.streaming.StreamingOps.histogramBinSink(
+          state, Seq("event_type"), "value",
+          lo = 0.0, width = 0.5, bins = 1024)))
       s.read.parquet(s"$state/batch=1")
         .select(col("event_type"), col("_bin").as("bin"),
           col("_c").cast("long").as("cnt"))

@@ -1,11 +1,32 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.pipeline.StreamStarts
+import graft.streaming.StreamingOps
 
-/** The scope every streaming-twin gate row drives its harness query
-  * in.
+/** The harness every streaming-twin gate row runs in. A twin feeds
+  * the rows of its batch sibling to a streaming query as two
+  * micro-batches; the merged result must equal the batch answer, so
+  * the batch oracle checks the streaming operator too.
+  *
+  * The feed contract ([[twoBatch]]):
+  *  - the input is collected to the driver once, with the split
+  *    predicate evaluated in the same job;
+  *  - rows where the predicate is true form batch 0, rows where it is
+  *    false or NULL form batch 1;
+  *  - each batch is one `MemoryStream.addData` block, so it arrives
+  *    as ONE partition, its rows in collect order (a real source is
+  *    partitioned; twins that need source parallelism `repartition`
+  *    on the stream side);
+  *  - the query is started in [[scope]] and stopped before
+  *    [[twoBatch]] returns, also when a batch fails.
   */
 private[queries] object Twins {
 
@@ -32,5 +53,66 @@ private[queries] object Twins {
     val prev = s.conf.get(key)
     s.conf.set(key, "4")
     try body finally s.conf.set(key, prev)
+  }
+
+  /** Feeds `input` to the streaming query `query` builds over it, as
+    * the two batches the class doc describes: batch 0 = the rows where
+    * `first` is true, batch 1 = the rest. The stream has `input`'s
+    * schema. The collect runs before [[scope]], under the session's
+    * own shuffle partition count.
+    */
+  def twoBatch(s: SparkSession, input: DataFrame, first: Column)(
+      query: DataFrame => DataStreamWriter[Row]): Unit = {
+    val n = input.schema.length
+    val (b0, b1) = input.select(input.col("*"), first.as("_twin_first"))
+      .collect().partition(r => !r.isNullAt(n) && r.getBoolean(n))
+    def rows(b: Array[Row]): Seq[Row] = b.toSeq.map(r => Row.fromSeq(r.toSeq.take(n)))
+    scope(s) {
+      val in = MemoryStream[Row](Encoders.row(input.schema), s)
+      val q = query(in.toDF()).start()
+      try {
+        in.addData(rows(b0)); q.processAllAvailable()
+        in.addData(rows(b1)); q.processAllAvailable()
+      } finally q.stop()
+    }
+  }
+
+  /** The `foreachBatch` writer in update mode, the form most twins'
+    * state and row sinks use. */
+  def sink(f: (DataFrame, Long) => Unit): DataFrame => DataStreamWriter[Row] =
+    _.writeStream.foreachBatch(f).outputMode("update")
+
+  /** A row-local twin: `fn` maps each micro-batch on its own
+    * ([[StreamingOps.rowLocalSink]]), and the result is every batch's
+    * output read back — equal to `fn(input)` when `fn` reads only the
+    * row. */
+  def rowLocal(s: SparkSession, input: DataFrame, first: Column)(
+      fn: DataFrame => DataFrame): DataFrame = {
+    val out = tempDir("twin")
+    twoBatch(s, input, first)(sink(StreamingOps.rowLocalSink(out)(fn)))
+    s.read.parquet(s"$out/b*")
+  }
+
+  private val dirs = new ConcurrentLinkedQueue[Path]
+  private lazy val cleanup = sys.addShutdownHook {
+    dirs.forEach { d =>
+      try {
+        val w = Files.walk(d)
+        try w.sorted(Comparator.reverseOrder[Path]).forEach(p => Files.deleteIfExists(p))
+        finally w.close()
+      } catch { // a directory an overwrite removed is already gone
+        case _: java.io.IOException | _: java.io.UncheckedIOException =>
+      }
+    }
+  }
+
+  /** A fresh scratch directory, deleted with everything in it when
+    * the JVM exits. A twin's result is a lazy frame over files here,
+    * so nothing earlier may delete it. */
+  def tempDir(prefix: String): String = {
+    cleanup
+    val d = Files.createTempDirectory(prefix)
+    dirs.add(d)
+    d.toString
   }
 }
