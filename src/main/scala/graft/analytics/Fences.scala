@@ -1,5 +1,10 @@
 package graft.analytics
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 
 /** Shared materialization fence for multiply-referenced intermediates.
@@ -23,4 +28,40 @@ private[graft] object Fences {
     if (d.sparkSession.sparkContext.getCheckpointDir.isDefined)
       d.checkpoint(true)
     else d.localCheckpoint(true)
+
+  /** Where an operator spills a result it reads back: the session's
+    * checkpoint dir (a shared filesystem on clusters), else — in local
+    * mode only — a [[tempDir]]. On a cluster a driver-local path is not
+    * visible to executors, so it fails loudly instead of writing
+    * partial data. */
+  def spillDir(sc: SparkContext, op: String, prefix: String): String =
+    sc.getCheckpointDir.getOrElse {
+      require(sc.isLocal,
+        s"$op on a cluster needs a shared-filesystem spill dir: set " +
+          "SparkContext.setCheckpointDir")
+      tempDir(prefix)
+    }
+
+  private val exitDirs = new ConcurrentLinkedQueue[Path]
+  private lazy val exitCleanup = sys.addShutdownHook {
+    exitDirs.forEach { d =>
+      try {
+        val w = Files.walk(d)
+        try w.sorted(Comparator.reverseOrder[Path]).forEach(p => Files.deleteIfExists(p))
+        finally w.close()
+      } catch { // a directory an overwrite removed is already gone
+        case _: java.io.IOException | _: java.io.UncheckedIOException =>
+      }
+    }
+  }
+
+  /** A fresh scratch directory, deleted with everything in it when
+    * the JVM exits. The frames read from it are lazy, so nothing
+    * earlier may delete it. */
+  def tempDir(prefix: String): String = {
+    exitCleanup
+    val d = Files.createTempDirectory(prefix)
+    exitDirs.add(d)
+    d.toString
+  }
 }

@@ -193,22 +193,11 @@ object Graph {
     // localCheckpoint: Dataset.localCheckpoint plans through .rdd,
     // which bypasses AQE — measured 8 s of extra sort-merge work on
     // the sf0.1 gate graph where the adaptive plan broadcasts. Spill
-    // dir resolution: explicit `checkpointDir`, else the session's
-    // configured checkpoint dir (a shared filesystem on clusters),
-    // else a driver-local temp dir ONLY in local mode — on a cluster
-    // a local path is not visible to executors, so we fail loudly
-    // instead of writing partial data (`eager = false` opts out and
-    // leaves the caches to the caller).
-    val sc = edges.sparkSession.sparkContext
-    val dir = checkpointDir
-      .orElse(sc.getCheckpointDir)
-      .getOrElse {
-        require(sc.isLocal,
-          "pageRank(eager=true) on a cluster needs a shared-filesystem " +
-            "spill dir: pass checkpointDir or set " +
-            "SparkContext.setCheckpointDir (or use eager=false)")
-        java.nio.file.Files.createTempDirectory("graft-pagerank").toString
-      }
+    // dir: explicit `checkpointDir`, else [[Fences.spillDir]]
+    // (`eager = false` opts out and leaves the caches to the caller).
+    val dir = checkpointDir.getOrElse(Fences.spillDir(
+      edges.sparkSession.sparkContext,
+      "pageRank(eager=true) without checkpointDir", "graft-pagerank"))
     val out = dir + "/ranks"
     ranks.write.mode("overwrite").parquet(out)
     ew.unpersist(false)
@@ -339,16 +328,9 @@ object Graph {
         onFences(Seq(ew, marked, e) ++ Option(prevSum))
       return ranks
     }
-    val sc = edges.sparkSession.sparkContext
-    val dir = checkpointDir
-      .orElse(sc.getCheckpointDir)
-      .getOrElse {
-        require(sc.isLocal,
-          "personalizedPageRank(eager=true) on a cluster needs a shared-" +
-            "filesystem spill dir: pass checkpointDir or set " +
-            "SparkContext.setCheckpointDir (or use eager=false)")
-        java.nio.file.Files.createTempDirectory("graft-ppr").toString
-      }
+    val dir = checkpointDir.getOrElse(Fences.spillDir(
+      edges.sparkSession.sparkContext,
+      "personalizedPageRank(eager=true) without checkpointDir", "graft-ppr"))
     val out = dir + "/ppr-" + java.util.UUID.randomUUID().toString
     ranks.write.mode("overwrite").parquet(out)
     ew.unpersist(false)
@@ -482,13 +464,7 @@ object Graph {
     // materialize, then release every per-round fence instead of
     // leaking persisted frames into the caller's session
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val dir = sc.getCheckpointDir.getOrElse {
-      require(sc.isLocal,
-        "hits on a cluster needs a shared-filesystem spill dir: set " +
-          "SparkContext.setCheckpointDir")
-      java.nio.file.Files.createTempDirectory("graft-hits").toString
-    }
+    val dir = Fences.spillDir(spark.sparkContext, "hits", "graft-hits")
     val path = dir + "/hits-" + java.util.UUID.randomUUID().toString
     out.write.mode("overwrite").parquet(path)
     prevFences.foreach(_.unpersist(false))
@@ -768,13 +744,7 @@ object Graph {
       return out
     }
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val dir = sc.getCheckpointDir.getOrElse {
-      require(sc.isLocal,
-        "kCore on a cluster needs a shared-filesystem spill dir: set " +
-          "SparkContext.setCheckpointDir")
-      java.nio.file.Files.createTempDirectory("graft-kcore").toString
-    }
+    val dir = Fences.spillDir(spark.sparkContext, "kCore", "graft-kcore")
     val path = dir + "/kcore-" + java.util.UUID.randomUUID().toString
     out.write.mode("overwrite").parquet(path)
     fences.foreach(_.unpersist(false))

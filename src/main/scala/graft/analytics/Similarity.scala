@@ -627,13 +627,7 @@ object Similarity {
   private def spillRelease(out: DataFrame, centered: DataFrame,
                            tag: String): DataFrame = {
     val spark = out.sparkSession
-    val sc = spark.sparkContext
-    val dir = sc.getCheckpointDir.getOrElse {
-      require(sc.isLocal,
-        s"$tag on a cluster needs a shared-filesystem spill dir: set " +
-          "SparkContext.setCheckpointDir")
-      java.nio.file.Files.createTempDirectory("graft-pca").toString
-    }
+    val dir = Fences.spillDir(spark.sparkContext, tag, "graft-pca")
     val path = dir + "/" + tag + "-" + java.util.UUID.randomUUID().toString
     out.write.mode("overwrite").parquet(path)
     centered.unpersist(false)

@@ -1339,13 +1339,7 @@ object Text {
   private def bpeSpill(df: DataFrame, out: DataFrame,
                        cached: Seq[DataFrame]): DataFrame = {
     val spark = df.sparkSession
-    val sc = spark.sparkContext
-    val dir = sc.getCheckpointDir.getOrElse {
-      require(sc.isLocal,
-        "bpeApply/bpeSegment on a cluster needs a shared-filesystem " +
-          "spill dir: set SparkContext.setCheckpointDir")
-      java.nio.file.Files.createTempDirectory("graft-bpe").toString
-    }
+    val dir = Fences.spillDir(spark.sparkContext, "bpeApply/bpeSegment", "graft-bpe")
     val path = dir + "/bpe-out-" + java.util.UUID.randomUUID().toString
     out.write.mode("overwrite").parquet(path)
     cached.foreach(_.unpersist(false))

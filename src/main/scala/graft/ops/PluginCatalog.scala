@@ -1,475 +1,20 @@
 package graft.ops
 
-/** Generated plugin catalogue: one entry per named plugin in
-  * [[Registry.factories]], with its settings (required / default) and
-  * a runnable YAML snippet. `main` renders `PLUGINS.md`; the suite
-  * regenerates and diffs it AND asserts the entry set equals the
-  * registry's key set and every example constructs through
-  * [[Registry.create]] — so the doc cannot rot (the Spark-side
-  * equivalent of the reference's generated `exampleutil/specs/`
-  * JSON files, reference `pkg/plugin/processor/builtin/registry.go`).
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
+
+import Registry.{Setting, entries, opt, req}
+
+/** Generated plugin catalogue: renders [[Registry.entries]] (one per
+  * named processor plugin, with its settings and a runnable YAML
+  * snippet) and the connector catalogue. `main` renders `PLUGINS.md`;
+  * the suite regenerates and diffs it AND asserts every example
+  * constructs through [[Registry.create]] — so the doc cannot rot (the
+  * Spark-side equivalent of the reference's generated
+  * `exampleutil/specs/` JSON files, reference
+  * `pkg/plugin/processor/builtin/registry.go`).
   */
 object PluginCatalog {
-
-  final case class Setting(name: String, required: Boolean,
-                           value: String, doc: String = "")
-
-  final case class Entry(plugin: String, summary: String,
-                         settings: Seq[Setting], notes: String = "") {
-    /** Example settings: required ones verbatim (they double as the
-      * YAML snippet), nothing else — defaults are what they are. */
-    def example: Map[String, String] =
-      settings.filter(_.required).map(s => s.name -> s.value).toMap
-  }
-
-  private def req(name: String, example: String, doc: String = "") =
-    Setting(name, required = true, example, doc)
-  private def opt(name: String, default: String, doc: String = "") =
-    Setting(name, required = false, default, doc)
-
-  // common example field refs (the OpenCDC record path vocabulary)
-  private val Id = ".Payload.After.doc_id"
-  private val Text = ".Payload.After.text"
-  private val Vec = ".Payload.After.embedding"
-  private val Src = ".Payload.After.src"
-  private val Dst = ".Payload.After.dst"
-
-  val entries: Seq[Entry] = Seq(
-    // ---- field / codec ------------------------------------------------
-    Entry("field.set", "Set a field to a literal or Go-template value.",
-      Seq(req("field", ".Payload.After.department"),
-        req("value", "engineering", "literal or {{ .Payload.After.x }} template"))),
-    Entry("field.rename", "Rename fields (comma-separated from:to pairs).",
-      Seq(req("mapping", ".Payload.After.name:fullname"))),
-    Entry("field.exclude", "Drop fields from the record.",
-      Seq(req("fields", ".Payload.After.ssn"))),
-    Entry("field.convert", "Cast a field to string/int/long/float/bool.",
-      Seq(req("field", ".Payload.After.age"), req("type", "long"))),
-    Entry("json.decode", "Parse a JSON string field into structured data.",
-      Seq(req("field", Text), opt("schema", "", "optional DDL schema"))),
-    Entry("json.encode", "Serialize a structured field to a JSON string.",
-      Seq(req("field", ".Payload.After"))),
-    Entry("base64.encode", "Base64-encode a field.", Seq(req("field", Text))),
-    Entry("base64.decode", "Base64-decode a field.", Seq(req("field", Text))),
-    Entry("avro.encode", "Avro-encode the payload against a schema.",
-      Seq(req("schema",
-          """{"type":"record","name":"r","fields":[{"name":"id","type":"long"}]}"""),
-        opt("schema.id", "1"), opt("field", ".Payload.After"),
-        opt("schema.strategy", "", "autoRegister infers + registers"),
-        opt("schema.autoRegister.subject", "", "required with autoRegister"),
-        opt("schema.registry.url", "", "required with autoRegister"))),
-    Entry("avro.decode", "Avro-decode the payload against a schema.",
-      Seq(req("schema",
-          """{"type":"record","name":"r","fields":[{"name":"id","type":"long"}]}"""),
-        opt("field", ".Payload.After"))),
-    Entry("unwrap.debezium", "Unwrap a Debezium envelope into OpenCDC.",
-      Seq(opt("field", ".Payload.After"))),
-    Entry("unwrap.kafkaconnect", "Unwrap a Kafka Connect envelope.",
-      Seq(opt("field", ".Payload.After"))),
-    Entry("unwrap.opencdc", "Unwrap a nested OpenCDC record.",
-      Seq(opt("field", ".Payload.After"))),
-
-    // ---- flow ----------------------------------------------------------
-    Entry("filter", "Drop records (pair with a per-processor condition).",
-      Nil),
-    Entry("error", "Fail records to the DLQ with a message.",
-      Seq(opt("message", "error processor triggered"))),
-    Entry("clone", "Emit N copies of each record.", Seq(req("count", "2"))),
-    Entry("split", "One record per element of an array field.",
-      Seq(req("field", ".Payload.After.items"))),
-    Entry("sql", "Arbitrary Spark SQL over the batch (view `records`).",
-      Seq(req("query", "SELECT * FROM records"), opt("view", "records"))),
-
-    // ---- enrichment -----------------------------------------------------
-    Entry("webhook.http", "Per-record HTTP call with retry/backoff.",
-      Seq(req("request.url", "https://example.com/{{ .Payload.After.doc_id }}"),
-        opt("request.method", "GET"), opt("request.body", ""),
-        opt("response.body", ".Payload.After"),
-        opt("backoffRetry.count", "0"), opt("backoffRetry.min", "100ms"),
-        opt("backoffRetry.max", "5s"), opt("backoffRetry.factor", "2"))),
-    Entry("enrich.asof", "As-of join against a versioned dimension table.",
-      Seq(req("key", ".Payload.After.k"), req("time", ".Payload.After.t"),
-        req("table", "/data/prices"), req("values", "price"),
-        opt("tableKey", "key"), opt("tableTime", "ts"))),
-    Entry("openai.embed", "OpenAI embeddings for a text field.",
-      Seq(opt("model", "text-embedding-3-small"),
-        opt("url", "https://api.openai.com/v1/embeddings"))),
-    Entry("openai.embeddings", "Alias of openai.embed (reference spec name).",
-      Seq(opt("model", "text-embedding-3-small"))),
-    Entry("openai.textgen", "OpenAI chat completion over a text field.",
-      Seq(opt("model", "gpt-4o-mini"),
-        opt("url", "https://api.openai.com/v1/chat/completions"))),
-    Entry("cohere.command", "Cohere command generation (goSprintf prompt).",
-      Seq(opt("model", "command"), opt("prompt", "%s"),
-        opt("url", "https://api.cohere.com/v2/chat"))),
-    Entry("cohere.embed", "Cohere embeddings for a text field.",
-      Seq(opt("model", "embed-english-v2.0"),
-        opt("inputType", "", "required for v3+ models"),
-        opt("url", "https://api.cohere.com/v2/embed"))),
-    Entry("cohere.rerank", "Cohere rerank of documents against a query.",
-      Seq(opt("model", "rerank-v3.5"), opt("query", ""),
-        opt("url", "https://api.cohere.com/v2/rerank"))),
-    Entry("ollama.request", "Local Ollama generation request.",
-      Seq(opt("url", "http://localhost:11434"), opt("model", "llama3.2"),
-        opt("prompt", ""))),
-    Entry("ollama", "Alias of ollama.request (reference spec name).",
-      Seq(opt("model", "llama3.2"))),
-
-    // ---- dedup ----------------------------------------------------------
-    Entry("dedup.exact", "Exact dedup on a field (or the whole record).",
-      Seq(opt("field", "", "empty = whole payload"))),
-    Entry("dedup.url", "Canonical-URL dedup (scheme/host/query cleanup).",
-      Seq(opt("field", ".Payload.After"))),
-    Entry("dedup.minhash", "MinHash-LSH near-dup pairs over shingles.",
-      Seq(req("id", Id), opt("field", Text), opt("shingleSize", "3"),
-        opt("numHashes", "128"), opt("numBands", "16"),
-        opt("threshold", "0.8"), opt("charGrams", "false"),
-        opt("maxBucket", "4096"))),
-    Entry("dedup.simhash", "SimHash near-dup pairs within Hamming radius.",
-      Seq(req("id", Id), opt("field", Text), opt("maxHamming", "3"),
-        opt("maxBucket", "4096"))),
-    Entry("dedup.clusters", "Near-dup connected components + keep verdicts.",
-      Seq(req("id", Id), opt("field", Text), opt("maxHamming", "3"))),
-    Entry("dedup.softweight", "1/cluster_size soft-dedup training weights.",
-      Seq(req("id", Id), opt("field", Text), opt("maxHamming", "3"))),
-    Entry("dedup.semantic", "Embedding-cosine near-dup (SemDeDup-style).",
-      Seq(req("id", Id), req("vec", Vec), opt("k", "16"),
-        opt("threshold", "0.95"), opt("maxBucket", "4096"))),
-    Entry("dedup.incremental", "Batch-vs-history exact dedup verdicts.",
-      Seq(req("id", Id), req("historyTable", "/data/history"),
-        opt("historyField", "text"), opt("field", Text))),
-
-    // ---- text -----------------------------------------------------------
-    Entry("text.metrics", "Length/token/punctuation quality metrics.",
-      Seq(opt("field", ".Payload.After"))),
-    Entry("text.quality", "Quality screen: stopword/punct/length ratios.",
-      Seq(opt("field", Text))),
-    Entry("text.langid", "N-gram language identification.",
-      Seq(opt("field", Text))),
-    Entry("text.scripts", "Script composition (Latin/CJK/Cyrillic/...).",
-      Seq(opt("field", Text))),
-    Entry("text.normalize", "Unicode/whitespace/case normalization.",
-      Seq(opt("field", Text))),
-    Entry("text.fingerprint", "Rolling-hash document fingerprint.",
-      Seq(opt("field", Text))),
-    Entry("text.tokens", "Whitespace + BPE-ish regex token counts.",
-      Seq(opt("field", Text))),
-    Entry("text.chunk", "Fixed-size token chunks with overlap.",
-      Seq(opt("field", Text), opt("chunkTokens", "100"), opt("overlap", "20"))),
-    Entry("text.pii", "PII pattern annotation (emails, phones, ids).",
-      Seq(opt("field", Text))),
-    Entry("text.repetition", "Repeated n-gram / boilerplate ratios.",
-      Seq(req("id", Id), opt("field", Text))),
-    Entry("text.novelty", "Cross-document n-gram novelty score.",
-      Seq(req("id", Id), opt("field", Text), opt("n", "3"))),
-    Entry("text.entropy", "Character/word entropy per document.",
-      Seq(req("id", Id), opt("field", Text))),
-    Entry("text.gopher",
-      "Gopher quality rules (Rae et al. 2021): annotate or filter.",
-      Seq(opt("field", Text), opt("drop", "false"),
-        opt("minWords", "50"), opt("maxWords", "100000"),
-        opt("minMeanWordLen", "3.0"), opt("maxMeanWordLen", "10.0"),
-        opt("maxSymbolRatio", "0.1"), opt("maxBulletFrac", "0.9"),
-        opt("maxEllipsisFrac", "0.3"), opt("minAlphaFrac", "0.8"),
-        opt("minStopHits", "2"))),
-    Entry("text.fineweb",
-      "FineWeb line-shape heuristics (Penedo et al. 2024): annotate or filter.",
-      Seq(opt("field", Text), opt("drop", "false"),
-        opt("minPunctLineFrac", "0.12"), opt("maxDupLineCharFrac", "0.1"),
-        opt("maxShortLineFrac", "0.67"), opt("shortLineChars", "30"))),
-    Entry("text.strip_html",
-      "HTML to text: strip tags/scripts/comments, decode entities.",
-      Seq(opt("field", Text))),
-    Entry("text.nb_train",
-      "Train a Naive-Bayes token model: label-conditional log-odds (batch-only).",
-      Seq(req("id", Id), req("label", ".Payload.After.lang"),
-        req("posValue", "en"), opt("field", Text), opt("alpha", "1.0"))),
-    Entry("text.nb",
-      "Score docs against a trained Naive-Bayes model (batch-only).",
-      Seq(req("id", Id), req("modelTable", "/data/nb-model"),
-        opt("field", Text), opt("prior", "0.0"))),
-    Entry("dedup.winnow",
-      "Winnowing fingerprint match: doc pairs sharing window-min grams (batch-only).",
-      Seq(req("id", Id), opt("field", Text), opt("k", "4"), opt("w", "8"),
-        opt("minShared", "2"), opt("maxDf", "64"))),
-    Entry("text.divergence",
-      "Pairwise Jensen-Shannon divergence between stratum slices (batch-only).",
-      Seq(req("stratum", ".Payload.After.lang"), opt("field", Text))),
-    Entry("text.sbo_train",
-      "Train a stupid-backoff trigram LM: count-ratio scores (batch-only).",
-      Seq(req("id", Id), opt("field", Text))),
-    Entry("text.sbo",
-      "CCNet-style fluency score vs a trained SBO model (batch-only).",
-      Seq(req("id", Id), req("modelTable", "/data/sbo-model"),
-        opt("field", Text))),
-    Entry("text.zipf",
-      "Zipf's-law slope/intercept of the vocabulary head (batch-only).",
-      Seq(opt("field", Text), opt("minCount", "2"), opt("topN", "4096"))),
-    Entry("text.heaps",
-      "Heaps'-law vocabulary-growth fit V(n)=K*n^beta (batch-only).",
-      Seq(req("id", Id), opt("field", Text), opt("bucketWidth", "64"))),
-    Entry("text.classifier", "Hashed-feature quality classifier score.",
-      Seq(opt("field", Text), opt("seed", "42"))),
-    Entry("text.hashing", "Hashed bag-of-words feature vector.",
-      Seq(req("id", Id), opt("field", Text), opt("dim", "1024"))),
-    Entry("text.decontaminate", "Flag docs sharing n-grams with an eval set.",
-      Seq(req("id", Id), req("evalTable", "/data/eval"),
-        opt("evalField", "text"), opt("n", "8"), opt("field", Text))),
-    Entry("text.oov", "Out-of-vocabulary rate vs a train corpus (batch-only).",
-      Seq(req("id", Id), req("trainTable", "/data/train"),
-        opt("trainField", "text"), opt("minCount", "2"), opt("field", Text))),
-    Entry("text.dsir", "DSIR importance weights toward a target domain (batch-only).",
-      Seq(req("id", Id), req("targetTable", "/data/target"),
-        opt("targetField", "text"), opt("buckets", "4096"), opt("field", Text))),
-    Entry("text.bpe", "Apply a trained BPE merge list per document (batch-only).",
-      Seq(req("id", Id), req("mergesTable", "/data/merges"), opt("field", Text))),
-    Entry("text.bpe_train", "Train a BPE merge list on the corpus (batch-only).",
-      Seq(req("id", Id), opt("rounds", "8"), opt("field", Text))),
-
-    // ---- sampling / mixing -----------------------------------------------
-    Entry("sample.hash", "Deterministic hash sampling by fraction.",
-      Seq(opt("field", "", "empty = whole payload"), opt("fraction", "0.1"),
-        opt("seed", "0"))),
-    Entry("sample.fixed", "Exactly-k per group (deterministic).",
-      Seq(req("groups", ".Payload.After.lang"), req("id", Id),
-        opt("k", "1000"), opt("seed", "0"))),
-    Entry("sample.weighted", "Weighted k-sample (Efraimidis-Spirakis).",
-      Seq(req("id", Id), req("weight", ".Payload.After.weight"),
-        opt("k", "1000"), opt("seed", "0"))),
-    Entry("sample.split", "Deterministic train/val/test splits.",
-      Seq(req("group", Id), req("fractions", "train:0.8,val:0.1,test:0.1"),
-        opt("seed", "0"))),
-    Entry("sample.kfold", "Deterministic k-fold assignment.",
-      Seq(req("id", Id), opt("k", "5"), opt("seed", "0"))),
-    Entry("sample.mixture", "Doc-count mixture toward target proportions.",
-      Seq(req("stratum", ".Payload.After.lang"), req("id", Id),
-        req("targets", "en:0.8,de:0.2"), opt("seed", "0"))),
-    Entry("sample.epochs",
-      "Fractional-epoch up-sampling: emit floor(e) copies + hash-gated extra.",
-      Seq(req("stratum", ".Payload.After.lang"), req("id", Id),
-        req("epochs", "en:1.0,de:2.3"), opt("seed", "0"))),
-    Entry("sample.token_mixture",
-      "Token-weighted mixture toward target proportions (batch-only).",
-      Seq(req("stratum", ".Payload.After.lang"), req("id", Id),
-        req("tokens", ".Payload.After.n_tokens"),
-        req("targets", "en:0.8,de:0.2"), opt("seed", "0"))),
-    Entry("sample.mixture_kl",
-      "KL divergence of realized token shares vs a target mix (batch-only).",
-      Seq(req("stratum", ".Payload.After.lang"),
-        req("tokens", ".Payload.After.n_tokens"),
-        req("targets", "en:0.8,de:0.2"))),
-    Entry("sample.unimax",
-      "UniMax budget split (Chung et al. 2023): uniform under an epoch cap (batch-only).",
-      Seq(req("stratum", ".Payload.After.lang"),
-        req("tokens", ".Payload.After.n_tokens"),
-        req("budget", "1000000"), opt("maxEpochs", "4.0"))),
-    Entry("sample.doremi",
-      "DoReMi EG mixture weights from per-domain excess losses (batch-only).",
-      Seq(req("domain", ".Payload.After.lang"),
-        req("step", ".Payload.After.step"),
-        req("loss", ".Payload.After.loss"), opt("eta", "1.0"))),
-    Entry("custom.javascript",
-      "Run custom JavaScript code: process(record) per record, in a Node subprocess.",
-      Seq(req("script", "function process(r) { return r; }"),
-        opt("script.path", "/pipelines/proc.js"))),
-    Entry("custom.wasm",
-      "Run a WebAssembly module over each record's payload bytes (alloc/process ABI, Node-hosted).",
-      Seq(req("wasm.base64", "AGFzbQEAAAA=", "base64 module (or wasm.path)"),
-        opt("wasm.path", "", "load the module from a .wasm file instead"),
-        opt("field", ".Payload.After", ".Payload.After|.Payload.Before|.Key"))),
-    Entry("sample.curriculum",
-      "Exact-NTILE curriculum phase by difficulty score (batch-only).",
-      Seq(req("id", Id), req("score", ".Payload.After.n_tokens"),
-        opt("phases", "4"))),
-    Entry("text.c4",
-      "C4 cleanup rules: page verdicts in metadata; drop gates on keep; clean rewrites the text to the retained lines.",
-      Seq(opt("field", Text), opt("drop", "false"), opt("clean", "false"),
-        opt("minSentences", "5"), opt("minLineWords", "5"),
-        opt("badWords", "badword1,badword2"))),
-    Entry("url.filter",
-      "RefinedWeb-style URL gate: host/length/digit/IP/blocklist verdicts in metadata; drop gates on keep.",
-      Seq(opt("field", ".Payload.After.url"), opt("drop", "false"),
-        opt("maxUrlLen", "2048"), opt("maxHostDots", "4"),
-        opt("maxHostDigitFrac", "0.4"),
-        opt("blockWords", "badword1,badword2"))),
-    Entry("sample.tiles",
-      "Exact per-stratum NTILE into metadata `tile` — CCNet head/middle/tail gate (batch-only; null scores drop).",
-      Seq(req("stratum", ".Payload.After.lang"),
-        req("score", ".Metadata.sbo.score"), req("id", Id),
-        opt("tiles", "3"), opt("binWidth", "0.01"))),
-    Entry("report.datacard",
-      "Corpus datasheet as ONE terminal record; optional md+json files (batch-only).",
-      Seq(req("id", Id), req("lang", ".Payload.After.lang"),
-        opt("field", Text), opt("path", "/data/release/card"))),
-    Entry("sample.temperature", "Temperature-scaled stratum rebalancing.",
-      Seq(req("stratum", ".Payload.After.lang"), req("id", Id),
-        opt("temperature", "2.0"), opt("seed", "0"))),
-    Entry("sample.negatives", "Deterministic negative sampling for pairs.",
-      Seq(req("id", Id), opt("k", "2"), opt("bucketBits", "6"),
-        opt("seed", "7"))),
-    Entry("sample.interleave", "Deterministic global training-order shuffle (batch-only).",
-      Seq(req("id", Id), opt("seed", "0"))),
-    Entry("sample.pack", "Greedy sequence packing into token budgets (batch-only).",
-      Seq(req("id", Id), req("tokens", ".Payload.After.n_tokens"),
-        req("budget", "512"), opt("streams", "8"), opt("seed", "0"))),
-
-    // ---- sketches --------------------------------------------------------
-    Entry("sketch.bloom", "Bloom-filter membership state per batch.",
-      Seq(opt("value", "", "field to hash; default whole payload"),
-        opt("mBits", "65536"), opt("kHashes", "4"), opt("seed", "7"))),
-    Entry("sketch.cms", "Count-min sketch of value frequencies.",
-      Seq(opt("value", "", "field to count; default whole payload"),
-        opt("depth", "4"), opt("width", "1024"))),
-    Entry("sketch.hll", "HyperLogLog distinct counts per group.",
-      Seq(req("groups", ".Payload.After.lang"),
-        req("value", ".Payload.After.user"), opt("p", "12"), opt("seed", "7"))),
-    Entry("sketch.kmv", "K-minimum-values distinct-count state per group.",
-      Seq(req("groups", ".Payload.After.lang"),
-        req("value", ".Payload.After.user"), opt("k", "256"), opt("seed", "7"))),
-    Entry("sketch.kll", "KLL quantile sketch (grouped or global).",
-      Seq(req("value", ".Payload.After.amount"), req("id", Id),
-        opt("groups", ""), opt("k", "256"), opt("seed", "7"),
-        opt("quantiles", "p50:5000,p90:9000,p99:9900"))),
-    Entry("sketch.hist", "Fixed-bin histogram + quantile estimates.",
-      Seq(req("groups", ".Payload.After.lang"),
-        req("value", ".Payload.After.amount"), opt("lo", "0"),
-        opt("width", "1"), opt("bins", "64"), opt("quantiles", "0.5,0.9,0.99"))),
-    Entry("sketch.topk", "Heavy hitters above a count threshold.",
-      Seq(opt("value", "", "field to count; default whole payload"),
-        opt("threshold", "2"), opt("capacity", "0"))),
-    Entry("sketch.overlap", "KMV overlap estimate vs a history corpus (batch-only).",
-      Seq(req("historyTable", "/data/history"), opt("historyField", "text"),
-        opt("k", "256"), opt("field", Text))),
-
-    // ---- graph -----------------------------------------------------------
-    Entry("graph.pagerank", "PageRank over (src, dst) edges.",
-      Seq(req("src", Src), req("dst", Dst), opt("iterations", "5"),
-        opt("damping", "0.85"))),
-    Entry("graph.hits", "HITS hub/authority scores.",
-      Seq(req("src", Src), req("dst", Dst), opt("iterations", "3"))),
-    Entry("graph.kcore", "K-core decomposition membership.",
-      Seq(req("src", Src), req("dst", Dst), opt("k", "3"),
-        opt("maxRounds", "10"))),
-    Entry("graph.components", "Connected component labels.",
-      Seq(req("src", Src), req("dst", Dst), opt("maxIter", "25"))),
-    Entry("graph.links", "Jaccard link prediction over shared neighbors.",
-      Seq(req("src", Src), req("dst", Dst), opt("minJaccard", "0.5"),
-        opt("maxDegree", "100000"))),
-    Entry("graph.labelprop", "Label-propagation communities (batch-only).",
-      Seq(req("src", Src), req("dst", Dst), opt("iterations", "4"))),
-    Entry("graph.modularity",
-      "Modularity of the label-propagation partition (batch-only).",
-      Seq(req("src", Src), req("dst", Dst), opt("iterations", "4"))),
-    Entry("graph.ppr",
-      "Personalized PageRank from a seed table (TrustRank, batch-only).",
-      Seq(req("src", Src), req("dst", Dst),
-        req("seedsTable", "/data/seeds"),
-        opt("seedColumn", "", "default: first column"),
-        opt("iterations", "5"), opt("damping", "0.85"))),
-    Entry("ts.changepoint",
-      "Exact single changepoint per series (SSE-reduction argmax, batch-only).",
-      Seq(req("groups", ".Payload.After.event_type"),
-        req("order", ".Payload.After.day"),
-        req("value", ".Payload.After.cents"))),
-    Entry("ts.hurst",
-      "Hurst exponent per series by rescaled-range analysis (batch-only).",
-      Seq(req("groups", ".Payload.After.event_type"),
-        req("order", ".Payload.After.day"),
-        req("value", ".Payload.After.cents"))),
-    Entry("graph.seeddist",
-      "Hop distance to the nearest seed by multi-source BFS (batch-only).",
-      Seq(req("src", Src), req("dst", Dst),
-        req("seedsTable", "/data/seeds"),
-        opt("seedColumn", "", "default: first column"),
-        opt("maxHops", "6"))),
-
-    // ---- similarity --------------------------------------------------------
-    Entry("sim.topk", "Top-k cosine neighbors (brute force or IVF).",
-      Seq(req("id", Id), req("vec", Vec), opt("k", "10"),
-        opt("nlist", "-1", "-1 = brute force; >0 = IVF buckets"),
-        opt("maxBucket", "4096"))),
-    Entry("sim.cluster", "Spherical k-means topic assignment.",
-      Seq(req("id", Id), req("vec", Vec), opt("k", "8"))),
-    Entry("sim.quantize", "Scalar int8 quantization of a vector field.",
-      Seq(req("id", Id), req("vec", Vec))),
-    Entry("sim.pca",
-      "Top principal component by exact power iteration (batch-only).",
-      Seq(req("id", Id), req("vec", Vec), opt("iterations", "3"),
-        opt("output", "loadings", "loadings|project|residual (ABTT)"))),
-
-    // ---- linkage / joins --------------------------------------------------
-    Entry("linkage.jw", "Jaro-Winkler fuzzy links within blocks.",
-      Seq(req("id", Id), req("block", ".Payload.After.zip"),
-        req("field", ".Payload.After.name"), opt("minSim", "0.9"),
-        opt("maxBlock", "10000"))),
-    Entry("linkage.score", "Fellegi-Sunter linkage scores (m/u weights).",
-      Seq(req("id", Id), req("block", ".Payload.After.zip"),
-        req("fields", ".Payload.After.name:0.9:0.1"),
-        opt("minScore", "0.0"), opt("maxBlock", "10000"))),
-    Entry("link.clusters", "Entity clusters from fuzzy links.",
-      Seq(req("id", Id), req("block", ".Payload.After.zip"),
-        req("field", ".Payload.After.name"), opt("minSim", "0.9"),
-        opt("maxBlock", "10000"))),
-    Entry("joins.skyline", "Pareto skyline (maximize x, minimize y) per group.",
-      Seq(req("groups", ".Payload.After.lang"), req("x", ".Payload.After.score"),
-        req("y", ".Payload.After.cost"))),
-
-    // ---- privacy -----------------------------------------------------------
-    Entry("privacy.pseudonymize", "Keyed pseudonymization of id fields.",
-      Seq(req("fields", ".Payload.After.user"), opt("secret", "0"))),
-    Entry("privacy.kanon", "K-anonymity verdicts per quasi-identifier group.",
-      Seq(req("fields", ".Payload.After.zip"), opt("k", "2"))),
-    Entry("privacy.ldiv", "L-diversity verdicts for a sensitive field.",
-      Seq(req("fields", ".Payload.After.zip"),
-        req("sensitive", ".Payload.After.diagnosis"), opt("l", "2"))),
-    Entry("privacy.tclose", "T-closeness distances for a sensitive field.",
-      Seq(req("fields", ".Payload.After.zip"),
-        req("sensitive", ".Payload.After.diagnosis"))),
-    Entry("privacy.noise", "Laplace-noised counts per group.",
-      Seq(req("fields", ".Payload.After.zip"), opt("epsilon", "1.0"),
-        opt("seed", "0"))),
-
-    // ---- retrieval ----------------------------------------------------------
-    Entry("retrieval.tfidf", "TF-IDF term weights per document.",
-      Seq(req("id", Id), opt("field", Text), opt("minDf", "2"))),
-    Entry("retrieval.rm3",
-      "BM25 with RM3 pseudo-relevance feedback (batch-only).",
-      Seq(req("id", Id), req("query", "hash join merge"),
-        opt("field", Text), opt("k1", "1.2"), opt("b", "0.75"),
-        opt("fbDocs", "3"), opt("fbTerms", "5"), opt("alpha", "0.6"),
-        opt("topK", "10"))),
-    Entry("retrieval.bm25", "BM25 ranking against a query string.",
-      Seq(req("id", Id), req("query", "spark analytics"), opt("field", Text),
-        opt("k1", "1.2"), opt("b", "0.75"), opt("topK", "10"))),
-    Entry("retrieval.keywords", "Top-k TF-IDF keywords per document.",
-      Seq(req("id", Id), opt("field", Text), opt("k", "10"), opt("minDf", "2"))),
-
-    // ---- sequences / cdc / dq / misc -----------------------------------------
-    Entry("seq.ngrams", "Frequent order-n event sequences per entity.",
-      Seq(req("entity", ".Payload.After.user"), req("order", ".Payload.After.ts"),
-        req("tie", ".Payload.After.event_id"), req("state", ".Payload.After.kind"),
-        opt("n", "3"), opt("minSupport", "2"))),
-    Entry("seq.transitions", "Markov transition counts per entity.",
-      Seq(req("entity", ".Payload.After.user"), req("order", ".Payload.After.ts"),
-        req("tie", ".Payload.After.event_id"), req("state", ".Payload.After.kind"))),
-    Entry("cdc.scd2", "Slowly-changing-dimension type-2 intervals.",
-      Seq(opt("order.field", "", "default: record position"),
-        opt("deleteOp", "delete"))),
-    Entry("dq.validate", "Declarative data-quality checks (; separated).",
-      Seq(req("checks", "not_null:.Payload.After.doc_id"))),
-    Entry("dq.reconcile", "Field-level diff against a reference table.",
-      Seq(req("key", Id), req("compare", ".Payload.After.amount"),
-        req("table", "/data/reference"))),
-    Entry("quality.filter", "Token-count / token-length quality gate.",
-      Seq(opt("field", Text), opt("minTokens", "1"),
-        opt("minMeanTokenLen", "0"), opt("maxMeanTokenLen", "1000000"))),
-    Entry("stats.outliers", "Z-score outlier verdicts per group.",
-      Seq(req("groups", ".Payload.After.lang"),
-        req("value", ".Payload.After.amount"), opt("z", "3"), opt("scale", "2"))),
-    Entry("layout.key", "Z-order / Hilbert interleaved layout key.",
-      Seq(req("fields", ".Payload.After.x,.Payload.After.y"),
-        opt("bits", "16"), opt("kind", "zorder")))
-  )
 
   /** One connector plugin: its summary plus the source-side and
     * destination-side settings ([[graft.pipeline.Runner.source]] /
@@ -567,46 +112,11 @@ object PluginCatalog {
     * `GET /v1/connectors/plugins` — reference
     * `proto/api/v1/api.proto:921-926`, spec shape `:196-218`).
     */
-  def connectorSpecsJson(nameRegex: Option[String] = None): String = {
-    val mapper = graft.functions.JsonOps.mapper
-    val f = mapper.getNodeFactory
-    val pat = nameRegex.filter(_.nonEmpty)
-      .map(java.util.regex.Pattern.compile(_))
-    def params(ss: Seq[Setting]) = {
-      val o = f.objectNode()
-      ss.foreach { s =>
-        val p = f.objectNode()
-        p.put("description", s.doc)
-        p.put("default", if (s.required) "" else s.value)
-        p.put("type", "TYPE_STRING")
-        val vs = f.arrayNode()
-        if (s.required) {
-          val v = f.objectNode()
-          v.put("type", "TYPE_REQUIRED"); v.put("value", "")
-          vs.add(v)
-        }
-        p.set[com.fasterxml.jackson.databind.JsonNode]("validations", vs)
-        o.set[com.fasterxml.jackson.databind.JsonNode](s.name, p)
-      }
-      o
+  def connectorSpecsJson(nameRegex: Option[String] = None): String =
+    specs(connectors, nameRegex)(e => (e.plugin, e.summary)) { (o, e) =>
+      o.set[JsonNode]("source_params", params(e.sourceSettings))
+      o.set[JsonNode]("destination_params", params(e.destSettings))
     }
-    val arr = f.arrayNode()
-    for (e <- connectors.sortBy(_.plugin)
-         if pat.forall(_.matcher(e.plugin).find())) {
-      val o = f.objectNode()
-      o.put("name", e.plugin)
-      o.put("summary", e.summary)
-      o.put("description", e.summary)
-      o.put("version", Version)
-      o.put("author", "graft")
-      o.set[com.fasterxml.jackson.databind.JsonNode](
-        "source_params", params(e.sourceSettings))
-      o.set[com.fasterxml.jackson.databind.JsonNode](
-        "destination_params", params(e.destSettings))
-      arr.add(o)
-    }
-    mapper.writeValueAsString(arr)
-  }
 
   /** Render the catalogue as the reference API's plugin-spec JSON
     * (`ListProcessorPlugins`, `GET /v1/processors/plugins` —
@@ -616,40 +126,50 @@ object PluginCatalog {
     * validations). `nameRegex` filters plugins by name like the
     * reference request's `name` field.
     */
-  def specsJson(nameRegex: Option[String] = None): String = {
+  def specsJson(nameRegex: Option[String] = None): String =
+    specs(entries, nameRegex)(e => (e.plugin, e.summary)) { (o, e) =>
+      o.set[JsonNode]("parameters", params(e.settings))
+    }
+
+  /** One JSON array of plugin specs sorted by name, filtered by
+    * `nameRegex`; `addParams` appends each spec's parameter maps. */
+  private def specs[E](all: Seq[E], nameRegex: Option[String])(
+      nameAndSummary: E => (String, String))(
+      addParams: (ObjectNode, E) => Unit): String = {
     val mapper = graft.functions.JsonOps.mapper
-    val f = mapper.getNodeFactory
     val pat = nameRegex.filter(_.nonEmpty)
       .map(java.util.regex.Pattern.compile(_))
-    val arr = f.arrayNode()
-    for (e <- entries.sortBy(_.plugin)
-         if pat.forall(_.matcher(e.plugin).find())) {
-      val o = f.objectNode()
-      o.put("name", e.plugin)
-      o.put("summary", e.summary)
-      o.put("description",
-        if (e.notes.nonEmpty) s"${e.summary} ${e.notes}" else e.summary)
+    val arr = mapper.getNodeFactory.arrayNode()
+    for (((name, summary), e) <- all.map(e => (nameAndSummary(e), e)).sortBy(_._1._1)
+         if pat.forall(_.matcher(name).find())) {
+      val o = arr.addObject()
+      o.put("name", name)
+      o.put("summary", summary)
+      o.put("description", summary)
       o.put("version", Version)
       o.put("author", "graft")
-      val params = f.objectNode()
-      e.settings.foreach { s =>
-        val p = f.objectNode()
-        p.put("description", s.doc)
-        p.put("default", if (s.required) "" else s.value)
-        p.put("type", "TYPE_STRING")
-        val vs = f.arrayNode()
-        if (s.required) {
-          val v = f.objectNode()
-          v.put("type", "TYPE_REQUIRED"); v.put("value", "")
-          vs.add(v)
-        }
-        p.set[com.fasterxml.jackson.databind.JsonNode]("validations", vs)
-        params.set[com.fasterxml.jackson.databind.JsonNode](s.name, p)
-      }
-      o.set[com.fasterxml.jackson.databind.JsonNode]("parameters", params)
-      arr.add(o)
+      addParams(o, e)
     }
     mapper.writeValueAsString(arr)
+  }
+
+  /** A `config.v1.Parameter` map: description, default, type and a
+    * `TYPE_REQUIRED` validation on required settings. */
+  private def params(ss: Seq[Setting]): ObjectNode = {
+    val f = graft.functions.JsonOps.mapper.getNodeFactory
+    val o = f.objectNode()
+    ss.foreach { s =>
+      val p = o.putObject(s.name)
+      p.put("description", s.doc)
+      p.put("default", if (s.required) "" else s.value)
+      p.put("type", "TYPE_STRING")
+      val vs = p.putArray("validations")
+      if (s.required) {
+        val v = vs.addObject()
+        v.put("type", "TYPE_REQUIRED"); v.put("value", "")
+      }
+    }
+    o
   }
 
   /** Engine version string served by `/info` and stamped on plugin
@@ -660,10 +180,10 @@ object PluginCatalog {
   def renderMarkdown(): String = {
     val sb = new StringBuilder
     sb.append("# Plugin catalogue\n\n")
-    sb.append("Generated from `graft.ops.PluginCatalog` — run " +
-      "`sbt \"runMain graft.ops.PluginCatalog\"` to regenerate; " +
-      "`PluginCatalogSpec` fails if this file, the catalogue, and " +
-      "`Registry.factories` disagree.\n\n")
+    sb.append("Generated from `graft.ops.Registry.entries`, the one " +
+      "declaration each processor's factory reads its settings through " +
+      "— run `sbt \"runMain graft.ops.PluginCatalog\"` to regenerate; " +
+      "`PluginCatalogSpec` fails if this file is stale.\n\n")
     sb.append(s"${entries.size} named plugins. Field references use the " +
       "OpenCDC record paths (`.Payload.After.<field>`, `.Key`, " +
       "`.Metadata.<key>`). Custom plugins install via " +
@@ -696,10 +216,10 @@ object PluginCatalog {
     for (g <- order; e <- groups(g).sortBy(_.plugin)) {
       sb.append(s"## `${e.plugin}`\n\n${e.summary}\n\n")
       if (e.settings.nonEmpty) {
-        sb.append("| setting | required | default / example | notes |\n")
+        sb.append("| setting | required | default | notes |\n")
         sb.append("| --- | --- | --- | --- |\n")
         e.settings.foreach { s =>
-          val v = if (s.value.isEmpty) "" else s"`${s.value}`"
+          val v = if (s.required || s.value.isEmpty) "" else s"`${s.value}`"
           sb.append(s"| `${s.name}` | ${if (s.required) "yes" else "no"} " +
             s"| $v | ${s.doc} |\n")
         }

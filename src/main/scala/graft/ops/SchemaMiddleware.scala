@@ -17,29 +17,29 @@ import graft.model.Ref
   * ([[SchemaRegistry]], cached driver-side).
   */
 object SchemaMiddleware {
-  private def enabled(settings: Map[String, String], key: String): Boolean =
-    settings.getOrElse(key, "true").trim.toBoolean
-
   /** Test seam for the registry transport. */
   @volatile var registryTransport: HttpTransport = HttpTransport.Default
 
-  private def resolveSchema(settings: Map[String, String]): Option[(Int, String)] =
-    settings.get("sdk.schema.avro") match {
-      case Some(schema) => Some((settings.getOrElse("sdk.schema.id", "1").toInt, schema))
+  def wrap(inner: Processor, settings: Map[String, String]): Processor = {
+    def parsed[A](key: String, kind: String, v: String)(f: String => A): A =
+      Registry.Settings.parse(inner.plugin, key, kind, v)(f)
+    def idOf(v: String) = parsed("sdk.schema.id", "an integer", v)(_.toInt)
+    def enabled(key: String) =
+      parsed(key, "true or false", settings.getOrElse(key, "true"))(_.toBoolean)
+    val resolved = settings.get("sdk.schema.avro") match {
+      case Some(schema) => Some((idOf(settings.getOrElse("sdk.schema.id", "1")), schema))
       case None => settings.get("sdk.schema.registry.url").map { url =>
         SchemaRegistry.resolve(url, settings.get("sdk.schema.subject"),
-          settings.get("sdk.schema.id").map(_.toInt), registryTransport)
+          settings.get("sdk.schema.id").map(idOf), registryTransport)
       }
     }
-
-  def wrap(inner: Processor, settings: Map[String, String]): Processor =
-    resolveSchema(settings) match {
+    resolved match {
       case None => inner
       case Some((schemaId, schema)) =>
-        val decodePayload = enabled(settings, "sdk.schema.decode.payload.enabled")
-        val encodePayload = enabled(settings, "sdk.schema.encode.payload.enabled")
-        val decodeKey = enabled(settings, "sdk.schema.decode.key.enabled")
-        val encodeKey = enabled(settings, "sdk.schema.encode.key.enabled")
+        val decodePayload = enabled("sdk.schema.decode.payload.enabled")
+        val encodePayload = enabled("sdk.schema.encode.payload.enabled")
+        val decodeKey = enabled("sdk.schema.decode.key.enabled")
+        val encodeKey = enabled("sdk.schema.encode.key.enabled")
         new Processor {
           val plugin: String = inner.plugin
           override def transform(df: DataFrame): DataFrame = {
@@ -57,4 +57,5 @@ object SchemaMiddleware {
           }
         }
     }
+  }
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.analytics.{Dedup, Multimodal, Retrieval, Sampling, Similarity, Text, Urls}
+import graft.analytics.{Dedup, Fences, Multimodal, Retrieval, Sampling, Similarity, Text, Urls}
 import graft.streaming.StreamingOps
 
 /** Training-data pipeline queries (dedup / similarity / text /
@@ -86,7 +86,7 @@ object Analytics {
     // laws are order-insensitive, so the final state must equal the
     // one-shot batch vote. Oracle = dedup_exact's verbatim.
     "dedup_exact_stream" -> ((s, dir) => {
-      val state = Twins.tempDir("dedup_exact_stream")
+      val state = Fences.tempDir("dedup_exact_stream")
       Twins.twoBatch(s, t(s, dir, "documents").select(col("doc_id"), col("text")),
         col("doc_id") % 2 === 0)(Twins.sink(
         StreamingOps.exactDedupSink(state, "doc_id", "text")))
@@ -137,7 +137,7 @@ object Analytics {
     "dedup_url_stream" -> ((s, dir) => {
       val input = t(s, dir, "documents")
         .select(col("doc_id"), noisyUrl(col("doc_id")).as("url"))
-      val base = Twins.tempDir("url_stream")
+      val base = Fences.tempDir("url_stream")
       Twins.twoBatch(s, input, col("doc_id") % 2 === 0)(Twins.sink(
         StreamingOps.urlDedupSink(
           s"$base/rows", s"$base/state", "doc_id", "url")))
@@ -688,7 +688,7 @@ object Analytics {
     "text_nb_stream" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .withColumn("_lab", col("lang") === "en")
-      val modelDir = Twins.tempDir("nb_model")
+      val modelDir = Fences.tempDir("nb_model")
       Text.nbTrain(docs, "doc_id", "text", "_lab")
         .write.mode("overwrite").parquet(s"$modelDir/model")
       Text.nbPrior(docs, "_lab")
@@ -719,7 +719,7 @@ object Analytics {
     "text_divergence_stream" -> ((s, dir) => {
       val input = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"))
-      val state = Twins.tempDir("divergence_stream")
+      val state = Fences.tempDir("divergence_stream")
       Twins.twoBatch(s, input, col("doc_id") % 2 === 0)(Twins.sink(
         StreamingOps.stratumCountSink(state, "lang", "text")))
       Text.jsDivergenceFromCounts(s.read.parquet(s"$state/batch=1"))
@@ -753,7 +753,7 @@ object Analytics {
       val docs = t(s, dir, "documents")
       val model = Text.sboTrain(docs.filter(col("lang") === "en"),
         "doc_id", "text")
-      val out = Twins.tempDir("sbo_stream") + "/scores"
+      val out = Fences.tempDir("sbo_stream") + "/scores"
       Twins.twoBatch(s, docs.select(col("doc_id"), col("text")),
         col("doc_id") % 2 === 0)(_.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -940,7 +940,7 @@ object Analytics {
       val input = t(s, dir, "documents").select(col("doc_id"), col("lang"),
         size(filter(split(trim(lower(col("text"))), "\\s+"),
           x => x =!= "")).cast("long").as("n_toks"))
-      val state = Twins.tempDir("unimax_stream")
+      val state = Fences.tempDir("unimax_stream")
       Twins.twoBatch(s, input, col("doc_id") % 2 === 0)(Twins.sink(
         StreamingOps.stratumSumSink(state, "lang", "n_toks")))
       Sampling.unimaxFromCounts(s.read.parquet(s"$state/batch=1"),
@@ -966,7 +966,7 @@ object Analytics {
       val input = t(s, dir, "documents").select(col("doc_id"), col("lang"),
         (size(filter(split(trim(lower(col("text"))), "\\s+"),
           x => x =!= "")).cast("double") / lit(100.0)).as("loss"))
-      val state = Twins.tempDir("doremi_stream")
+      val state = Fences.tempDir("doremi_stream")
       val sink = Twins.sink(
         StreamingOps.keyedMeanSink(state, "lang", "step", "loss"))
       Twins.twoBatch(s, input, col("doc_id") % 2 === 0)(in =>
@@ -984,7 +984,7 @@ object Analytics {
     "sample_mixture_kl_stream" -> ((s, dir) => {
       val input = t(s, dir, "documents").select(col("doc_id"), col("lang"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
-      val state = Twins.tempDir("mixkl_stream")
+      val state = Fences.tempDir("mixkl_stream")
       val targets = Seq(("en", 0.5), ("fr", 0.2), ("es", 0.15),
         ("zh", 0.1), ("de", 0.05))
       Twins.twoBatch(s, input, col("doc_id") % 2 === 0)(Twins.sink(
@@ -1005,7 +1005,7 @@ object Analytics {
     // per-batch threshold would drop tokens whose total crosses it
     // across batches); fit over the final state = the batch fit
     "text_zipf_stream" -> ((s, dir) => {
-      val state = Twins.tempDir("zipf_stream")
+      val state = Fences.tempDir("zipf_stream")
       Twins.twoBatch(s, t(s, dir, "documents").select(col("doc_id"), col("text")),
         col("doc_id") % 2 === 0)(Twins.sink(
         StreamingOps.vocabCountSink(state, "text")))
@@ -1027,7 +1027,7 @@ object Analytics {
     // bucket); first buckets are MINs over the merged state, so the
     // fit over the final state = the batch fit — oracle verbatim.
     "text_heaps_stream" -> ((s, dir) => {
-      val state = Twins.tempDir("heaps_stream")
+      val state = Fences.tempDir("heaps_stream")
       val sink = Twins.sink(
         StreamingOps.stratumCountSink(state, "_hb", "text"))
       Twins.twoBatch(s, t(s, dir, "documents").select(col("doc_id"), col("text")),
@@ -1072,7 +1072,7 @@ object Analytics {
           concat_ws(" ", slice(toks, lit(1), size(toks) - 1)).as("text"))
       val hist = Dedup.winnowHistoryPostings(base, "doc_id", "text")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val out = Twins.tempDir("winnow_stream")
+      val out = Fences.tempDir("winnow_stream")
       try Twins.twoBatch(s, streamDocs, col("doc_id") % 40 === 0)(Twins.sink(
         StreamingOps.winnowTriageSink(out, hist, "doc_id", "text")))
       finally hist.unpersist()

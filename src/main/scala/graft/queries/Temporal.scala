@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.analytics.{Baskets, Graph, Joins, Layout, Sampling, Sequences, Sketch, Stats, Temporal => TOps}
+import graft.analytics.{Baskets, Fences, Graph, Joins, Layout, Sampling, Sequences, Sketch, Stats, Temporal => TOps}
 
 /** Temporal-join and sketch gate rows. The DuckDB oracles are
   * independent formulations: ASOF LEFT JOIN for the as-of operator
@@ -78,7 +78,7 @@ object Temporal {
       val secs = tsEpochSeconds(ev)
       val input = ev.filter(col("event_type").isin("click", "view"))
         .select(col("user_id"), col("event_id"), secs.as("ts_s"))
-      val dimDir = Twins.tempDir("asof_dim")
+      val dimDir = Fences.tempDir("asof_dim")
       ev.filter(col("event_type") === "purchase")
         .select(col("user_id").as("key"), secs.as("ts"),
           col("event_id"), col("value"))
@@ -296,7 +296,7 @@ object Temporal {
         (col("p_partkey") + 5000000L).as("p_partkey"),
         expr("substring(p_name, 1, length(p_name) - 1)").as("p_name"),
         col("blk"))
-      val out = Twins.tempDir("jw_stream")
+      val out = Fences.tempDir("jw_stream")
       Twins.twoBatch(s, noisy, col("p_partkey") % 2 === 0)(Twins.sink(
         graft.streaming.StreamingOps.fuzzyLinkSink(
           p, "p_partkey", "blk", "p_name", minSim = 0.95, outDir = out)))
@@ -1289,7 +1289,7 @@ object Temporal {
       val input = ev.select(col("event_type"), col("user_id"),
         tsEpochSeconds(ev).as("ts_s"))
       val split = 1705363200L // 2024-01-16T00:00:00Z
-      val state = Twins.tempDir("hll_stream")
+      val state = Fences.tempDir("hll_stream")
       Twins.twoBatch(s, input, col("ts_s") <= split)(Twins.sink(
         graft.streaming.StreamingOps.hllRegisterSink(
           state, Seq("event_type"), "user_id")))
@@ -1306,7 +1306,7 @@ object Temporal {
       val input = ev.select(col("event_type"), col("user_id"),
         tsEpochSeconds(ev).as("ts_s"))
       val split = 1705363200L
-      val state = Twins.tempDir("kmv_stream")
+      val state = Fences.tempDir("kmv_stream")
       Twins.twoBatch(s, input, col("ts_s") <= split)(Twins.sink(
         graft.streaming.StreamingOps.kmvSink(
           state, Seq("event_type"), "user_id", k = 64)))
@@ -1323,7 +1323,7 @@ object Temporal {
       val input = ev.select(col("event_type"), col("user_id"),
         tsEpochSeconds(ev).as("ts_s"))
       val split = 1705363200L
-      val state = Twins.tempDir("kmv_setops_stream")
+      val state = Fences.tempDir("kmv_setops_stream")
       Twins.twoBatch(s, input, col("ts_s") <= split)(Twins.sink(
         graft.streaming.StreamingOps.kmvSink(
           state, Seq("event_type"), "user_id", k = 64)))
@@ -1341,7 +1341,7 @@ object Temporal {
         .select(col("event_type"), col("value"), col("event_id"),
           tsEpochSeconds(ev).as("ts_s"))
       val split = 1705363200L
-      val state = Twins.tempDir("kll_stream")
+      val state = Fences.tempDir("kll_stream")
       Twins.twoBatch(s, input, col("ts_s") <= split)(Twins.sink(
         graft.streaming.StreamingOps.kllSink(
           state, Seq("event_type"), "value", "event_id", k = 64)))
@@ -1358,7 +1358,7 @@ object Temporal {
       val input = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), tsEpochSeconds(ev).as("ts_s"))
       val split = 1705363200L
-      val state = Twins.tempDir("bloom_stream")
+      val state = Fences.tempDir("bloom_stream")
       Twins.twoBatch(s, input, col("ts_s") <= split)(Twins.sink(
         graft.streaming.StreamingOps.bloomSink(
           state, "user_id", mBits = 1 << 16, kHashes = 4)))
@@ -1376,7 +1376,7 @@ object Temporal {
         when(col("event_type") === "error", lit("delete"))
           .otherwise(lit("update")).as("op"), col("value"))
       val split = 1705363200L
-      val state = Twins.tempDir("scd2_stream")
+      val state = Fences.tempDir("scd2_stream")
       Twins.twoBatch(s, input, col("pos") <= split)(Twins.sink(
         graft.streaming.StreamingOps.scd2Sink(
           state, Seq("user_id"), Seq("pos", "event_id"), "pos", "op")))
@@ -1499,7 +1499,7 @@ object Temporal {
       val input = t(s, dir, "documents").select(col("doc_id"),
           explode(split(trim(lower(col("text"))), "\\s+")).as("token"))
         .filter(col("token") =!= "")
-      val state = Twins.tempDir("cms_stream")
+      val state = Fences.tempDir("cms_stream")
       Twins.twoBatch(s, input, col("doc_id") < 250L)(Twins.sink(
         graft.streaming.StreamingOps.cmsCounterSink(
           state, "token", depth = 4, width = 16)))
@@ -1604,7 +1604,7 @@ object Temporal {
         col("c_custkey").as("cust"), lit(null).cast("long").as("o_orderkey"),
         lit(null).cast("double").as("o_total"), col("c_name"),
         col("c_mktsegment").as("c_seg"))
-      val state = Twins.tempDir("join_view")
+      val state = Fences.tempDir("join_view")
       Twins.twoBatch(s, ords.unionAll(custs),
         when(col("_side") === "l", col("o_orderkey") % 2 === 0)
           .otherwise(col("cust") % 3 =!= 0))(Twins.sink(
@@ -1790,7 +1790,7 @@ object Temporal {
           (col("value").cast(d2) * lit(100)).cast("long").as("cents"))
         .select(col("event_type"), expr("_secs div 86400").as("day"),
           col("cents"))
-      val state = Twins.tempDir("cp_stream")
+      val state = Fences.tempDir("cp_stream")
       Twins.twoBatch(s, input, col("day") % 2 === 0)(Twins.sink(
         graft.streaming.StreamingOps.keyedMeanSink(
           state, "event_type", "day", "cents")))
@@ -1809,7 +1809,7 @@ object Temporal {
           (col("value").cast(d2) * lit(100)).cast("long").as("cents"))
         .select(col("event_type"), expr("_secs div 86400").as("day"),
           col("cents"))
-      val state = Twins.tempDir("hurst_stream")
+      val state = Fences.tempDir("hurst_stream")
       Twins.twoBatch(s, input, col("day") % 2 === 0)(Twins.sink(
         graft.streaming.StreamingOps.keyedMeanSink(
           state, "event_type", "day", "cents")))
@@ -1987,7 +1987,7 @@ object Temporal {
       val input = ev.select(col("event_type"), tsEpochSeconds(ev).as("ts_s"),
         col("value"))
       val split = 1705363200L
-      val state = Twins.tempDir("hist_stream")
+      val state = Fences.tempDir("hist_stream")
       Twins.twoBatch(s, input, col("ts_s") <= split)(Twins.sink(
         graft.streaming.StreamingOps.histogramBinSink(
           state, Seq("event_type"), "value",

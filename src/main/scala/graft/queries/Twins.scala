@@ -1,13 +1,10 @@
 package graft.queries
 
-import java.nio.file.{Files, Path}
-import java.util.Comparator
-import java.util.concurrent.ConcurrentLinkedQueue
-
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.analytics.Fences
 import graft.pipeline.StreamStarts
 import graft.streaming.StreamingOps
 
@@ -88,31 +85,8 @@ private[queries] object Twins {
     * row. */
   def rowLocal(s: SparkSession, input: DataFrame, first: Column)(
       fn: DataFrame => DataFrame): DataFrame = {
-    val out = tempDir("twin")
+    val out = Fences.tempDir("twin")
     twoBatch(s, input, first)(sink(StreamingOps.rowLocalSink(out)(fn)))
     s.read.parquet(s"$out/b*")
-  }
-
-  private val dirs = new ConcurrentLinkedQueue[Path]
-  private lazy val cleanup = sys.addShutdownHook {
-    dirs.forEach { d =>
-      try {
-        val w = Files.walk(d)
-        try w.sorted(Comparator.reverseOrder[Path]).forEach(p => Files.deleteIfExists(p))
-        finally w.close()
-      } catch { // a directory an overwrite removed is already gone
-        case _: java.io.IOException | _: java.io.UncheckedIOException =>
-      }
-    }
-  }
-
-  /** A fresh scratch directory, deleted with everything in it when
-    * the JVM exits. A twin's result is a lazy frame over files here,
-    * so nothing earlier may delete it. */
-  def tempDir(prefix: String): String = {
-    cleanup
-    val d = Files.createTempDirectory(prefix)
-    dirs.add(d)
-    d.toString
   }
 }

@@ -2,26 +2,27 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{PluginCatalog, Registry}
+import graft.ops.{CloneProc, FilterProc, PluginCatalog, Registry, SqlProc}
 
 /** The plugin catalogue cannot rot: its entry set must equal the
   * registry's key set, every example must construct through the real
-  * factory, and the committed PLUGINS.md must equal a regeneration.
+  * factory, every setting a factory reads must be declared, and the
+  * committed PLUGINS.md must equal a regeneration.
   */
 class PluginCatalogSpec extends AnyFunSuite {
 
   test("catalogue covers exactly the registry's plugins") {
-    val catalogued = PluginCatalog.entries.map(_.plugin).toSet
+    val catalogued = Registry.entries.map(_.plugin).toSet
     val registered = Registry.factories.keySet
     assert(catalogued == registered,
       s"missing from catalogue: ${(registered -- catalogued).toSeq.sorted}; " +
         s"stale in catalogue: ${(catalogued -- registered).toSeq.sorted}")
-    assert(PluginCatalog.entries.map(_.plugin).distinct.size ==
-      PluginCatalog.entries.size, "duplicate catalogue entries")
+    assert(Registry.entries.map(_.plugin).distinct.size ==
+      Registry.entries.size, "duplicate catalogue entries")
   }
 
   test("every example constructs through Registry.create") {
-    PluginCatalog.entries.foreach { e =>
+    Registry.entries.foreach { e =>
       try Registry.create(e.plugin, e.example)
       catch {
         case ex: Exception =>
@@ -31,11 +32,48 @@ class PluginCatalogSpec extends AnyFunSuite {
   }
 
   test("every entry has a one-line summary and documented settings") {
-    PluginCatalog.entries.foreach { e =>
+    Registry.entries.foreach { e =>
       assert(e.summary.nonEmpty && !e.summary.contains('\n'), e.plugin)
       assert(e.settings.map(_.name).distinct.size == e.settings.size,
         s"${e.plugin}: duplicate setting rows")
     }
+  }
+
+  test("a factory reads required settings, given values and declared defaults") {
+    val sql = Registry.factories("sql")
+    assert(sql(Map("query" -> "q")) == SqlProc("q", "records"))
+    assert(sql(Map("query" -> "q", "view" -> "")) == SqlProc("q", ""),
+      "a value given explicitly wins, even empty")
+    val e = intercept[IllegalArgumentException](sql(Map("view" -> "v")))
+    assert(e.getMessage == "sql: missing required setting: query")
+    assert(Registry.factories("clone")(Map("count" -> " 2 ")) == CloneProc(2))
+  }
+
+  test("a factory reading a setting its entry does not declare fails") {
+    val entry = Registry.Entry("probe.undeclared", "Reads an undeclared setting.",
+      Seq(Registry.Setting("declared", required = false, "1"))) { s =>
+      s.str("undeclared"); FilterProc()
+    }
+    val e = intercept[IllegalStateException](
+      entry.build(new Registry.Settings(entry, Map("undeclared" -> "x"))))
+    assert(e.getMessage == "probe.undeclared: reads undeclared setting: undeclared")
+  }
+
+  test("a malformed setting value names the plugin, the setting and the value") {
+    def message(plugin: String, settings: (String, String)*): String =
+      intercept[IllegalArgumentException](
+        Registry.create(plugin, settings.toMap)).getMessage
+    assert(message("sample.kfold", "id" -> ".Payload.After.id", "k" -> "abc") ==
+      "sample.kfold: setting k must be an integer, got \"abc\"")
+    assert(message("sample.hash", "fraction" -> "half") ==
+      "sample.hash: setting fraction must be a number, got \"half\"")
+    assert(message("text.gopher", "drop" -> "yes") ==
+      "text.gopher: setting drop must be true or false, got \"yes\"")
+    assert(message("sample.mixture", "stratum" -> ".Payload.After.lang",
+      "id" -> ".Payload.After.id", "targets" -> "en:0.8,de:lots") ==
+      "sample.mixture: targets entry must be name:number, got de:lots")
+    assert(message("filter", "sdk.schema.avro" -> "{}", "sdk.schema.id" -> "one") ==
+      "filter: setting sdk.schema.id must be an integer, got \"one\"")
   }
 
   test("committed PLUGINS.md matches a regeneration") {

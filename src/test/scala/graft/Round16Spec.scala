@@ -514,7 +514,7 @@ class Round16Spec extends AnyFunSuite {
       val all = graft.functions.JsonOps.parse(get("/v1/processors/plugins"))
       assert(all.isArray)
       // one spec per catalogue entry == per registry factory
-      assert(all.size() == graft.ops.PluginCatalog.entries.size)
+      assert(all.size() == graft.ops.Registry.entries.size)
       val names = (0 until all.size()).map(all.get(_).get("name").asText).toSet
       assert(names == graft.ops.Registry.factories.keySet)
       // spec shape: required settings carry a TYPE_REQUIRED validation
@@ -523,6 +523,12 @@ class Round16Spec extends AnyFunSuite {
       val p = fieldSet.get("parameters").get("field")
       assert(p.get("validations").get(0).get("type").asText == "TYPE_REQUIRED")
       assert(fieldSet.get("version").asText.startsWith("v"))
+      // served defaults are the ones the factories run with
+      def params(name: String) = (0 until all.size()).map(all.get)
+        .find(_.get("name").asText == name).get.get("parameters")
+      assert(params("text.quality").get("field").get("default").asText == ".Payload.After")
+      assert(params("text.c4").get("badWords").get("default").asText == "")
+      assert(params("sketch.bloom").has("field"))
       // name-regex filter narrows like the reference request
       val deduped = graft.functions.JsonOps.parse(
         get("/v1/processors/plugins?name=%5Ededup%5C."))

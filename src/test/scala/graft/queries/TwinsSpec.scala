@@ -102,23 +102,36 @@ class TwinsSpec extends AnyFunSuite {
 
   test("tempDir directories and their contents are deleted when the JVM exits") {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val p = new ProcessBuilder(javaBin, "-cp", System.getProperty("java.class.path"),
-      "graft.queries.TwinsTempDirProbe").redirectErrorStream(true).start()
+    val addOpens = scala.jdk.CollectionConverters.ListHasAsScala(
+      java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+      .asScala.filter(_.startsWith("--add-opens"))
+    val cmd = Seq(javaBin, "-Xmx512m") ++ addOpens ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.queries.TwinsTempDirProbe")
+    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
     val out = new String(p.getInputStream.readAllBytes()).trim
     assert(p.waitFor() == 0, out)
-    val dirs = out.linesIterator.toSeq
-    assert(dirs.size == 2, out)
+    val dirs = out.linesIterator.filter(_.startsWith("DIR ")).map(_.drop(4)).toSeq
+    assert(dirs.size == 3, out)
     dirs.foreach(d => assert(!new java.io.File(d).exists, s"$d survived exit"))
   }
 }
 
-/** Makes two twin scratch directories with nested files, prints their
+/** Makes two twin scratch directories and one operator spill
+  * directory ([[graft.analytics.Fences.spillDir]] of a local session
+  * without a checkpoint dir), each with nested files, prints their
   * paths and exits; [[TwinsSpec]] checks that they are gone. */
 object TwinsTempDirProbe {
-  def main(args: Array[String]): Unit = Seq("probe_a", "probe_b").foreach { prefix =>
-    val d = Twins.tempDir(prefix)
-    val nested = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d, "b0", "part"))
-    java.nio.file.Files.writeString(nested.resolve("x.parquet"), "x")
-    println(d)
+  def main(args: Array[String]): Unit = {
+    import graft.analytics.Fences
+    val sc = new org.apache.spark.SparkContext(new org.apache.spark.SparkConf()
+      .setMaster("local[1]").setAppName("probe").set("spark.ui.enabled", "false"))
+    val dirs = try Seq(Fences.tempDir("probe_a"), Fences.tempDir("probe_b"),
+      Fences.spillDir(sc, "probe", "probe_spill"))
+    finally sc.stop()
+    dirs.foreach { d =>
+      val nested = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d, "b0", "part"))
+      java.nio.file.Files.writeString(nested.resolve("x.parquet"), "x")
+      println(s"DIR $d")
+    }
   }
 }
