@@ -843,40 +843,21 @@ object Dedup {
     * dup clusters never need it.
     *
     * Input: (aCol, bCol) id pairs. Output: (id, label).
-    *
-    * `checkpointDir`: when set, every round truncates lineage by
-    * writing to RELIABLE storage (parquet under the dir) instead of
-    * `localCheckpoint` — localCheckpoint blocks live on executors and
-    * die with them, so on a real cluster with dynamic allocation or
-    * preemption the loop would recompute from a lost leaf or fail;
-    * pointing this at HDFS/S3 makes every round a durable leaf. The
-    * caller owns the directory's lifecycle (safe to delete after the
-    * RESULT is consumed or itself persisted).
     */
   def components(pairs: DataFrame, aCol: String = "id_a",
                  bCol: String = "id_b", maxIter: Int = 25,
-                 driverEdgeCap: Long = 1000000L,
-                 checkpointDir: Option[String] = None): DataFrame = {
+                 driverEdgeCap: Long = 1000000L): DataFrame = {
     // LINEAGE TRUNCATION, not persist-chains: each round references
     // `labels` twice (directly and inside the neighbor-min join), so a
     // lineage that nests round over round doubles the recompute per
     // round on any cache miss — observed as 2^iter blowup (110 s for a
-    // 667-node graph) before eager localCheckpoint made every round's
-    // result a storage-backed leaf.
-    var ckptId = 0
-    def truncate(df: DataFrame): DataFrame = checkpointDir match {
-      case Some(dir) =>
-        val p = s"$dir/cc-$ckptId"
-        ckptId += 1
-        df.write.mode("overwrite").parquet(p)
-        df.sparkSession.read.parquet(p)
-      case None => df.localCheckpoint(true)
-    }
+    // 667-node graph) before an eager [[Fences.fence]] made every
+    // round's result a storage-backed leaf.
     // both edge directions in ONE pass (explode, not union of two
     // selects over `pairs`): the union form references the caller's
-    // pair derivation twice, replaying it twice inside this truncate
+    // pair derivation twice, replaying it twice inside this fence
     // (r18, guide §2.4: same rows, one scan)
-    val sym = truncate(pairs.select(explode(array(
+    val sym = fence(pairs.select(explode(array(
         struct(col(aCol).as("u"), col(bCol).as("v")),
         struct(col(bCol).as("u"), col(aCol).as("v")))).as("_e"))
       .select(col("_e.u").as("u"), col("_e.v").as("v"))
@@ -893,7 +874,7 @@ object Dedup {
       val small = driverComponents(sym)
       if (small.isDefined) return small.get
     }
-    var labels = truncate(sym.select(col("u").as("id")).distinct()
+    var labels = fence(sym.select(col("u").as("id")).distinct()
       .withColumn("label", col("id")))
     var changed = 1L
     var iter = 0
@@ -901,7 +882,7 @@ object Dedup {
       val nbrMin = sym
         .join(labels.select(col("id").as("v"), col("label").as("vl")), "v")
         .groupBy(col("u").as("id")).agg(min(col("vl")).as("nl"))
-      val next = truncate(labels.join(nbrMin, Seq("id"), "left")
+      val next = fence(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("nl"), col("label"))).as("label"),
           (col("nl") < col("label")).as("moved")))
@@ -1025,13 +1006,8 @@ object Dedup {
     // re-CODEGENS — the whole simhash/components lineage per
     // reference (the kmvSetOps/kllMerge multi-reference trap). The
     // labels are (doc_id, cluster_id) pairs, so the fence costs one
-    // tiny build. Reliable checkpoint when a dir is set (cluster
-    // deployments), executor-local otherwise.
-    val cl0 = clusters(df, idCol, textCol, maxHamming)
-    val cl =
-      if (cl0.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        cl0.checkpoint(true)
-      else cl0.localCheckpoint(true)
+    // tiny build.
+    val cl = fence(clusters(df, idCol, textCol, maxHamming))
     val sizes = cl.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
     cl.join(sizes, Seq("cluster_id"))
@@ -1253,15 +1229,6 @@ object Dedup {
 
   // ---- winnowing fingerprints (Schleimer, Wilkerson, Aiken 2003) ----
 
-  /** The fence every winnowing stage shares — same contract as
-    * kmvSetOps/softWeights: reliable checkpoint when a dir is set
-    * (cluster deployments), executor-local otherwise.
-    */
-  private def winnowFence(d: DataFrame): DataFrame =
-    if (d.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      d.checkpoint(true)
-    else d.localCheckpoint(true)
-
   /** The (doc_id, i, h, m) word-k-gram hash frame winnowing selects
     * from: gram index i is 1-based, m = #grams, h = FNV-1a of the
     * space-joined gram (signed 64-bit — selection compares in the
@@ -1329,11 +1296,11 @@ object Dedup {
   def winnowSpans(df: DataFrame, idCol: String, textCol: String,
                   k: Int = 4, w: Int = 8, maxDf: Int = 64): DataFrame = {
     require(maxDf >= 1, s"winnow: maxDf=$maxDf")
-    val fps = winnowFence(winnowFingerprints(df, idCol, textCol, k, w))
+    val fps = fence(winnowFingerprints(df, idCol, textCol, k, w))
     val dfreq = fps.select(col("doc_id"), col("h")).distinct()
       .groupBy(col("h")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
-    // no winnowFence here (r18): keep is referenced exactly once and
+    // no fence here (r18): keep is referenced exactly once and
     // [[boundedSelfPairs]] fences its input itself — a second fence
     // would materialize the same posting table twice
     val keep = fps.join(dfreq.select(col("h")), "h")
@@ -1366,7 +1333,7 @@ object Dedup {
                             textCol: String, k: Int = 4, w: Int = 8,
                             maxDf: Int = 64): DataFrame = {
     require(maxDf >= 1, s"winnow: maxDf=$maxDf")
-    val fps = winnowFence(
+    val fps = fence(
       winnowFingerprints(history, idCol, textCol, k, w)
         .select(col("doc_id").as("hist_id"), col("h")).distinct())
     val dfreq = fps.groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -1420,13 +1387,13 @@ object Dedup {
                   maxDf: Int = 64): DataFrame = {
     require(minShared >= 1 && maxDf >= 1,
       s"winnow: minShared=$minShared maxDf=$maxDf")
-    val fps = winnowFence(
+    val fps = fence(
       winnowFingerprints(df, idCol, textCol, k, w)
         .select(col("doc_id"), col("h")).distinct())
     val dfreq = fps.groupBy(col("h"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
-    // no winnowFence (r18): single reference, boundedSelfPairs fences
+    // no fence (r18): single reference, boundedSelfPairs fences
     // its own input
     val keep = fps.join(dfreq.select(col("h")), "h")
     boundedSelfPairs(keep, Seq("h"), "doc_id", cap = 256)

@@ -77,7 +77,6 @@ object Graph {
       damping: Double = 0.85,
       deterministic: Boolean = false,
       eager: Boolean = true,
-      checkpointDir: Option[String] = None,
       maxInDegree: Int = 1000000,
       onFences: Seq[DataFrame] => Unit = null): DataFrame = {
     require(iterations >= 1 && iterations <= 50, s"iterations=$iterations")
@@ -186,25 +185,9 @@ object Graph {
         onFences(Seq(ew, nodes, e) ++ Option(prevSum))
       return ranks
     }
-    // Like Dedup.components, the iterative operator is EAGER by
-    // default: the final table is spilled to parquet and read back so
-    // the loop-invariant caches can be released here instead of
-    // leaking into the caller's session. Parquet-spill, NOT
-    // localCheckpoint: Dataset.localCheckpoint plans through .rdd,
-    // which bypasses AQE — measured 8 s of extra sort-merge work on
-    // the sf0.1 gate graph where the adaptive plan broadcasts. Spill
-    // dir: explicit `checkpointDir`, else [[Fences.spillDir]]
-    // (`eager = false` opts out and leaves the caches to the caller).
-    val dir = checkpointDir.getOrElse(Fences.spillDir(
-      edges.sparkSession.sparkContext,
-      "pageRank(eager=true) without checkpointDir", "graft-pagerank"))
-    val out = dir + "/ranks"
-    ranks.write.mode("overwrite").parquet(out)
-    ew.unpersist(false)
-    nodes.unpersist(false)
-    e.unpersist(false)
-    if (prevSum != null) prevSum.unpersist(false)
-    edges.sparkSession.read.parquet(out)
+    // spilled, not fenced: see [[Fences]] for why a result spills
+    Fences.spill(ranks, "pageRank(eager=true)", "graft-pagerank",
+      Seq(ew, nodes, e) ++ Option(prevSum))
   }
 
   /** Personalized PageRank (the TrustRank formulation: Gyöngyi,
@@ -237,7 +220,6 @@ object Graph {
       damping: Double = 0.85,
       deterministic: Boolean = false,
       eager: Boolean = true,
-      checkpointDir: Option[String] = None,
       maxInDegree: Int = 1000000,
       onFences: Seq[DataFrame] => Unit = null): DataFrame = {
     require(iterations >= 1 && iterations <= 50, s"iterations=$iterations")
@@ -328,16 +310,8 @@ object Graph {
         onFences(Seq(ew, marked, e) ++ Option(prevSum))
       return ranks
     }
-    val dir = checkpointDir.getOrElse(Fences.spillDir(
-      edges.sparkSession.sparkContext,
-      "personalizedPageRank(eager=true) without checkpointDir", "graft-ppr"))
-    val out = dir + "/ppr-" + java.util.UUID.randomUUID().toString
-    ranks.write.mode("overwrite").parquet(out)
-    ew.unpersist(false)
-    marked.unpersist(false)
-    e.unpersist(false)
-    if (prevSum != null) prevSum.unpersist(false)
-    edges.sparkSession.read.parquet(out)
+    Fences.spill(ranks, "personalizedPageRank(eager=true)", "graft-ppr",
+      Seq(ew, marked, e) ++ Option(prevSum))
   }
 
   /** HITS hubs-and-authorities (Kleinberg, JACM 1999) by power
@@ -460,16 +434,9 @@ object Graph {
       if (onFences != null) onFences(prevFences :+ e)
       return out
     }
-    // eager parquet-spill tail (pageRank's pattern + dir resolution):
-    // materialize, then release every per-round fence instead of
-    // leaking persisted frames into the caller's session
-    val spark = edges.sparkSession
-    val dir = Fences.spillDir(spark.sparkContext, "hits", "graft-hits")
-    val path = dir + "/hits-" + java.util.UUID.randomUUID().toString
-    out.write.mode("overwrite").parquet(path)
-    prevFences.foreach(_.unpersist(false))
-    e.unpersist(false)
-    spark.read.parquet(path)
+    // eager: materialize, then release every per-round fence instead
+    // of leaking persisted frames into the caller's session
+    Fences.spill(out, "hits", "graft-hits", prevFences :+ e)
   }
 
   /** Exact triangle enumeration by degree-oriented node iteration
@@ -743,12 +710,7 @@ object Graph {
       if (onFences != null) onFences(Seq(e))
       return out
     }
-    val spark = edges.sparkSession
-    val dir = Fences.spillDir(spark.sparkContext, "kCore", "graft-kcore")
-    val path = dir + "/kcore-" + java.util.UUID.randomUUID().toString
-    out.write.mode("overwrite").parquet(path)
-    fences.foreach(_.unpersist(false))
-    spark.read.parquet(path)
+    Fences.spill(out, "kCore", "graft-kcore", fences.toSeq)
   }
 
   /** Community detection by synchronous label propagation (Raghavan,
@@ -779,18 +741,8 @@ object Graph {
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      iterations: Int = 4,
-      checkpointDir: Option[String] = None): DataFrame = {
+      iterations: Int = 4): DataFrame = {
     require(iterations >= 1 && iterations <= 50, s"iterations=$iterations")
-    var ckptId = 0
-    def truncate(df: DataFrame): DataFrame = checkpointDir match {
-      case Some(dir) =>
-        val p = s"$dir/lpa-$ckptId"
-        ckptId += 1
-        df.write.mode("overwrite").parquet(p)
-        df.sparkSession.read.parquet(p)
-      case None => df.localCheckpoint(true)
-    }
     val e0 = edges
       .select(least(col(srcCol), col(dstCol)).as("_u"),
         greatest(col(srcCol), col(dstCol)).as("_v"))
@@ -799,13 +751,13 @@ object Graph {
     // both adjacency directions in ONE pass (explode, not union of two
     // selects): the union form references e0 twice, so the caller's
     // edge derivation — the frequentPairs self-join on the gate —
-    // replayed twice inside this one truncate (r18, guide §2.4: same
+    // replayed twice inside this one fence (r18, guide §2.4: same
     // rows, one scan)
-    val sym = truncate(e0.select(explode(array(
+    val sym = fence(e0.select(explode(array(
         struct(col("_u").as("_n"), col("_v").as("_nbr")),
         struct(col("_v").as("_n"), col("_u").as("_nbr")))).as("_e"))
       .select(col("_e._n").as("_n"), col("_e._nbr").as("_nbr")))
-    var labels = truncate(sym.select(col("_n").as("node")).distinct()
+    var labels = fence(sym.select(col("_n").as("node")).distinct()
       .withColumn("lbl", col("node")))
     var iter = 0
     var stable = false
@@ -819,7 +771,7 @@ object Graph {
       // pattern, r18): the convergence probe is then one filter+count
       // over storage-backed blocks instead of a separate join job
       // re-deriving both label tables every round
-      val next = truncate(votes
+      val next = fence(votes
         .groupBy(col("_n").as("node"))
         .agg(min(struct((-col("_c")).as("_nc"), col("lbl").as("_l")))
           .getField("_l").as("lbl"))
@@ -923,18 +875,8 @@ object Graph {
       srcCol: String,
       dstCol: String,
       seeds: DataFrame,
-      maxHops: Int = 6,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxHops: Int = 6): DataFrame = {
     require(maxHops >= 1 && maxHops <= 50, s"maxHops=$maxHops")
-    var ckptId = 0
-    def truncate(df: DataFrame): DataFrame = checkpointDir match {
-      case Some(dir) =>
-        val p = s"$dir/bfs-$ckptId"
-        ckptId += 1
-        df.write.mode("overwrite").parquet(p)
-        df.sparkSession.read.parquet(p)
-      case None => df.localCheckpoint(true)
-    }
     val seedCol = seeds.columns.head
     val e0 = edges
       .select(least(col(srcCol), col(dstCol)).as("_u"),
@@ -943,13 +885,13 @@ object Graph {
       .distinct()
     // single-pass symmetric adjacency ([[labelPropagation]]'s explode
     // rationale): the union form replayed the caller's edge
-    // derivation twice inside this truncate
-    val sym = truncate(e0.select(explode(array(
+    // derivation twice inside this fence
+    val sym = fence(e0.select(explode(array(
         struct(col("_u").as("_n"), col("_v").as("_nbr")),
         struct(col("_v").as("_n"), col("_u").as("_nbr")))).as("_e"))
       .select(col("_e._n").as("_n"), col("_e._nbr").as("_nbr")))
     val nodes = sym.select(col("_n").as("node")).distinct()
-    var dist = truncate(nodes
+    var dist = fence(nodes
       .join(seeds.select(col(seedCol).as("node")).distinct(),
         Seq("node"), "left_semi")
       .withColumn("hops", lit(0L)))
@@ -970,7 +912,7 @@ object Graph {
         .select(col("_nbr").as("node")).distinct()
         .join(dist, Seq("node"), "left_anti")
         .withColumn("hops", lit(hop))
-      frontier = truncate(reached)
+      frontier = fence(reached)
       done = frontier.count() == 0
       if (!done) dist = dist.unionByName(frontier)
     }

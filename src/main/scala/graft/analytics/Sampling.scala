@@ -929,10 +929,7 @@ object Sampling {
       .agg(count(lit(1)).as("_c"))
     // fence: the bin table feeds the guard, the prefix window and the
     // probe join — unfenced, each reference re-aggregates the corpus
-    val binTab =
-      if (counts.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        counts.checkpoint(true)
-      else counts.localCheckpoint(true)
+    val binTab = Fences.fence(counts)
     val mx = binTab.agg(max(col("_c"))).head().getLong(0)
     require(mx <= maxBinRows,
       s"stratifiedTiles: a (stratum, bin) holds $mx rows > " +

@@ -575,7 +575,7 @@ object Similarity {
       (aggregate(zip_with(col("_c"), qLit, (a, b) => a * b),
         lit(0L), (acc, x) => acc + x).cast("double") /
         lit(xScale * 1e9)).as("pc1"))
-    spillRelease(out, centered, "pca-project")
+    Fences.spill(out, "pcaProject", "graft-pca", Seq(centered))
   }
 
   /** All-but-the-top residual (Mu & Viswanath, ICLR 2018): remove the
@@ -615,23 +615,7 @@ object Similarity {
           .as(Seq("dim", "_num")))
       .select(col(idCol), col("dim").cast("long").as("dim"),
         round(col("_num").cast("double") / den, 12).as("residual"))
-    spillRelease(out, centered, "pca-residual")
-  }
-
-  /** Materialize `out` to a parquet spill, THEN release the persisted
-    * centered matrix, and return the spilled frame — the [[pageRank]]
-    * eager pattern. Unpersisting before the returned lazy plan runs
-    * would silently recompute the quantize/center pipeline from
-    * source on the final scan instead of reading the cache.
-    */
-  private def spillRelease(out: DataFrame, centered: DataFrame,
-                           tag: String): DataFrame = {
-    val spark = out.sparkSession
-    val dir = Fences.spillDir(spark.sparkContext, tag, "graft-pca")
-    val path = dir + "/" + tag + "-" + java.util.UUID.randomUUID().toString
-    out.write.mode("overwrite").parquet(path)
-    centered.unpersist(false)
-    spark.read.parquet(path)
+    Fences.spill(out, "pcaResidual", "graft-pca", Seq(centered))
   }
 
   /** Shared core of the exact power iteration: returns (μ quantized,

@@ -511,14 +511,8 @@ object Sketch {
     // pair-expansion sides + the group list), so an unfenced state
     // re-derives — and re-CODEGENS — its whole input lineage per
     // reference (measured 3.8 s janino tax / 45 classes on a 1 s
-    // plan). Same fence contract as kllMerge: reliable checkpoint
-    // when a checkpoint dir is set (see the kllMerge Scaladoc for the
-    // cleanCheckpoints deployment note), executor-local otherwise;
-    // the state is ≤ k rows per group, so the fence costs one build.
-    def fence(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(true)
-      else df.localCheckpoint(true)
+    // plan). The state is ≤ k rows per group, so the fence costs one
+    // build.
     // the k-too-small half of the contract is data-detectable: a rank
     // above k means the state was built with a larger k — fail at the
     // fence instead of silently mixing two sketch resolutions
@@ -673,24 +667,6 @@ object Sketch {
     // input lineage per reference — measured ~12 scans of the raw log
     // for a 2-way merge. The state is ≤ ~2k rows per group, so the
     // eager fence is a storage-backed leaf that costs one state build.
-    // Fence choice follows the session's checkpoint configuration:
-    // with a checkpoint dir set (the cluster deployment contract) the
-    // fence is a RELIABLE checkpoint — executor loss (spot nodes,
-    // dynamic allocation) recomputes from storage instead of failing
-    // the merge on a vanished non-replicated local block; without one
-    // (local mode, the bench path) localCheckpoint keeps the fence
-    // executor-local and cheap. DEPLOYMENT CONTRACT: Spark never
-    // deletes reliable-checkpoint files on its own, so long-lived
-    // sessions that merge repeatedly with a checkpoint dir set MUST
-    // start the context with
-    // spark.cleaner.referenceTracking.cleanCheckpoints=true (a
-    // static cleaner conf — it cannot be toggled per-job) or point
-    // the dir at storage with a TTL policy; otherwise fenced states
-    // accumulate unboundedly.
-    def fence(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(true)
-      else df.localCheckpoint(true)
     val fenced = states.map(fence)
     // per-part (n, cut) — constant within a part's group rows
     val parts = fenced.map(_.groupBy(g: _*)

@@ -1210,7 +1210,10 @@ object Text {
       .select(explode(col("_toks")).as("token"))
       .filter(col("token") =!= "")
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-    bpeSpill(df, out, cached)
+    // eager, like pageRank, but the result stays distributed (an
+    // open-vocabulary token table is far too large for the driver):
+    // the spill lets the per-round persist fences release here
+    Fences.spill(out, "bpeApply", "graft-bpe", cached)
   }
 
   /** The per-merge rewrite loop shared by [[bpeApply]] (vocab counts)
@@ -1272,7 +1275,10 @@ object Text {
     val out = seqs.select(col("_id").as("doc_id"),
       size(kept).cast("long").as("n_tokens"),
       array_join(kept, "\u001f").as("tokens"))
-    bpeSpill(df, out, cached)
+    // the spill is corpus-sized (it IS the tokenized output); in a
+    // real pipeline point the checkpoint dir at the output location
+    // rather than paying a second copy
+    Fences.spill(out, "bpeSegment", "graft-bpe", cached)
   }
 
   /** Tokenizer fertility profile (Ács 2019, "Exploring BERT's
@@ -1316,34 +1322,6 @@ object Text {
           col("n_words").cast("double"), 6).as("fertility"),
         round(col("n_chars").cast("double") /
           col("n_bpe_tokens").cast("double"), 6).as("chars_per_token"))
-  }
-
-  /** Eager parquet-spill tail shared by the BPE entry points — like
-    * pageRank/components, but the result STAYS DISTRIBUTED: an
-    * open-vocabulary token table (or per-doc segmentation) over a
-    * 100 TB corpus is far too large for the driver. Parquet-spill
-    * (session checkpoint dir on clusters, local temp only in local
-    * mode) materializes the result so the per-round persist fences
-    * can be released without leaking a persisted frame into the
-    * caller's session.
-    *
-    * DIR LIFECYCLE (the [[Dedup.components]] checkpointDir contract):
-    * the caller owns the spill directory — Spark never deletes
-    * checkpoint-dir files on its own, so delete `bpe-out-*` after the
-    * result is consumed or persisted, or point the checkpoint dir at
-    * storage with a TTL. For [[bpeSegment]] the spill is corpus-sized
-    * (it IS the tokenized output); in a real pipeline that write is
-    * the product — point the checkpoint dir at the output location
-    * rather than paying a second copy.
-    */
-  private def bpeSpill(df: DataFrame, out: DataFrame,
-                       cached: Seq[DataFrame]): DataFrame = {
-    val spark = df.sparkSession
-    val dir = Fences.spillDir(spark.sparkContext, "bpeApply/bpeSegment", "graft-bpe")
-    val path = dir + "/bpe-out-" + java.util.UUID.randomUUID().toString
-    out.write.mode("overwrite").parquet(path)
-    cached.foreach(_.unpersist(false))
-    spark.read.parquet(path)
   }
 
   /** Per-document script composition: counts of Latin letters,
@@ -1624,10 +1602,7 @@ object Text {
     // upstream corpus scan (the kmvSetOps multi-reference trap). The
     // fence is (stratum, token)-distinct sized; the corpus is
     // scanned once.
-    val cnt =
-      if (cnt0.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        cnt0.checkpoint(true)
-      else cnt0.localCheckpoint(true)
+    val cnt = fence(cnt0)
     // the fold-contract guard: one map-side-combined distinct count
     // over the just-materialized fence (cheap relative to the fold it
     // protects), so a vocabulary too large for single-task per-pair
@@ -1710,12 +1685,7 @@ object Text {
     // reference re-derives the aggregation AND its corpus scan (the
     // kmvSetOps multi-reference trap). The fences are model-sized
     // (distinct n-grams), so each costs one build; the corpus is
-    // scanned exactly once per order. Reliable checkpoint when a dir
-    // is set (cluster deployments), executor-local otherwise.
-    def fence(d: DataFrame): DataFrame =
-      if (d.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        d.checkpoint(true)
-      else d.localCheckpoint(true)
+    // scanned exactly once per order.
     val seqs = df.select(sboToks(textCol).as("toks"))
       .filter(size(col("toks")) >= 1)
     val c1 = fence(seqs.select(explode(col("toks")).as("w"))
@@ -1779,11 +1749,8 @@ object Text {
     // re-derive the whole training sweep — measured 12.6× wall at the
     // 100× probe before the fence, 4 train derivations inside one
     // score. Model-sized, one build; parquet-backed models pay one
-    // re-materialization. Same fence contract as [[sboTrain]].
-    val m =
-      if (model.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        model.checkpoint(true)
-      else model.localCheckpoint(true)
+    // re-materialization.
+    val m = fence(model)
     val m3 = m.filter(col("ord") === 3)
       .select(col("u"), col("v"), col("w"), col("score").as("s3"))
     val m2 = m.filter(col("ord") === 2)

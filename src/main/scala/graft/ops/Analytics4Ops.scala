@@ -402,10 +402,7 @@ case class EnrichAsofProc(keyField: Ref, timeField: Ref, table: String,
   val plugin = "enrich.asof"
   // The dimension is STATIC for the processor's lifetime (snapshot
   // semantics — the enrichment contract), so the packed version-array
-  // table is materialized ONCE (the [[Fences]] policy: a reliable
-  // checkpoint when the session has a checkpoint dir, so the blocks
-  // survive executor loss; localCheckpoint otherwise, whose blocks
-  // free with the frame and never enter the CacheManager) and every
+  // table is materialized ONCE by [[Fences.fence]] and every
   // micro-batch's stream-static join re-reads those blocks instead of
   // re-scanning the parquet dim and re-running the dedup + pack
   // aggregations (two shuffles) per batch.

@@ -280,8 +280,14 @@ case class LlmProcessor(pluginName: String, settings: Map[String, String],
   /** First present key wins — reference spelling first, engine-uniform
     * spelling as fallback.
     */
-  private def opt(keys: String*): Option[String] =
-    keys.collectFirst { case k if settings.contains(k) => settings(k) }
+  private def given(keys: String*): Option[(String, String)] =
+    keys.collectFirst { case k if settings.contains(k) => k -> settings(k) }
+  private def opt(keys: String*): Option[String] = given(keys: _*).map(_._2)
+  /** A given number, failing like [[Registry.Settings]] on a malformed one. */
+  private def int(keys: String*): Option[Int] = given(keys: _*).map { case (k, v) =>
+    Registry.Settings.parse(pluginName, k, "an integer", v)(_.toInt) }
+  private def double(keys: String*): Option[Double] = given(keys: _*).map { case (k, v) =>
+    Registry.Settings.parse(pluginName, k, "a number", v)(_.toDouble) }
 
   /** `buildBody` takes the whole batch; `extract(resp, i)` pulls record
     * i's result. Plugins whose API is single-input run with maxBatch=1
@@ -370,7 +376,7 @@ case class LlmProcessor(pluginName: String, settings: Map[String, String],
   private def shape: Shape = pluginName match {
     case "openai.embed" =>
       val body = obj("model" -> txt(settings.getOrElse("model", "text-embedding-3-small")))
-      opt("dimensions").foreach(d => body.put("dimensions", d.toInt))
+      int("dimensions").foreach(d => body.put("dimensions", d))
       opt("encoding_format").foreach(f => body.put("encoding_format", f))
       opt("user").foreach(u => body.put("user", u))
       Shape(
@@ -381,18 +387,19 @@ case class LlmProcessor(pluginName: String, settings: Map[String, String],
         maxBatch = 96)
     case "openai.textgen" =>
       val dev = opt("developer_message")
+      val body = obj("model" -> txt(settings.getOrElse("model", "gpt-4o-mini")))
+      double("temperature").foreach(t => body.put("temperature", t))
+      double("top_p").foreach(t => body.put("top_p", t))
+      int("max_tokens").foreach(t => body.put("max_tokens", t))
+      int("max_completion_tokens").foreach(t => body.put("max_completion_tokens", t))
       Shape(
         settings.getOrElse("url", "https://api.openai.com/v1/chat/completions"),
         ins => {
           val msgs = JsonOps.mapper.getNodeFactory.arrayNode()
           dev.foreach(d => msgs.add(obj("role" -> txt("developer"), "content" -> txt(d))))
           msgs.add(obj("role" -> txt("user"), "content" -> txt(ins.head)))
-          val body = obj("model" -> txt(settings.getOrElse("model", "gpt-4o-mini")))
-          opt("temperature").foreach(t => body.put("temperature", t.toDouble))
-          opt("top_p").foreach(t => body.put("top_p", t.toDouble))
-          opt("max_tokens").foreach(t => body.put("max_tokens", t.toInt))
-          opt("max_completion_tokens").foreach(t => body.put("max_completion_tokens", t.toInt))
-          JsonOps.render(body.set("messages", msgs))
+          JsonOps.render(body.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+            .set("messages", msgs))
         },
         (n, _) => path(n, Seq("choices", "0", "message", "content")),
         maxBatch = 1)
@@ -526,11 +533,11 @@ case class LlmProcessor(pluginName: String, settings: Map[String, String],
     val sh = shape
     val (inRef, outRef) = (inputRef, outputRef)
     val batchSize = math.max(1, math.min(sh.maxBatch,
-      opt("batchSize", "maxTextsPerRequest").getOrElse(sh.maxBatch.toString).toInt))
-    val retryCount = opt("backoffRetry.count", "max_retries").getOrElse("0").toDouble.toInt
+      int("batchSize", "maxTextsPerRequest").getOrElse(sh.maxBatch)))
+    val retryCount = double("backoffRetry.count", "max_retries").getOrElse(0.0).toInt
     val retryMinMs = parseDuration(opt("backoffRetry.min", "initial_backoff").getOrElse("100ms"))
     val retryMaxMs = parseDuration(opt("backoffRetry.max", "max_backoff").getOrElse("5s"))
-    val retryFactor = opt("backoffRetry.factor", "backoff_factor").getOrElse("2").toDouble
+    val retryFactor = double("backoffRetry.factor", "backoff_factor").getOrElse(2.0)
     val auth = opt("apiKey", "api_key").map(k => Map("Authorization" -> s"Bearer $k"))
       .getOrElse(Map.empty) + ("Content-Type" -> "application/json")
     implicit val enc = Encoders.row(schema)

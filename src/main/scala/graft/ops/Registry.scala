@@ -122,6 +122,24 @@ object Registry {
   private val Schema =
     """{"type":"record","name":"r","fields":[{"name":"id","type":"long"}]}"""
 
+  /** The field an LLM processor reads and the one it writes, which
+    * is the input field unless set. */
+  private def llmField(in: String, out: String) =
+    Seq(opt(in, After), opt(out, "", s"unset: the result replaces $in"))
+  /** The engine-uniform spellings that the cohere plugins also accept;
+    * the reference spelling wins when both are given. */
+  private val llmFieldAliases =
+    Seq(opt("field", "", "alias of the input field"),
+      opt("result.field", "", "alias of the output field"))
+  private val openaiEmbed =
+    Seq(opt("model", "text-embedding-3-small"),
+      opt("url", "https://api.openai.com/v1/embeddings")) ++
+      Seq("dimensions", "encoding_format", "user").map(opt(_, "", "sent only when set")) ++
+      llmField("field", "result.field")
+  private val ollama =
+    Seq(opt("url", "http://localhost:11434"), opt("model", "llama3.2"),
+      opt("prompt", "")) ++ llmField("field", "result.field")
+
   val entries: Seq[Entry] = Seq(
     // ---- field / codec ------------------------------------------------
     Entry("field.set", "Set a field to a literal or Go-template value.",
@@ -203,37 +221,37 @@ object Registry {
         opt("tableKey", "key"), opt("tableTime", "ts")))(
       s => EnrichAsofProc(s.ref("key"), s.ref("time"), s.str("table"),
         s.str("tableKey"), s.str("tableTime"), s.list("values"))),
-    Entry("openai.embed", "OpenAI embeddings for a text field.",
-      Seq(opt("model", "text-embedding-3-small"),
-        opt("url", "https://api.openai.com/v1/embeddings")))(
+    Entry("openai.embed", "OpenAI embeddings for a text field.", openaiEmbed)(
       s => LlmProcessor("openai.embed", s.raw)),
     // the reference's own spec names as aliases (specs/*.json)
     Entry("openai.embeddings", "Alias of openai.embed (reference spec name).",
-      Seq(opt("model", "text-embedding-3-small")))(
-      s => LlmProcessor("openai.embed", s.raw)),
+      openaiEmbed)(s => LlmProcessor("openai.embed", s.raw)),
     Entry("openai.textgen", "OpenAI chat completion over a text field.",
       Seq(opt("model", "gpt-4o-mini"),
-        opt("url", "https://api.openai.com/v1/chat/completions")))(
+        opt("url", "https://api.openai.com/v1/chat/completions")) ++
+        Seq("developer_message", "temperature", "top_p", "max_tokens",
+          "max_completion_tokens").map(opt(_, "", "sent only when set")) ++
+        llmField("field", "result.field"))(
       s => LlmProcessor("openai.textgen", s.raw)),
     Entry("cohere.command", "Cohere command generation (goSprintf prompt).",
       Seq(opt("model", "command"), opt("prompt", "%s"),
-        opt("url", "https://api.cohere.com/v2/chat")))(
+        opt("url", "https://api.cohere.com/v2/chat")) ++
+        llmField("request.body", "response.body") ++ llmFieldAliases)(
       s => LlmProcessor("cohere.command", s.raw)),
     Entry("cohere.embed", "Cohere embeddings for a text field.",
       Seq(opt("model", "embed-english-v2.0"),
         opt("inputType", "", "required for v3+ models"),
-        opt("url", "https://api.cohere.com/v2/embed")))(
+        opt("url", "https://api.cohere.com/v2/embed")) ++
+        llmField("inputField", "outputField") ++ llmFieldAliases)(
       s => LlmProcessor("cohere.embed", s.raw)),
     Entry("cohere.rerank", "Cohere rerank of documents against a query.",
       Seq(opt("model", "rerank-v3.5"), opt("query", ""),
-        opt("url", "https://api.cohere.com/v2/rerank")))(
+        opt("url", "https://api.cohere.com/v2/rerank")) ++
+        llmField("request.body", "response.body") ++ llmFieldAliases)(
       s => LlmProcessor("cohere.rerank", s.raw)),
-    Entry("ollama.request", "Local Ollama generation request.",
-      Seq(opt("url", "http://localhost:11434"), opt("model", "llama3.2"),
-        opt("prompt", "")))(
+    Entry("ollama.request", "Local Ollama generation request.", ollama)(
       s => LlmProcessor("ollama.request", s.raw)),
-    Entry("ollama", "Alias of ollama.request (reference spec name).",
-      Seq(opt("model", "llama3.2")))(
+    Entry("ollama", "Alias of ollama.request (reference spec name).", ollama)(
       s => LlmProcessor("ollama.request", s.raw)),
 
     // ---- dedup ----------------------------------------------------------

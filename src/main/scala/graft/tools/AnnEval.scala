@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.analytics.Fences.fence
 import graft.analytics.Similarity
 
 /** ANN recall MEASURED, not guessed — the IVF twin of [[DedupEval]]:
@@ -22,13 +23,13 @@ object AnnEval {
            nprobe: Int, nQueries: Int = 64): (Double, Double) = {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < nQueries)
-    val gt = Similarity.bruteForceTopK(emb, queries, "vec_id",
+    val gt = fence(Similarity.bruteForceTopK(emb, queries, "vec_id",
         "embedding", k)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint(true)
+      .select(col("query_id"), col("neighbor_id")))
     val t0 = System.nanoTime()
-    val got = Similarity.ivfTopK(emb, queries, "vec_id", "embedding",
+    val got = fence(Similarity.ivfTopK(emb, queries, "vec_id", "embedding",
         k, nlist, nprobe)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint(true)
+      .select(col("query_id"), col("neighbor_id")))
     val secs = (System.nanoTime() - t0) / 1e9
     val nGt = gt.count()
     val hit = got.join(gt, Seq("query_id", "neighbor_id")).count()

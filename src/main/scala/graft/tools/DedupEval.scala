@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analytics.Dedup
+import graft.analytics.Fences.fence
 
 /** LSH banding recall MEASURED, not guessed: for each (numHashes,
   * numBands) configuration and threshold, the recall of the verified
@@ -39,13 +40,13 @@ object DedupEval {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val norm = (d: DataFrame, a: String, b: String) => d.select(
       least(col(a), col(b)).as("a"), greatest(col(a), col(b)).as("b"))
-    val exact = norm(Dedup.jaccardPrefixJoin(
+    val exact = fence(norm(Dedup.jaccardPrefixJoin(
       shingleText(docs), "doc_id", "text", threshold), "id_a", "id_b")
-      .distinct().localCheckpoint(true)
-    val got = norm(Dedup.minhashPairs(docs, "doc_id", "text",
+      .distinct())
+    val got = fence(norm(Dedup.minhashPairs(docs, "doc_id", "text",
       shingleSize = 3, numHashes = numHashes, numBands = numBands,
       threshold = threshold), "id_a", "id_b")
-      .distinct().localCheckpoint(true)
+      .distinct())
     val nExact = exact.count()
     val nGot = got.count()
     val nHit = got.join(exact, Seq("a", "b")).count()
@@ -78,14 +79,13 @@ object DedupEval {
     */
   def gradedEval(spark: SparkSession, dir: String, numHashes: Int,
                  numBands: Int): Seq[(Double, Long, Long, Double, Double)] = {
-    val corpus = gradedCorpus(
-      spark.read.parquet(s"$dir/documents.parquet")).localCheckpoint(true)
+    val corpus = fence(gradedCorpus(
+      spark.read.parquet(s"$dir/documents.parquet")))
     val t = 0.25
-    val exact = Dedup.jaccardPrefixJoin(shingleText(corpus), "doc_id",
+    val exact = fence(Dedup.jaccardPrefixJoin(shingleText(corpus), "doc_id",
         "text", t)
       .select(least(col("id_a"), col("id_b")).as("a"),
-        greatest(col("id_a"), col("id_b")).as("b"), col("jaccard"))
-      .localCheckpoint(true)
+        greatest(col("id_a"), col("id_b")).as("b"), col("jaccard")))
     val got = Dedup.minhashPairs(corpus, "doc_id", "text",
         shingleSize = 3, numHashes = numHashes, numBands = numBands,
         threshold = t)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.functions.JsonOps
 import graft.model.Cdc
 import graft.ops.Registry
@@ -395,7 +396,7 @@ class Analytics2OpsSpec extends AnyFunSuite {
         math.abs(p.get("feature").asLong)).toMap
     assert(feats == Map("1" -> 2L, "2" -> 1L), feats.toString)
 
-    val refDir = java.nio.file.Files.createTempDirectory("recon").toString
+    val refDir = Fences.tempDir("recon")
     Seq((1L, "x"), (2L, "CHANGED"), (3L, "z"))
       .toDF("id", "v")
       .select(col("id").cast("string").as("id"), col("v"))

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.functions.JsonOps
 import graft.model.Cdc
 import graft.ops.Registry
@@ -159,7 +160,7 @@ class Analytics3OpsSpec extends AnyFunSuite {
   }
 
   test("text.decontaminate flags corpus docs sharing eval 8-grams") {
-    val evalDir = java.nio.file.Files.createTempDirectory("decon").toString
+    val evalDir = Fences.tempDir("decon")
     Seq("alpha beta gamma delta epsilon zeta eta theta iota")
       .toDF("text").write.mode("overwrite").parquet(evalDir)
     val base = wrap(Seq(
@@ -349,7 +350,7 @@ class Analytics3OpsSpec extends AnyFunSuite {
     assert(hits.sorted.head == (1, "1"), hits.mkString(","))
     assert(!hits.exists(_._2 == "3"), hits.mkString(","))
 
-    val histDir = java.nio.file.Files.createTempDirectory("hist").toString
+    val histDir = Fences.tempDir("hist")
     Seq("spark catalyst optimizer rules").toDF("text")
       .write.mode("overwrite").parquet(histDir)
     val inc = payloads(Registry.create("dedup.incremental",

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.functions.JsonOps
 import graft.model.Cdc
 import graft.ops.Registry
@@ -66,7 +67,7 @@ class Analytics4OpsSpec extends AnyFunSuite {
   }
 
   test("text.oov screens a batch against a trained vocabulary") {
-    val trainDir = java.nio.file.Files.createTempDirectory("oov-train").toString
+    val trainDir = Fences.tempDir("oov-train")
     Seq("the cat sat", "the dog ran", "the cat ran")
       .toDF("text").write.mode("overwrite").parquet(trainDir)
     val evalRows = Seq((1L, "the cat flew"), (2L, "quantum flux"))
@@ -173,7 +174,7 @@ class Analytics4OpsSpec extends AnyFunSuite {
   }
 
   test("text.dsir weights a batch toward a target parquet domain") {
-    val targetDir = java.nio.file.Files.createTempDirectory("dsir-tgt").toString
+    val targetDir = Fences.tempDir("dsir-tgt")
     Seq("spark catalyst optimizer", "spark shuffle exchange",
       "spark codegen stage")
       .toDF("text").write.mode("overwrite").parquet(targetDir)

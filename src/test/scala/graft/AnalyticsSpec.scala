@@ -575,20 +575,6 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(joined.forall(r => !r.getDouble(1).isNaN && !r.getDouble(1).isInfinite))
   }
 
-  test("components with a reliable checkpoint dir matches localCheckpoint labels") {
-    // cluster-safe lineage truncation: parquet rounds under a caller
-    // dir instead of executor-resident localCheckpoint blocks
-    import spark.implicits._
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    def labels(ckpt: Option[String]) =
-      Dedup.components(pairs, driverEdgeCap = 0L, checkpointDir = ckpt)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
-    val expected = Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L))
-    assert(labels(None) == expected)
-    assert(labels(Some(dir)) == expected)
-  }
-
   test("fingerprint is whitespace-normalized and deterministic") {
     import spark.implicits._
     val df = Seq((1L, "hello  world"), (2L, "hello world"), (3L, "hello world!"))

@@ -5,6 +5,7 @@ import java.sql.DriverManager
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.functions.JsonOps
 import graft.model.Cdc
 import graft.pipeline.{Pipeline, Runner}
@@ -50,7 +51,7 @@ class CdcLogSpec extends AnyFunSuite {
     val p = Pipeline("cdc1")
       .source("pg", "builtin:postgres", options(url).toSeq: _*)
       .destination("out", "memory")
-    val ckpt = java.nio.file.Files.createTempDirectory("cdc1-ckpt").toString
+    val ckpt = Fences.tempDir("cdc1-ckpt")
     val q = Runner.start(spark, p, ckpt, Trigger.AvailableNow())
     q.awaitTermination(120000)
     val recs = Runner.memorySink("out").map(JsonOps.parse).sortBy(_.get("position").asText())
@@ -77,7 +78,7 @@ class CdcLogSpec extends AnyFunSuite {
     val p = Pipeline("cdc2")
       .source("pg", "builtin:postgres", opts.toSeq: _*)
       .destination("out", "memory")
-    val ckpt = java.nio.file.Files.createTempDirectory("cdc2-ckpt").toString
+    val ckpt = Fences.tempDir("cdc2-ckpt")
     val q1 = Runner.start(spark, p, ckpt, Trigger.AvailableNow())
     q1.awaitTermination(120000)
     val phase1 = Runner.memorySink("out").map(JsonOps.parse)
@@ -104,7 +105,7 @@ class CdcLogSpec extends AnyFunSuite {
     val p = Pipeline("cdc3")
       .source("pg", "builtin:postgres", opts.toSeq: _*)
       .destination("out", "memory")
-    val ckpt = java.nio.file.Files.createTempDirectory("cdc3-ckpt").toString
+    val ckpt = Fences.tempDir("cdc3-ckpt")
     val q1 = Runner.start(spark, p, ckpt, Trigger.ProcessingTime("50 milliseconds"))
     var waited = 0
     while (Runner.memorySink("out").size < 100 && waited < 300) {

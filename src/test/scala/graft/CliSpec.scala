@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.pipeline.ControlPlane
 import graft.tools.Cli
 
@@ -36,11 +37,11 @@ class CliSpec extends AnyFunSuite {
 
   test("the full command surface against an in-process control plane") {
     graft.pipeline.Runner.memorySinks.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("cli-ckpt").toString
+    val ckpt = Fences.tempDir("cli-ckpt")
     val cp = new ControlPlane(spark, ckpt)
     val port = cp.start(0)
     val base = s"http://127.0.0.1:$port"
-    val file = java.nio.file.Files.createTempFile("cli", ".yaml")
+    val file = SpecSupport.tempFile("cli", ".yaml")
     java.nio.file.Files.writeString(file, yaml)
     try {
       // apply a provisioning file, then plan shows it unchanged
@@ -134,7 +135,7 @@ class CliSpec extends AnyFunSuite {
 
       // init writes a parseable starter file whose processors
       // instantiate; a second init refuses to overwrite
-      val tpl = java.nio.file.Files.createTempDirectory("cli-init")
+      val tpl = java.nio.file.Paths.get(Fences.tempDir("cli-init"))
         .resolve("starter.yaml")
       val (ic, iout) = Cli.run(Array("init", tpl.toString), base)
       assert(ic == 0 && iout.contains("apply"), iout)

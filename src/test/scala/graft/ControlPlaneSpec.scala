@@ -5,6 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.functions.JsonOps
 import graft.pipeline.ControlPlane
 
@@ -32,7 +33,7 @@ class ControlPlaneSpec extends AnyFunSuite {
 
   test("pipeline lifecycle over REST") {
     graft.pipeline.Runner.memorySinks.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("cp-ckpt").toString
+    val ckpt = Fences.tempDir("cp-ckpt")
     val cp = new ControlPlane(spark, ckpt)
     val port = cp.start(0)
     val client = HttpClient.newHttpClient()
@@ -98,7 +99,7 @@ class ControlPlaneSpec extends AnyFunSuite {
   }
 
   test("REST /v1/connectors and /v1/processors mirror the gRPC vocabulary") {
-    val ckpt = java.nio.file.Files.createTempDirectory("cp-res").toString
+    val ckpt = Fences.tempDir("cp-res")
     val cp = new ControlPlane(spark, ckpt)
     val port = cp.start(0)
     val client = HttpClient.newHttpClient()
@@ -150,7 +151,7 @@ class ControlPlaneSpec extends AnyFunSuite {
   }
 
   test("GET /openapi.json is OpenAPI 3 and describes every served route") {
-    val ckpt = java.nio.file.Files.createTempDirectory("cp-oas").toString
+    val ckpt = Fences.tempDir("cp-oas")
     val cp = new ControlPlane(spark, ckpt)
     val port = cp.start(0)
     val client = HttpClient.newHttpClient()
@@ -193,7 +194,7 @@ class ControlPlaneSpec extends AnyFunSuite {
   }
 
   test("inspect sub-paths bridge to the gRPC stream handlers") {
-    val ckpt = java.nio.file.Files.createTempDirectory("cp-insp").toString
+    val ckpt = Fences.tempDir("cp-insp")
     val cp = new ControlPlane(spark, ckpt)
     val port = cp.start(0)
     val client = HttpClient.newHttpClient()
@@ -235,7 +236,7 @@ class ControlPlaneSpec extends AnyFunSuite {
   }
 
   test("GET /healthz serves overall and per-service, 404 on unknown") {
-    val ckpt = java.nio.file.Files.createTempDirectory("cp-hz").toString
+    val ckpt = Fences.tempDir("cp-hz")
     val cp = new ControlPlane(spark, ckpt)
     val port = cp.start(0)
     val client = HttpClient.newHttpClient()
@@ -256,7 +257,7 @@ class ControlPlaneSpec extends AnyFunSuite {
 
   test("apply refuses to swap a RUNNING pipeline's config (gRPC parity)") {
     graft.pipeline.Runner.memorySinks.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("cp-apply-ckpt").toString
+    val ckpt = Fences.tempDir("cp-apply-ckpt")
     val cp = new ControlPlane(spark, ckpt)
     val port = cp.start(0)
     val client = HttpClient.newHttpClient()
@@ -291,7 +292,7 @@ class ControlPlaneSpec extends AnyFunSuite {
 
   test("repeated supervised start never orphans a supervisor") {
     graft.pipeline.Runner.memorySinks.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("cp-sup-ckpt").toString
+    val ckpt = Fences.tempDir("cp-sup-ckpt")
     val cp = new ControlPlane(spark, ckpt)
     try {
       cp.register(graft.pipeline.Pipeline("cp-sup")

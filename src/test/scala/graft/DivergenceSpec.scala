@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.analytics.Text
 import graft.model.Cdc
 import graft.ops.Registry
@@ -54,8 +55,7 @@ class DivergenceSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val rows = Seq((1L, "x", "a a b"), (2L, "y", "a c"), (3L, "x", "b c"))
-    val state = java.nio.file.Files
-      .createTempDirectory("strat_sink").toString
+    val state = Fences.tempDir("strat_sink")
     val in = MemoryStream[(Long, String, String)]
     val q = in.toDF().toDF("doc_id", "s", "text").writeStream
       .foreachBatch(

@@ -241,4 +241,20 @@ class EnrichSpec extends AnyFunSuite {
     // fake returns echo object without "response" → empty result error
     assert(out.head.getAs[String](Cdc.Error) != null)
   }
+
+  test("a malformed LLM number names the plugin, the setting and the value") {
+    def message(plugin: String, setting: (String, String)): String =
+      intercept[IllegalArgumentException](LlmProcessor(plugin, Map(setting),
+        FakeTransport("t8")).transform(genRecords(1))).getMessage
+    assert(message("openai.textgen", "temperature" -> "hot") ==
+      "openai.textgen: setting temperature must be a number, got \"hot\"")
+    assert(message("openai.textgen", "max_tokens" -> "1.5") ==
+      "openai.textgen: setting max_tokens must be an integer, got \"1.5\"")
+    assert(message("openai.embed", "dimensions" -> "many") ==
+      "openai.embed: setting dimensions must be an integer, got \"many\"")
+    assert(message("cohere.embed", "maxTextsPerRequest" -> "all") ==
+      "cohere.embed: setting maxTextsPerRequest must be an integer, got \"all\"")
+    assert(message("cohere.command", "backoffRetry.factor" -> "x2") ==
+      "cohere.command: setting backoffRetry.factor must be a number, got \"x2\"")
+  }
 }

@@ -8,6 +8,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.functions.JsonOps
 import graft.model.Cdc
 import graft.pipeline.{Pipeline, Runner}
@@ -25,13 +26,13 @@ class FileTailSpec extends AnyFunSuite {
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
 
   test("tail consumes complete lines only, then picks up appended data") {
-    val file = Files.createTempFile("tail", ".log").toString
+    val file = SpecSupport.tempFile("tail", ".log").toString
     append(file, "line-1\nline-2\npartial")
     Runner.memorySinks.clear()
     val p = Pipeline("tail1")
       .source("f", "builtin:file", "path" -> file)
       .destination("out", "memory")
-    val ckpt = Files.createTempDirectory("tail1-ckpt").toString
+    val ckpt = Fences.tempDir("tail1-ckpt")
     val q1 = Runner.start(spark, p, ckpt, Trigger.AvailableNow())
     q1.awaitTermination(120000)
     val phase1 = Runner.memorySink("out").map(l =>
@@ -72,14 +73,14 @@ class FileTailSpec extends AnyFunSuite {
   }
 
   test("AvailableNow respects maxBytesPerBatch: bounded batches, full drain") {
-    val file = Files.createTempFile("tail3", ".log").toString
+    val file = SpecSupport.tempFile("tail3", ".log").toString
     (1 to 10).foreach(i => append(file, f"line-$i%02d\n")) // 8 bytes/line
     Runner.memorySinks.clear()
     val p = Pipeline("tail3")
       .source("f", "builtin:file",
         "path" -> file, "tail" -> "true", "maxBytesPerBatch" -> "20")
       .destination("out", "memory")
-    val ckpt = Files.createTempDirectory("tail3-ckpt").toString
+    val ckpt = Fences.tempDir("tail3-ckpt")
     val q = Runner.start(spark, p, ckpt, Trigger.AvailableNow())
     q.awaitTermination(120000)
     val got = Runner.memorySink("out").map(l =>
@@ -94,13 +95,13 @@ class FileTailSpec extends AnyFunSuite {
   }
 
   test("positions are byte offsets and streaming tail follows a live writer") {
-    val file = Files.createTempFile("tail2", ".log").toString
+    val file = SpecSupport.tempFile("tail2", ".log").toString
     append(file, "a\n")
     Runner.memorySinks.clear()
     val p = Pipeline("tail2")
       .source("f", "builtin:file", "path" -> file, "tail" -> "true")
       .destination("out", "memory")
-    val ckpt = Files.createTempDirectory("tail2-ckpt").toString
+    val ckpt = Fences.tempDir("tail2-ckpt")
     val q = Runner.start(spark, p, ckpt, Trigger.ProcessingTime("100 milliseconds"))
     try {
       var waited = 0
@@ -160,7 +161,7 @@ class FileTailSpec extends AnyFunSuite {
     }
     val complete = out.size.toLong
     out.write("partial, no newline yet".getBytes(UTF_8))
-    val file = Files.createTempFile("tail-bulk", ".log").toString
+    val file = SpecSupport.tempFile("tail-bulk", ".log").toString
     Files.write(Paths.get(file), out.toByteArray)
     (file, lines.toSeq, complete)
   }
@@ -206,7 +207,7 @@ class FileTailSpec extends AnyFunSuite {
     val p = Pipeline("tail-bulk")
       .source("f", "builtin:file", "path" -> file, "tail" -> "true")
       .destination("bulk-out", "memory")
-    val ckpt = Files.createTempDirectory("tail-bulk-ckpt").toString
+    val ckpt = Fences.tempDir("tail-bulk-ckpt")
     Runner.start(spark, p, ckpt, Trigger.AvailableNow()).awaitTermination(300000)
     val got = records("bulk-out")
     assert(got.size == lines.size, "each complete line exactly once; the partial one waits")
@@ -222,14 +223,14 @@ class FileTailSpec extends AnyFunSuite {
       .source("f", "builtin:file", "path" -> file, "tail" -> "true")
       .destination("bulk-ordered", "memory")
       .withOrderedDelivery
-    Runner.start(spark, ordered, Files.createTempDirectory("tail-ord-ckpt").toString,
+    Runner.start(spark, ordered, Fences.tempDir("tail-ord-ckpt"),
       Trigger.AvailableNow()).awaitTermination(300000)
     assert(records("bulk-ordered") == lines :+ ((complete, "partial, no newline yet-done")),
       "ordered = global: strict position order across the split ranges")
   }
 
   test("a non-UTF-8 charset decodes each line through the charset") {
-    val file = Files.createTempFile("tail-latin1", ".log").toString
+    val file = SpecSupport.tempFile("tail-latin1", ".log").toString
     append(file, "café\r\nna\u00efve\n".getBytes("ISO-8859-1"))
     val part = FileTailPartition(file, 0, Files.size(Paths.get(file)))
     val r = new FileTailReaderFactory(

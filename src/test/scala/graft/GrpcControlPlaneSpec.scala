@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.functions.JsonOps
 import graft.pipeline.{ControlPlane, GrpcControlPlane, Pipeline, Runner}
 
@@ -21,7 +22,7 @@ class GrpcControlPlaneSpec extends AnyFunSuite {
 
   test("in-process round-trip: create, get, export, start, stop, delete") {
     val cp = new ControlPlane(spark,
-      java.nio.file.Files.createTempDirectory("grpc_cp").toString)
+      Fences.tempDir("grpc_cp"))
     val svc = new GrpcControlPlane(cp)
     svc.serveInProcess("grpc-spec-1")
     val cli = GrpcControlPlane.inProcessClient("grpc-spec-1")
@@ -68,7 +69,7 @@ class GrpcControlPlaneSpec extends AnyFunSuite {
 
   test("plan/apply/import/DLQ vocabulary and gRPC error codes") {
     val cp = new ControlPlane(spark,
-      java.nio.file.Files.createTempDirectory("grpc_cp2").toString)
+      Fences.tempDir("grpc_cp2"))
     val svc = new GrpcControlPlane(cp)
     svc.serveInProcess("grpc-spec-2")
     val cli = GrpcControlPlane.inProcessClient("grpc-spec-2")
@@ -116,7 +117,7 @@ class GrpcControlPlaneSpec extends AnyFunSuite {
   test("real socket: the shaded Netty transport binds and serves") {
     import org.sparkproject.connect.grpc.netty.NettyChannelBuilder
     val cp = new ControlPlane(spark,
-      java.nio.file.Files.createTempDirectory("grpc_cp3").toString)
+      Fences.tempDir("grpc_cp3"))
     val svc = new GrpcControlPlane(cp)
     val port = svc.serve(0) // ephemeral
     assert(port > 0)
@@ -132,7 +133,7 @@ class GrpcControlPlaneSpec extends AnyFunSuite {
 
   test("CreatePipeline is atomic for multi-pipeline YAML and returns all created") {
     val cp = new ControlPlane(spark,
-      java.nio.file.Files.createTempDirectory("grpc_cp4").toString)
+      Fences.tempDir("grpc_cp4"))
     val svc = new GrpcControlPlane(cp)
     svc.serveInProcess("grpc-spec-4")
     val cli = GrpcControlPlane.inProcessClient("grpc-spec-4")
@@ -162,7 +163,7 @@ class GrpcControlPlaneSpec extends AnyFunSuite {
 
   test("UpdatePipeline and topology mutations are rejected while running") {
     val cp = new ControlPlane(spark,
-      java.nio.file.Files.createTempDirectory("grpc_cp5").toString)
+      Fences.tempDir("grpc_cp5"))
     val svc = new GrpcControlPlane(cp)
     svc.serveInProcess("grpc-spec-5")
     val cli = GrpcControlPlane.inProcessClient("grpc-spec-5")
@@ -192,7 +193,7 @@ class GrpcControlPlaneSpec extends AnyFunSuite {
 
   test("ConnectorService: CRUD, validate, plugin catalogue") {
     val cp = new ControlPlane(spark,
-      java.nio.file.Files.createTempDirectory("grpc_cp6").toString)
+      Fences.tempDir("grpc_cp6"))
     val svc = new GrpcControlPlane(cp)
     svc.serveInProcess("grpc-spec-6")
     val cli = GrpcControlPlane.inProcessClient("grpc-spec-6")
@@ -254,7 +255,7 @@ class GrpcControlPlaneSpec extends AnyFunSuite {
 
   test("ProcessorService: CRUD + plugin catalogue") {
     val cp = new ControlPlane(spark,
-      java.nio.file.Files.createTempDirectory("grpc_cp7").toString)
+      Fences.tempDir("grpc_cp7"))
     val svc = new GrpcControlPlane(cp)
     svc.serveInProcess("grpc-spec-7")
     val cli = GrpcControlPlane.inProcessClient("grpc-spec-7")
@@ -304,7 +305,7 @@ class GrpcControlPlaneSpec extends AnyFunSuite {
 
   test("streaming inspect: InspectConnector streams live records over gRPC") {
     val cp = new ControlPlane(spark,
-      java.nio.file.Files.createTempDirectory("grpc_cp8").toString)
+      Fences.tempDir("grpc_cp8"))
     val svc = new GrpcControlPlane(cp)
     svc.serveInProcess("grpc-spec-8")
     val cli = GrpcControlPlane.inProcessClient("grpc-spec-8")
@@ -337,7 +338,7 @@ class GrpcControlPlaneSpec extends AnyFunSuite {
 
   test("InformationService.GetInfo and the proto `name` plugin filter") {
     val cp = new ControlPlane(spark,
-      java.nio.file.Files.createTempDirectory("grpc_cp10").toString)
+      Fences.tempDir("grpc_cp10"))
     val svc = new GrpcControlPlane(cp)
     svc.serveInProcess("grpc-spec-10")
     val cli = GrpcControlPlane.inProcessClient("grpc-spec-10")
@@ -362,7 +363,7 @@ class GrpcControlPlaneSpec extends AnyFunSuite {
     // transport: every step a remote client would take, one session
     import org.sparkproject.connect.grpc.netty.NettyChannelBuilder
     val cp = new ControlPlane(spark,
-      java.nio.file.Files.createTempDirectory("grpc_e2e").toString)
+      Fences.tempDir("grpc_e2e"))
     val svc = new GrpcControlPlane(cp)
     val port = svc.serve(0)
     val ch = NettyChannelBuilder.forAddress("127.0.0.1", port)
@@ -415,7 +416,7 @@ class GrpcControlPlaneSpec extends AnyFunSuite {
 
   test("grpc.health.v1.Health: Check/Watch serve, unknown service is NOT_FOUND") {
     val cp = new ControlPlane(spark,
-      java.nio.file.Files.createTempDirectory("grpc_cph").toString)
+      Fences.tempDir("grpc_cph"))
     val svc = new GrpcControlPlane(cp)
     svc.serveInProcess("grpc-spec-health")
     val cli = GrpcControlPlane.inProcessClient("grpc-spec-health")
@@ -441,7 +442,7 @@ class GrpcControlPlaneSpec extends AnyFunSuite {
 
   test("serve() refuses a second start on the same facade") {
     val cp = new ControlPlane(spark,
-      java.nio.file.Files.createTempDirectory("grpc_cp9").toString)
+      Fences.tempDir("grpc_cp9"))
     val svc = new GrpcControlPlane(cp)
     svc.serveInProcess("grpc-spec-9")
     try {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.analytics.Text
 import graft.model.Cdc
 import graft.ops.Registry
@@ -85,7 +86,7 @@ class HeapsSpec extends AnyFunSuite {
   test("a one-point fit is NULL on Spark and in the DuckDB oracle (text_heaps, text_zipf)") {
     // one document "a a": one checkpoint (heaps) and one token type
     // with freq >= 2 (zipf), so n = 1 and the OLS denominator is 0
-    val dir = java.nio.file.Files.createTempDirectory("onepoint").toString
+    val dir = Fences.tempDir("onepoint")
     Seq((0L, "a a")).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     val fits = Seq("text_heaps" -> Seq("beta", "log10_k"),
       "text_zipf" -> Seq("slope", "intercept"))

@@ -109,7 +109,7 @@ class JsProcessorSpec extends AnyFunSuite {
         Map("script" -> "function process(r){return r;}",
           "script.path" -> "/tmp/x.js"))
     }
-    val f = java.nio.file.Files.createTempFile("jsproc", ".js")
+    val f = SpecSupport.tempFile("jsproc", ".js")
     java.nio.file.Files.writeString(f,
       "function process(r) { r.Metadata['from'] = 'file'; return r; }")
     val out = Registry.create("custom.javascript",

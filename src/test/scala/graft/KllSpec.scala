@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.analytics.Sketch
 
 /** KLL-style quantile sketch (round 12): order-free determinism,
@@ -82,7 +83,7 @@ class KllSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val rows = (1L to 4000L).map(i => ("st", i, (i * 13 % 500).toDouble))
-    val state = java.nio.file.Files.createTempDirectory("kll_sink").toString
+    val state = Fences.tempDir("kll_sink")
     val in = MemoryStream[(String, Long, Double)]
     val q = in.toDF().toDF("g", "id", "v")
       .writeStream

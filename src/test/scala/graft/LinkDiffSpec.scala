@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.analytics.{Graph, Stats}
 import graft.model.Cdc
 import graft.streaming.StreamingOps
@@ -75,7 +76,7 @@ class LinkDiffSpec extends AnyFunSuite {
       Some(r._2), Some(r._3)))
     val shuffled = rnd.shuffle(all)
     val (b0, b1) = shuffled.splitAt(rnd.nextInt(all.size))
-    val dir = java.nio.file.Files.createTempDirectory("jv").toString
+    val dir = Fences.tempDir("jv")
     val sink = StreamingOps.joinViewSink(dir, "cust",
       Seq("o_orderkey", "o_total"), Seq("c_name", "c_seg"))
     def toDf(rs: Seq[(String, Long, Option[Long], Option[Double],

@@ -3,6 +3,7 @@ package graft
 import com.fasterxml.jackson.databind.JsonNode
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.functions.JsonOps
 import graft.pipeline.ControlPlane
 import graft.tools.Mcp
@@ -109,7 +110,7 @@ class McpSpec extends AnyFunSuite {
 
   test("tools/call apply + start + stop drive a real pipeline") {
     graft.pipeline.Runner.memorySinks.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("mcp-ckpt").toString
+    val ckpt = Fences.tempDir("mcp-ckpt")
     val cp = new ControlPlane(spark, ckpt)
     val port = cp.start(0)
     val base = s"http://127.0.0.1:$port"

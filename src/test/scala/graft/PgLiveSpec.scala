@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.model.Cdc
 
 /** LIVE postgres CDC end-to-end: initdb a scratch PostgreSQL 15
@@ -42,7 +43,7 @@ class PgLiveSpec extends AnyFunSuite {
 
   test("LIVE postgres 15: pgoutput CDC end-to-end over the psql transport") {
     assume(haveBins, "postgres binaries not present in this environment")
-    val root = Files.createTempDirectory("pg-live").toFile
+    val root = new java.io.File(Fences.tempDir("pg-live"))
     sh(Seq("chown", "postgres", root.getAbsolutePath))
     val data = s"$root/data"
     val sock = s"$root/sock"
@@ -71,7 +72,7 @@ class PgLiveSpec extends AnyFunSuite {
         "UPDATE users SET name = 'ada l' WHERE id = 1; " +
         "DELETE FROM users WHERE id = 2;")
 
-      val ckpt = Files.createTempDirectory("pg-live-ckpt").toString
+      val ckpt = Fences.tempDir("pg-live-ckpt")
       val got = new java.util.concurrent.ConcurrentLinkedQueue[
         (String, String, Option[String], Option[String])]()
       def drain(): Unit = {
@@ -137,7 +138,7 @@ class PgLiveSpec extends AnyFunSuite {
            |        type: destination
            |        plugin: memory
            |""".stripMargin).head
-      val ck2 = Files.createTempDirectory("pg-live-ckpt2").toString
+      val ck2 = Fences.tempDir("pg-live-ckpt2")
       val q2 = graft.pipeline.Runner.start(spark, cfg, ck2,
         Trigger.AvailableNow())
       q2.awaitTermination()

@@ -6,6 +6,7 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.sources.WalTransport
 
 /** [[WalTransport.Jdbc]] itself — the SQL/LSN plumbing that talks to a
@@ -209,7 +210,7 @@ class PgWalJdbcTransportSpec extends AnyFunSuite {
     val stream = spark.readStream.format("conduit-pgoutput")
       .option("url", "jdbc:graftstub:t3")
       .option("slot", "s").option("publication", "p").load()
-    val ckpt = java.nio.file.Files.createTempDirectory("pgwal-jdbc-ckpt").toString
+    val ckpt = Fences.tempDir("pgwal-jdbc-ckpt")
     val rows = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]
     val q = stream.writeStream
       .option("checkpointLocation", ckpt).outputMode("append")

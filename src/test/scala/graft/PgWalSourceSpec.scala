@@ -5,6 +5,7 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.sources.WalTransport
 
 /** The pgoutput SOURCE path end to end: scripted [[WalTransport]]
@@ -92,7 +93,7 @@ class PgWalSourceSpec extends AnyFunSuite {
         100L -> commitMsg(100L))
       val stream = spark.readStream.format("conduit-pgoutput")
         .option("transport", "test-wal").load()
-      val ckpt = java.nio.file.Files.createTempDirectory("pgwal-ckpt").toString
+      val ckpt = Fences.tempDir("pgwal-ckpt")
       // foreachBatch sink: supports checkpoint recovery (memory doesn't)
       val rows = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]
       val q = stream.writeStream

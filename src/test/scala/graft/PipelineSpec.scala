@@ -1,11 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.functions.JsonOps
 import graft.model.Cdc
 import graft.pipeline.{ConnectorConfig, Pipeline, Runner}
@@ -18,7 +17,7 @@ class PipelineSpec extends AnyFunSuite {
   lazy val spark = Spark.session
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    Fences.tempDir(prefix)
 
   test("generator → field.set → memory (batch): records flow and transform") {
     Runner.memorySinks.clear()

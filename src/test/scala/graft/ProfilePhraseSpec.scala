@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.analytics.{Dedup, Profiling, Retrieval, Sketch, Stats}
 import graft.streaming.StreamingOps
 
@@ -98,7 +99,7 @@ class ProfilePhraseSpec extends AnyFunSuite {
   }
 
   test("histogramBinSink: streamed state == batch bins; replay safe") {
-    val dir = java.nio.file.Files.createTempDirectory("hist-sink").toString
+    val dir = Fences.tempDir("hist-sink")
     val sink = StreamingOps.histogramBinSink(dir, Seq("g"), "v",
       lo = 0.0, width = 1.0, bins = 16)
     val all = (1 to 300).map(i => ("a", (i % 20).toDouble))
@@ -117,7 +118,7 @@ class ProfilePhraseSpec extends AnyFunSuite {
   }
 
   test("cmsCounterSink: streamed state == batch counters; replay safe") {
-    val dir = java.nio.file.Files.createTempDirectory("cms-sink").toString
+    val dir = Fences.tempDir("cms-sink")
     val sink = StreamingOps.cmsCounterSink(dir, "w", depth = 4, width = 16)
     val all = (1 to 400).map(i => s"tok${i % 23}")
     val (b0, b1) = all.splitAt(170)

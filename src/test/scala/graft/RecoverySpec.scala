@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.functions.JsonOps
 import graft.pipeline.{Pipeline, Runner}
 
@@ -16,7 +17,7 @@ class RecoverySpec extends AnyFunSuite {
 
   test("restart from checkpoint: no records lost across a mid-stream stop") {
     Runner.memorySinks.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("recover-ckpt").toString
+    val ckpt = Fences.tempDir("recover-ckpt")
     val total = 5000
     val p = Pipeline("recover")
       .source("gen", "builtin:generator",

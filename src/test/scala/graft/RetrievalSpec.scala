@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.analytics.Retrieval
 
 /** BM25 / TF-IDF ranking semantics on hand-built corpora with known
@@ -70,7 +71,7 @@ class RetrievalSpec extends AnyFunSuite {
     // — and the CacheManager stays empty (a prior persist here leaked
     // for the session's lifetime). Guards the canonicalization tricks
     // (tf>0 gate, sentinel token) against optimizer-drift regressions.
-    val dir = java.nio.file.Files.createTempDirectory("retrieval-scan").toString
+    val dir = Fences.tempDir("retrieval-scan")
     corpus(
       1L -> "alpha beta gamma delta",
       2L -> "alpha beta epsilon zeta",

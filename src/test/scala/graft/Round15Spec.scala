@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.analytics.{Dedup, Sketch}
 import graft.model.Cdc
 import graft.ops.Registry
@@ -178,8 +179,7 @@ class Round15Spec extends AnyFunSuite {
       (1L, "fast sort fast sort fast sort"),
       (2L, "fast sort wins"))
       .toDF("doc_id", "text")
-    val mergesDir = java.nio.file.Files
-      .createTempDirectory("bpe-merges").toString
+    val mergesDir = Fences.tempDir("bpe-merges")
     Text.bpeTrain(docs, "doc_id", "text", rounds = 2)
       .write.mode("overwrite").parquet(mergesDir)
     val got = Registry.create("text.bpe",
@@ -202,7 +202,7 @@ class Round15Spec extends AnyFunSuite {
     val versions = Seq(
       (1L, 100L, 9.99), (1L, 200L, 12.50), (2L, 150L, 3.00))
       .toDF("key", "ts", "price")
-    val dir = java.nio.file.Files.createTempDirectory("asof-tab").toString
+    val dir = Fences.tempDir("asof-tab")
     versions.write.mode("overwrite").parquet(dir)
     val recs = Seq(
       (10L, 1L, 150L),  // between v100 and v200 -> 9.99
@@ -230,8 +230,7 @@ class Round15Spec extends AnyFunSuite {
   test("enrich.asof: a matched version with a NULL value is not a no-match") {
     val versions = Seq((1L, 100L, Some(9.99)), (1L, 200L, None))
       .toDF("key", "ts", "price")
-    val dir = java.nio.file.Files
-      .createTempDirectory("asof-null-tab").toString
+    val dir = Fences.tempDir("asof-null-tab")
     versions.write.mode("overwrite").parquet(dir)
     val recs = Seq((20L, 1L, 250L)).toDF("id", "k", "t") // matches the NULL version
     val got = Registry.create("enrich.asof",
@@ -247,8 +246,7 @@ class Round15Spec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val versions = Seq((1L, 100L, 9.99), (1L, 200L, 12.50))
       .toDF("key", "ts", "price")
-    val dir = java.nio.file.Files
-      .createTempDirectory("asof-stream-tab").toString
+    val dir = Fences.tempDir("asof-stream-tab")
     versions.write.mode("overwrite").parquet(dir)
     val settings = Map("key" -> ".Payload.After.k",
       "time" -> ".Payload.After.t", "table" -> dir, "values" -> "price")
@@ -344,7 +342,7 @@ class Round15Spec extends AnyFunSuite {
         r.getLong(3)))
     assert(trained.sortBy(_._1).toSeq == want.sortBy(_._1).toSeq)
     // the parquet-destination handoff the Scaladoc promises
-    val dir = java.nio.file.Files.createTempDirectory("bpe-pipe").toString
+    val dir = Fences.tempDir("bpe-pipe")
     Text.bpeTrain(docs, "id", "text", rounds = 2)
       .write.mode("overwrite").parquet(dir)
     val applied = Registry.create("text.bpe",
@@ -356,8 +354,7 @@ class Round15Spec extends AnyFunSuite {
   test("sketch.overlap estimates batch-vs-history overlap exactly below k") {
     // history = ids 1..60, batch = ids 41..100: overlap 20, union 100
     // — both below k=256, so the estimates are EXACT
-    val dir = java.nio.file.Files
-      .createTempDirectory("overlap-hist").toString
+    val dir = Fences.tempDir("overlap-hist")
     (1 to 60).map(i => s"doc$i").toDF("text")
       .write.mode("overwrite").parquet(dir)
     val batch = (41 to 100).map(i => (i.toLong, s"doc$i")).toDF("id", "text")

@@ -6,6 +6,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.model.Cdc
 import graft.ops.Registry
 
@@ -85,7 +86,7 @@ class Round16Spec extends AnyFunSuite {
 
   test("GET /metrics serves Prometheus text exposition for a running pipeline") {
     graft.pipeline.Runner.memorySinks.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("cp-met-ckpt").toString
+    val ckpt = Fences.tempDir("cp-met-ckpt")
     val cp = new graft.pipeline.ControlPlane(spark, ckpt)
     val port = cp.start(0)
     val client = HttpClient.newHttpClient()
@@ -146,7 +147,7 @@ class Round16Spec extends AnyFunSuite {
 
   test("POST create/import refuses to swap a RUNNING pipeline's config") {
     graft.pipeline.Runner.memorySinks.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("cp-import-ckpt").toString
+    val ckpt = Fences.tempDir("cp-import-ckpt")
     val cp = new graft.pipeline.ControlPlane(spark, ckpt)
     val port = cp.start(0)
     val client = HttpClient.newHttpClient()
@@ -235,7 +236,7 @@ class Round16Spec extends AnyFunSuite {
         "format.options.id" -> "int", "recordCount" -> "100000000",
         "rate" -> "100000")
       .destination("sup-race-out", "memory")
-    val ckpt = java.nio.file.Files.createTempDirectory("sup-race").toString
+    val ckpt = Fences.tempDir("sup-race")
     val sup = new Supervisor(() => {
       startGate.countDown()
       Thread.sleep(400) // stop() arrives inside this window
@@ -291,7 +292,7 @@ class Round16Spec extends AnyFunSuite {
 
   test("vocabCountSink totals cross batches and replays are idempotent") {
     import graft.streaming.StreamingOps
-    val state = java.nio.file.Files.createTempDirectory("vocab-sink").toString
+    val state = Fences.tempDir("vocab-sink")
     val b1 = Seq("alpha beta", "alpha").toDF("text")
     val b2 = Seq("beta gamma").toDF("text")
     val sink = StreamingOps.vocabCountSink(state, "text")
@@ -309,7 +310,7 @@ class Round16Spec extends AnyFunSuite {
   test("mixtureKlSink state matches the batch verdict after any prefix") {
     import graft.analytics.Sampling
     import graft.streaming.StreamingOps
-    val state = java.nio.file.Files.createTempDirectory("mixkl-sink").toString
+    val state = Fences.tempDir("mixkl-sink")
     val targets = Seq(("en", 0.8), ("de", 0.2))
     val b1 = Seq(("en", 50L), ("de", 10L)).toDF("lang", "n_tokens")
     val b2 = Seq(("en", 30L), ("de", 10L), ("xx", 99L)).toDF("lang", "n_tokens")
@@ -428,7 +429,7 @@ class Round16Spec extends AnyFunSuite {
   }
 
   test("REST DLQ config round-trips and respects the running invariant") {
-    val ckpt = java.nio.file.Files.createTempDirectory("cp-dlq-ckpt").toString
+    val ckpt = Fences.tempDir("cp-dlq-ckpt")
     val cp = new graft.pipeline.ControlPlane(spark, ckpt)
     val port = cp.start(0)
     val client = HttpClient.newHttpClient()
@@ -502,7 +503,7 @@ class Round16Spec extends AnyFunSuite {
   }
 
   test("GET /v1/processors/plugins serves the full catalogue with specs") {
-    val ckpt = java.nio.file.Files.createTempDirectory("cp-plug-ckpt").toString
+    val ckpt = Fences.tempDir("cp-plug-ckpt")
     val cp = new graft.pipeline.ControlPlane(spark, ckpt)
     val port = cp.start(0)
     val client = HttpClient.newHttpClient()
@@ -529,6 +530,19 @@ class Round16Spec extends AnyFunSuite {
       assert(params("text.quality").get("field").get("default").asText == ".Payload.After")
       assert(params("text.c4").get("badWords").get("default").asText == "")
       assert(params("sketch.bloom").has("field"))
+      // every setting an LLM processor reads is listed, aliases included
+      def lists(plugin: String, names: String*) =
+        names.foreach(n => assert(params(plugin).has(n), s"$plugin lists $n"))
+      for (p <- Seq("openai.embed", "openai.embeddings"))
+        lists(p, "url", "field", "result.field", "dimensions", "encoding_format", "user")
+      lists("openai.textgen", "field", "result.field", "developer_message",
+        "temperature", "top_p", "max_tokens", "max_completion_tokens")
+      for (p <- Seq("ollama.request", "ollama")) lists(p, "url", "prompt", "field", "result.field")
+      lists("cohere.embed", "inputField", "outputField", "field", "result.field")
+      for (p <- Seq("cohere.command", "cohere.rerank"))
+        lists(p, "request.body", "response.body", "field", "result.field")
+      assert(params("openai.embed").get("field").get("default").asText == ".Payload.After")
+      assert(params("ollama").get("url").get("default").asText == "http://localhost:11434")
       // name-regex filter narrows like the reference request
       val deduped = graft.functions.JsonOps.parse(
         get("/v1/processors/plugins?name=%5Ededup%5C."))
@@ -727,7 +741,7 @@ class Round16Spec extends AnyFunSuite {
       (2L, "spam junk noise blob", "zz"),
       (3L, "junk noise blob spam", "zz"))
       .toDF("id", "text", "lang"), "id", "docs")
-    val dir = java.nio.file.Files.createTempDirectory("nb-model").toString
+    val dir = Fences.tempDir("nb-model")
     Registry.create("text.nb_train", Map(
       "id" -> ".Payload.After.id", "label" -> ".Payload.After.lang",
       "posValue" -> "en"))(recs)
@@ -744,7 +758,7 @@ class Round16Spec extends AnyFunSuite {
   test("exactDedupSink: state equals the batch vote after any prefix and replays are idempotent") {
     import graft.streaming.StreamingOps
     import graft.analytics.Dedup
-    val state = java.nio.file.Files.createTempDirectory("exact-sink").toString
+    val state = Fences.tempDir("exact-sink")
     val b1 = Seq((5L, "aaa"), (3L, "bbb"), (9L, "aaa")).toDF("doc_id", "text")
     val b2 = Seq((1L, "aaa"), (7L, "ccc"), (2L, "bbb")).toDF("doc_id", "text")
     val sink = StreamingOps.exactDedupSink(state, "doc_id", "text")

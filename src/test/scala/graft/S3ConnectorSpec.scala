@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.model.Cdc
 import graft.pipeline.{ConnectorConfig, Runner, S3Config}
 
@@ -31,7 +32,7 @@ class S3ConnectorSpec extends AnyFunSuite {
   }
 
   test("s3 source: one record per object, key = object name") {
-    val bucket = Files.createTempDirectory("s3bucket").toFile
+    val bucket = new java.io.File(Fences.tempDir("s3bucket"))
     Files.writeString(new java.io.File(bucket, "a.json").toPath, """{"x":1}""")
     Files.writeString(new java.io.File(bucket, "b.json").toPath, """{"x":2}
 with a second line""")
@@ -47,7 +48,7 @@ with a second line""")
   }
 
   test("s3 destination: batch writes JSON objects under the prefix") {
-    val bucket = Files.createTempDirectory("s3out").toFile
+    val bucket = new java.io.File(Fences.tempDir("s3out"))
     val recs = Runner.source(spark, ConnectorConfig("g", "builtin:generator",
       Map("format.options.id" -> "int", "recordCount" -> "5")), streaming = false)
     Runner.writeBatch(recs, ConnectorConfig("s3out", "builtin:s3", Map(

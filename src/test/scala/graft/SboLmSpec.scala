@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.analytics.Text
 import graft.model.Cdc
 import graft.ops.Registry
@@ -73,7 +74,7 @@ class SboLmSpec extends AnyFunSuite {
   }
 
   test("plugin roundtrip: text.sbo_train parquet feeds text.sbo") {
-    val dir = java.nio.file.Files.createTempDirectory("sbo").toString
+    val dir = Fences.tempDir("sbo")
     val train = Cdc.wrapTyped(
       Seq((1L, "a b c a b d")).toDF("doc_id", "text"), "doc_id", "docs")
     Registry.create("text.sbo_train",

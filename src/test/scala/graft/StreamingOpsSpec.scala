@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.streaming.StreamingOps
 
 /** Stateful streaming operators driven through real streaming queries
@@ -55,7 +56,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
   test("streaming view maintenance: view == full recompute after every batch, deletes and group moves included") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("ivm").toString
+    val root = Fences.tempDir("ivm")
     val (viewDir, baseDir) = (s"$root/view", s"$root/base")
     val in = MemoryStream[(Long, Long, String, Double)]
     val sink = StreamingOps.viewMaintenanceSink(viewDir, baseDir,
@@ -196,7 +197,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     // crash anywhere — including BETWEEN the view write and the base
     // write. The sink must read state only from _SUCCESS-committed dirs
     // with id < n, so the replay recomputes from the same pre-n state.
-    val root = java.nio.file.Files.createTempDirectory("ivm-replay").toString
+    val root = Fences.tempDir("ivm-replay")
     val (viewDir, baseDir) = (s"$root/view", s"$root/base")
     val sink = StreamingOps.viewMaintenanceSink(viewDir, baseDir,
       keyCols = Seq("k"), orderCols = Seq("pos"), opCol = "op",
@@ -234,7 +235,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("hllRegisterSink: replay-idempotent merge; marker-less dirs never read") {
-    val dir = java.nio.file.Files.createTempDirectory("hll-sink").toString
+    val dir = Fences.tempDir("hll-sink")
     val sink = StreamingOps.hllRegisterSink(dir, Seq("g"), "u", p = 12)
     def df(rows: (String, Long)*) = rows.toDF("g", "u")
     sink(df((1 to 300).map(i => ("a", (i % 97).toLong)): _*), 0L)
@@ -259,7 +260,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("urlDedupSink: replay-idempotent min-merge; state equals the batch vote") {
-    val base = java.nio.file.Files.createTempDirectory("url-sink").toString
+    val base = Fences.tempDir("url-sink")
     val sink = StreamingOps.urlDedupSink(
       s"$base/rows", s"$base/state", "doc_id", "url")
     def df(rows: (Long, String)*) = rows.toDF("doc_id", "url")
@@ -290,7 +291,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("scd2Sink: cross-batch close, delete semantics, stale redelivery dropped") {
-    val dir = java.nio.file.Files.createTempDirectory("scd2-sink").toString
+    val dir = Fences.tempDir("scd2-sink")
     val sink = StreamingOps.scd2Sink(dir, Seq("k"), Seq("pos", "id"),
       "pos", "op")
     def df(rows: (Long, Long, Long, String)*) = rows.toDF("k", "id", "pos", "op")
@@ -531,8 +532,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       val parts = Seq(log.filter(_._2 <= cuts(0)),
         log.filter(e => e._2 > cuts(0) && e._2 <= cuts(1)),
         log.filter(_._2 > cuts(1))).filter(_.nonEmpty)
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"scd2-prop-$trial").toString
+      val dir = Fences.tempDir(s"scd2-prop-$trial")
       val sink = StreamingOps.scd2Sink(dir, Seq("k"), Seq("pos", "id"),
         "pos", "op")
       parts.zipWithIndex.foreach { case (p, i) =>
@@ -550,8 +550,7 @@ class StreamingOpsSpec extends AnyFunSuite {
         s"trial $trial cuts $cuts: stream != batch scd2")
 
       // HLL register sink over the same splits (values = key stream)
-      val hdir = java.nio.file.Files
-        .createTempDirectory(s"hll-prop-$trial").toString
+      val hdir = Fences.tempDir(s"hll-prop-$trial")
       val hsink = StreamingOps.hllRegisterSink(hdir, Seq.empty, "k")
       parts.zipWithIndex.foreach { case (p, i) =>
         hsink(p.toDF("k", "id", "pos", "op"), i.toLong) }
@@ -637,7 +636,7 @@ class StreamingOpsSpec extends AnyFunSuite {
         "format.options.id" -> "int", "recordCount" -> "200")
       .destination("out", "memory")
     val q = graft.pipeline.Runner.start(spark, p,
-      java.nio.file.Files.createTempDirectory("ckpt-ins").toString,
+      Fences.tempDir("ckpt-ins"),
       org.apache.spark.sql.streaming.Trigger.AvailableNow())
     q.awaitTermination(60000)
     val sampled = ins.drain()

@@ -5,6 +5,7 @@ import java.sql.DriverManager
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
 import graft.pipeline.{Pipeline, Supervisor}
 
 /** Supervised restart (reference `pkg/lifecycle/service.go:238` +
@@ -28,7 +29,7 @@ class SupervisorSpec extends AnyFunSuite {
   test("chaos: sink failure → backoff restart from checkpoint → heals with no loss") {
     val db = "jdbc:derby:memory:chaos1;create=true"
     DriverManager.getConnection(db).close() // create the db, NOT the table
-    val ckpt = java.nio.file.Files.createTempDirectory("sup-ckpt").toString
+    val ckpt = Fences.tempDir("sup-ckpt")
     val total = 2000
     val p = Pipeline("sup")
       .source("gen", "builtin:generator",
@@ -62,7 +63,7 @@ class SupervisorSpec extends AnyFunSuite {
   }
 
   test("persistent failure → DEGRADED after maxRetries, retrying stops") {
-    val ckpt = java.nio.file.Files.createTempDirectory("sup-bad-ckpt").toString
+    val ckpt = Fences.tempDir("sup-bad-ckpt")
     val p = Pipeline("bad")
       .source("gen", "builtin:generator",
         "format.options.id" -> "int", "recordCount" -> "10")

@@ -84,7 +84,7 @@ class WasmSpec extends AnyFunSuite {
   }
 
   test("wasm.path loads a module file; config rules enforced") {
-    val f = java.nio.file.Files.createTempFile("graft-spec", ".wasm")
+    val f = SpecSupport.tempFile("graft-spec", ".wasm")
     java.nio.file.Files.write(f,
       java.util.Base64.getDecoder.decode(ModuleB64))
     val proc = Registry.create("custom.wasm",

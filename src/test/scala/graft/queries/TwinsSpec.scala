@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.Fences
+
 /** The feed contract of the streaming-twin harness ([[Twins.twoBatch]]). */
 class TwinsSpec extends AnyFunSuite {
   lazy val spark = graft.Spark.session
@@ -101,15 +103,8 @@ class TwinsSpec extends AnyFunSuite {
   }
 
   test("tempDir directories and their contents are deleted when the JVM exits") {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val addOpens = scala.jdk.CollectionConverters.ListHasAsScala(
-      java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
-      .asScala.filter(_.startsWith("--add-opens"))
-    val cmd = Seq(javaBin, "-Xmx512m") ++ addOpens ++
-      Seq("-cp", System.getProperty("java.class.path"), "graft.queries.TwinsTempDirProbe")
-    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val out = new String(p.getInputStream.readAllBytes()).trim
-    assert(p.waitFor() == 0, out)
+    val (status, out) = graft.SpecSupport.childJvm("graft.queries.TwinsTempDirProbe")
+    assert(status == 0, out)
     val dirs = out.linesIterator.filter(_.startsWith("DIR ")).map(_.drop(4)).toSeq
     assert(dirs.size == 3, out)
     dirs.foreach(d => assert(!new java.io.File(d).exists, s"$d survived exit"))
@@ -117,17 +112,20 @@ class TwinsSpec extends AnyFunSuite {
 }
 
 /** Makes two twin scratch directories and one operator spill
-  * directory ([[graft.analytics.Fences.spillDir]] of a local session
+  * directory (the [[graft.analytics.Fences.spill]] of a local session
   * without a checkpoint dir), each with nested files, prints their
   * paths and exits; [[TwinsSpec]] checks that they are gone. */
 object TwinsTempDirProbe {
   def main(args: Array[String]): Unit = {
-    import graft.analytics.Fences
-    val sc = new org.apache.spark.SparkContext(new org.apache.spark.SparkConf()
-      .setMaster("local[1]").setAppName("probe").set("spark.ui.enabled", "false"))
-    val dirs = try Seq(Fences.tempDir("probe_a"), Fences.tempDir("probe_b"),
-      Fences.spillDir(sc, "probe", "probe_spill"))
-    finally sc.stop()
+        val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[1]").appName("probe").config("spark.ui.enabled", "false")
+      .getOrCreate()
+    val dirs = try {
+      val spilled = Fences.spill(spark.range(3).toDF(), "probe", "probe_spill", Nil)
+      val spillDir = new java.io.File(new java.net.URI(spilled.inputFiles.head))
+        .getParentFile.getParentFile.toString
+      Seq(Fences.tempDir("probe_a"), Fences.tempDir("probe_b"), spillDir)
+    } finally spark.stop()
     dirs.foreach { d =>
       val nested = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d, "b0", "part"))
       java.nio.file.Files.writeString(nested.resolve("x.parquet"), "x")
