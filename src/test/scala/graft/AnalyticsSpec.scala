@@ -575,6 +575,24 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(joined.forall(r => !r.getDouble(1).isNaN && !r.getDouble(1).isInfinite))
   }
 
+  test("components with a reliable checkpoint dir matches localCheckpoint labels") {
+    // cluster-safe lineage truncation: with a session checkpoint dir
+    // (set in a child JVM, it cannot be unset here) the rounds cut
+    // lineage with reliable checkpoints instead of executor-resident
+    // localCheckpoint blocks, and give the same labels
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
+    val local = Dedup.components(pairs, driverEdgeCap = 0L)
+      .collect().map(r => s"${r.getLong(0)},${r.getLong(1)}").toSeq.sorted
+    assert(local == Seq("1,1", "10,10", "11,10", "2,1", "3,1"))
+    val (status, out) = CheckpointDirProbe.reliableRun
+    assert(status == 0, out)
+    assert(CheckpointDirProbe.tagged(out, "ROWS").get("components") ==
+      Some(local.mkString(";")), out)
+    val written = CheckpointDirProbe.tagged(out, "CHECKPOINTS").get("components")
+    assert(written.exists(_.toInt > 0), out)
+  }
+
   test("fingerprint is whitespace-normalized and deterministic") {
     import spark.implicits._
     val df = Seq((1L, "hello  world"), (2L, "hello world"), (3L, "hello world!"))

@@ -37,12 +37,9 @@ class FencesSpec extends AnyFunSuite {
   }
 
   test("with a session checkpoint dir, results equal the local ones and spills do not collide") {
-    val (status, out) = SpecSupport.childJvm("graft.CheckpointDirProbe", "768m")
+    val (status, out) = CheckpointDirProbe.reliableRun
     assert(status == 0, out)
-    def tagged(tag: String): Map[String, String] =
-      out.linesIterator.filter(_.startsWith(tag + " "))
-        .map(_.drop(tag.length + 1).split(" ", 2))
-        .map(a => a(0) -> (if (a.length > 1) a(1) else "")).toMap
+    def tagged(tag: String) = CheckpointDirProbe.tagged(out, tag)
     val reliable = tagged("ROWS")
     val local = CheckpointDirProbe.cases(spark)
     assert(reliable.keySet == local.map(_._1).toSet, out)
@@ -65,6 +62,17 @@ class FencesSpec extends AnyFunSuite {
   * operator, `CHECKPOINTS <case> <n>`: the reliable checkpoints it
   * wrote. */
 object CheckpointDirProbe {
+
+  /** (exit status, output) of [[main]] in a child JVM; run once per
+    * test JVM and shared by the specs that read it. */
+  lazy val reliableRun: (Int, String) =
+    SpecSupport.childJvm("graft.CheckpointDirProbe", "768m")
+
+  /** The `<tag> <case> <value>` lines of `out`, as case -> value. */
+  def tagged(out: String, tag: String): Map[String, String] =
+    out.linesIterator.filter(_.startsWith(tag + " "))
+      .map(_.drop(tag.length + 1).split(" ", 2))
+      .map(a => a(0) -> (if (a.length > 1) a(1) else "")).toMap
 
   /** (case, sorted rows rendered as "a,b"): two pageRank results, the
     * first read after the second is built, and the three operators
