@@ -142,26 +142,19 @@ case class WebhookHttp(settings: Map[String, String],
                        transport: HttpTransport = HttpTransport.Default)
     extends Processor {
   val plugin = "webhook.http"
-  private val urlTemplate = settings("request.url")
-  private val method = settings.getOrElse("request.method", "GET")
-  private val bodyTemplate = settings.getOrElse("request.body", "")
+  @transient private val s = Registry.settingsFor(plugin, settings)
+  private val urlTemplate = s.str("request.url")
+  private val method = s.str("request.method")
+  private val bodyTemplate = s.str("request.body")
   private val headers = settings.collect {
     case (k, v) if k.startsWith("headers.") => k.stripPrefix("headers.") -> v
-  } ++ settings.get("request.contentType").map("Content-Type" -> _)
-  private val responseBodyRef = Ref.parse(
-    settings.getOrElse("response.body", ".Payload.After"))
-  private val responseStatusRef =
-    settings.get("response.status").map(Ref.parse)
-  private val retryCount = settings.getOrElse("backoffRetry.count", "0").toInt
-  private val retryMinMs = parseDuration(settings.getOrElse("backoffRetry.min", "100ms"))
-  private val retryMaxMs = parseDuration(settings.getOrElse("backoffRetry.max", "5s"))
-  private val retryFactor = settings.getOrElse("backoffRetry.factor", "2").toDouble
-
-  private def parseDuration(s: String): Long = s.trim match {
-    case d if d.endsWith("ms") => d.dropRight(2).toLong
-    case d if d.endsWith("s") => d.dropRight(1).toLong * 1000
-    case d => d.toLong
-  }
+  } ++ s.opt("request.contentType").map("Content-Type" -> _)
+  private val responseBodyRef = s.ref("response.body")
+  private val responseStatusRef = s.opt("response.status").map(Ref.parse)
+  private val retryCount = s.int("backoffRetry.count")
+  private val retryMinMs = s.millis("backoffRetry.min")
+  private val retryMaxMs = s.millis("backoffRetry.max")
+  private val retryFactor = s.double("backoffRetry.factor")
 
   override def transform(df: DataFrame): DataFrame = run(df, None)
 
@@ -277,17 +270,28 @@ case class LlmProcessor(pluginName: String, settings: Map[String, String],
     extends Processor {
   val plugin = pluginName
 
-  /** First present key wins — reference spelling first, engine-uniform
+  /** The settings read through the plugin's catalogue entry, so every
+    * name read here must be declared there. */
+  @transient private val s = Registry.settingsFor(pluginName, settings)
+
+  /** First given key wins — reference spelling first, engine-uniform
     * spelling as fallback.
     */
   private def given(keys: String*): Option[(String, String)] =
-    keys.collectFirst { case k if settings.contains(k) => k -> settings(k) }
+    keys.map(k => k -> s.opt(k)).collectFirst { case (k, Some(v)) => k -> v }
   private def opt(keys: String*): Option[String] = given(keys: _*).map(_._2)
-  /** A given number, failing like [[Registry.Settings]] on a malformed one. */
+  /** The first given key, else the first key at its declared default. */
+  private def value(keys: String*): (String, String) =
+    given(keys: _*).getOrElse(keys.head -> s.str(keys.head))
+  /** A setting's value parsed, failing like [[Registry.Settings]] on a
+    * malformed one. */
+  private def number(kv: (String, String)): Double =
+    Registry.Settings.parse(pluginName, kv._1, "a number", kv._2)(_.toDouble)
+  private def millis(kv: (String, String)): Long =
+    Registry.Settings.millis(pluginName, kv._1, kv._2)
   private def int(keys: String*): Option[Int] = given(keys: _*).map { case (k, v) =>
     Registry.Settings.parse(pluginName, k, "an integer", v)(_.toInt) }
-  private def double(keys: String*): Option[Double] = given(keys: _*).map { case (k, v) =>
-    Registry.Settings.parse(pluginName, k, "a number", v)(_.toDouble) }
+  private def double(keys: String*): Option[Double] = given(keys: _*).map(number)
 
   /** `buildBody` takes the whole batch; `extract(resp, i)` pulls record
     * i's result. Plugins whose API is single-input run with maxBatch=1
@@ -505,12 +509,6 @@ case class LlmProcessor(pluginName: String, settings: Map[String, String],
     (Ref.parse(in), Ref.parse(out))
   }
 
-  private def parseDuration(s: String): Long = s.trim match {
-    case d if d.endsWith("ms") => d.dropRight(2).toLong
-    case d if d.endsWith("s") => d.dropRight(1).toLong * 1000
-    case d => d.toLong
-  }
-
   override def transform(df: DataFrame): DataFrame = run(df, None)
 
   /** Single-scan conditional (same shape as webhook.http): misses pass
@@ -534,10 +532,10 @@ case class LlmProcessor(pluginName: String, settings: Map[String, String],
     val (inRef, outRef) = (inputRef, outputRef)
     val batchSize = math.max(1, math.min(sh.maxBatch,
       int("batchSize", "maxTextsPerRequest").getOrElse(sh.maxBatch)))
-    val retryCount = double("backoffRetry.count", "max_retries").getOrElse(0.0).toInt
-    val retryMinMs = parseDuration(opt("backoffRetry.min", "initial_backoff").getOrElse("100ms"))
-    val retryMaxMs = parseDuration(opt("backoffRetry.max", "max_backoff").getOrElse("5s"))
-    val retryFactor = double("backoffRetry.factor", "backoff_factor").getOrElse(2.0)
+    val retryCount = number(value("backoffRetry.count", "max_retries")).toInt
+    val retryMinMs = millis(value("backoffRetry.min", "initial_backoff"))
+    val retryMaxMs = millis(value("backoffRetry.max", "max_backoff"))
+    val retryFactor = number(value("backoffRetry.factor", "backoff_factor"))
     val auth = opt("apiKey", "api_key").map(k => Map("Authorization" -> s"Bearer $k"))
       .getOrElse(Map.empty) + ("Content-Type" -> "application/json")
     implicit val enc = Encoders.row(schema)

@@ -71,6 +71,7 @@ object Registry {
       Settings.parse(entry.plugin, name, kind, str(name))(f)
 
     def int(name: String): Int = parse(name, "an integer")(_.toInt)
+    def millis(name: String): Long = Settings.millis(entry.plugin, name, str(name))
     def long(name: String): Long = parse(name, "an integer")(_.toLong)
     def double(name: String): Double = parse(name, "a number")(_.toDouble)
     def bool(name: String): Boolean = parse(name, "true or false")(_.toBoolean)
@@ -103,7 +104,21 @@ object Registry {
         case _: IllegalArgumentException => throw new IllegalArgumentException(
           s"""$plugin: setting $name must be $kind, got "$v"""")
       }
+
+    /** A duration given as `<n>ms`, `<n>s` or bare milliseconds, in
+      * milliseconds. */
+    def millis(plugin: String, name: String, v: String): Long =
+      parse(plugin, name, "a duration such as 250ms or 5s", v) {
+        case d if d.endsWith("ms") => d.dropRight(2).toLong
+        case d if d.endsWith("s") => d.dropRight(1).toLong * 1000
+        case d => d.toLong
+      }
   }
+
+  /** `raw` read through the entry of `plugin`. */
+  def settingsFor(plugin: String, raw: Map[String, String]): Settings =
+    new Settings(entries.find(_.plugin == plugin).getOrElse(
+      throw new IllegalArgumentException(s"unknown processor plugin: $plugin")), raw)
 
   private[ops] def req(name: String, example: String, doc: String = "") =
     Setting(name, required = true, example, doc)
@@ -131,14 +146,27 @@ object Registry {
   private val llmFieldAliases =
     Seq(opt("field", "", "alias of the input field"),
       opt("result.field", "", "alias of the output field"))
+  /** Request batching, retry on 429/5xx, and the API key — read by
+    * every LLM processor, each under a second (reference) spelling. */
+  private def llmRequest(maxBatch: Int) = {
+    def aliased(name: String, alias: String, default: String, doc: String) =
+      Seq(opt(name, default, doc), opt(alias, "", s"alias of $name"))
+    aliased("batchSize", "maxTextsPerRequest", maxBatch.toString,
+      s"records per request, at most $maxBatch") ++
+      aliased("backoffRetry.count", "max_retries", "0", "retries of a 429 or 5xx") ++
+      aliased("backoffRetry.min", "initial_backoff", "100ms", "first retry delay") ++
+      aliased("backoffRetry.max", "max_backoff", "5s", "retry delay cap") ++
+      aliased("backoffRetry.factor", "backoff_factor", "2", "retry delay growth") ++
+      aliased("apiKey", "api_key", "", "sent as a Bearer token when set")
+  }
   private val openaiEmbed =
     Seq(opt("model", "text-embedding-3-small"),
       opt("url", "https://api.openai.com/v1/embeddings")) ++
       Seq("dimensions", "encoding_format", "user").map(opt(_, "", "sent only when set")) ++
-      llmField("field", "result.field")
+      llmField("field", "result.field") ++ llmRequest(96)
   private val ollama =
     Seq(opt("url", "http://localhost:11434"), opt("model", "llama3.2"),
-      opt("prompt", "")) ++ llmField("field", "result.field")
+      opt("prompt", "")) ++ llmField("field", "result.field") ++ llmRequest(1)
 
   val entries: Seq[Entry] = Seq(
     // ---- field / codec ------------------------------------------------
@@ -208,10 +236,13 @@ object Registry {
       s => SqlProc(s.str("query"), s.str("view"))),
 
     // ---- enrichment -----------------------------------------------------
-    Entry("webhook.http", "Per-record HTTP call with retry/backoff.",
+    Entry("webhook.http", "Per-record HTTP call with retry/backoff; " +
+      "each `headers.<name>` setting is sent as header `<name>`.",
       Seq(req("request.url", "https://example.com/{{ .Payload.After.doc_id }}"),
         opt("request.method", "GET"), opt("request.body", ""),
+        opt("request.contentType", "", "sent as Content-Type when set"),
         opt("response.body", After),
+        opt("response.status", "", "field for the HTTP status; unset: not written"),
         opt("backoffRetry.count", "0"), opt("backoffRetry.min", "100ms"),
         opt("backoffRetry.max", "5s"), opt("backoffRetry.factor", "2")))(
       s => WebhookHttp(s.raw)),
@@ -231,23 +262,26 @@ object Registry {
         opt("url", "https://api.openai.com/v1/chat/completions")) ++
         Seq("developer_message", "temperature", "top_p", "max_tokens",
           "max_completion_tokens").map(opt(_, "", "sent only when set")) ++
-        llmField("field", "result.field"))(
+        llmField("field", "result.field") ++ llmRequest(1))(
       s => LlmProcessor("openai.textgen", s.raw)),
     Entry("cohere.command", "Cohere command generation (goSprintf prompt).",
       Seq(opt("model", "command"), opt("prompt", "%s"),
         opt("url", "https://api.cohere.com/v2/chat")) ++
-        llmField("request.body", "response.body") ++ llmFieldAliases)(
+        llmField("request.body", "response.body") ++ llmFieldAliases ++
+        llmRequest(1))(
       s => LlmProcessor("cohere.command", s.raw)),
     Entry("cohere.embed", "Cohere embeddings for a text field.",
       Seq(opt("model", "embed-english-v2.0"),
         opt("inputType", "", "required for v3+ models"),
         opt("url", "https://api.cohere.com/v2/embed")) ++
-        llmField("inputField", "outputField") ++ llmFieldAliases)(
+        llmField("inputField", "outputField") ++ llmFieldAliases ++
+        llmRequest(96))(
       s => LlmProcessor("cohere.embed", s.raw)),
     Entry("cohere.rerank", "Cohere rerank of documents against a query.",
       Seq(opt("model", "rerank-v3.5"), opt("query", ""),
         opt("url", "https://api.cohere.com/v2/rerank")) ++
-        llmField("request.body", "response.body") ++ llmFieldAliases)(
+        llmField("request.body", "response.body") ++ llmFieldAliases ++
+        llmRequest(96))(
       s => LlmProcessor("cohere.rerank", s.raw)),
     Entry("ollama.request", "Local Ollama generation request.", ollama)(
       s => LlmProcessor("ollama.request", s.raw)),

@@ -1,46 +1,35 @@
 package graft.pipeline
 
-import java.net.InetSocketAddress
+import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
 
+import com.fasterxml.jackson.databind.JsonNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.JsonOps
+import graft.ops.PluginCatalog
 
-/** Minimal REST control plane over the pipeline runner — the engine's
-  * analogue of the reference's HTTP API (`proto/api/v1/api.proto`
-  * PipelineService: Create/Start/Stop/Status + streaming inspect via
-  * the inspector tap). JDK HttpServer: no extra dependencies.
+/** The pipeline service — the engine's analogue of the reference's
+  * `api.v1.PipelineService` (`proto/api/v1/api.proto`) — and its REST
+  * surface (JDK HttpServer: no extra dependencies).
   *
-  * Endpoints:
-  *   GET    /v1/pipelines               list {id, status}
-  *   POST   /v1/pipelines               body = provisioning YAML → create
-  *   POST   /v1/pipelines/import        alias of create (reference Import)
-  *   GET    /v1/pipelines/export        all registered pipelines as YAML
-  *   POST   /v1/pipelines/plan          YAML → diff vs registered (no change)
-  *   POST   /v1/pipelines/apply         YAML → register creates+updates
-  *   POST   /v1/pipelines/{id}/start    start streaming query
-  *   POST   /v1/pipelines/{id}/stop     stop query
-  *   GET    /v1/pipelines/{id}/status   status + metrics snapshot
-  *   GET    /v1/pipelines/{id}/export   one pipeline as YAML
-  *   GET    /v1/pipelines/{id}/inspect  drained inspector sample
-  *   GET    /v1/pipelines/{id}/dead-letter-queue   DLQ config
-  *   PUT    /v1/pipelines/{id}/dead-letter-queue   update DLQ config
-  *   DELETE /v1/pipelines/{id}          stop + unregister
-  *   GET    /v1/processors/plugins      processor-plugin specs (?name=regex)
-  *   GET    /v1/connectors/plugins      connector-plugin specs (?name=regex)
-  *   GET    /v1/connectors/{id}/inspect       first drained tap payload
-  *   GET    /v1/processors/{id}/inspect-in    (same tap — see the
-  *   GET    /v1/processors/{id}/inspect-out    GrpcControlPlane tap note)
-  *   GET    /openapi.json               OpenAPI 3 document of this surface
-  *   GET    /openapi                    minimal self-contained explorer
-  *   GET    /metrics                    Prometheus text exposition
-  *   GET    /info                       version/os/arch
+  * This class alone decides what a pipeline-service call does: the
+  * import/apply upsert ([[provision]]), the all-new [[create]],
+  * [[remove]], the sorted list, the DLQ read and update, and the
+  * lifecycle. The REST routes below and [[GrpcControlPlane]]'s
+  * PipelineService only parse a request and render the answer.
+  *
+  * Every REST route is declared once: the pipeline and system routes in
+  * [[ControlPlane.Routes]], the gRPC-bridged connector and processor
+  * routes in [[ControlPlane.Resources]]. `start` serves both tables and
+  * `GET /openapi.json` ([[OpenApi]]) lists them.
   */
 class ControlPlane(spark: SparkSession, checkpointRoot: String) {
+  import ControlPlane._
+
   private val configs = new ConcurrentHashMap[String, PipelineConfig]()
   private val queries = new ConcurrentHashMap[String, StreamingQuery]()
   private val supervisors = new ConcurrentHashMap[String, Supervisor]()
@@ -57,8 +46,7 @@ class ControlPlane(spark: SparkSession, checkpointRoot: String) {
   private def lockFor(id: String): Object =
     locks.computeIfAbsent(id, _ => new Object)
 
-  def registered: Seq[String] =
-    scala.jdk.CollectionConverters.EnumerationHasAsScala(configs.keys()).asScala.toSeq
+  def registered: Seq[String] = keys(configs)
 
   def register(p: PipelineConfig): Unit =
     lockFor(p.id).synchronized { configs.put(p.id, p) }
@@ -78,6 +66,29 @@ class ControlPlane(spark: SparkSession, checkpointRoot: String) {
       configs.put(id, updated)
       updated
     }
+
+  /** The import/apply upsert: new ids register, ids whose config
+    * changes are replaced through [[mutate]] (so the running check holds
+    * under each id's monitor), identical ones are left alone. Changes
+    * nothing and throws [[PipelinesRunning]] when any id whose config
+    * would change is running. */
+  def provision(ps: Seq[PipelineConfig], verb: String): Unit = {
+    val changed = ps.filter(p => configs.get(p.id) != p)
+    val running = changed.map(_.id).filter(isActive)
+    if (running.nonEmpty) throw new PipelinesRunning(verb, running.sorted)
+    changed.foreach(p =>
+      if (isRegistered(p.id)) mutate(p.id)(_ => p) else register(p))
+  }
+
+  /** Register pipelines that must all be new; rejects the whole set,
+    * registering nothing, when an id repeats or already exists. */
+  def create(ps: Seq[PipelineConfig]): Unit = {
+    require(ps.map(_.id).distinct.size == ps.size,
+      s"duplicate ids in request: ${ps.map(_.id).mkString(", ")}")
+    val dup = ps.filter(p => isRegistered(p.id))
+    require(dup.isEmpty, s"already exists: ${dup.map(_.id).mkString(", ")}")
+    ps.foreach(register)
+  }
 
   def startPipeline(id: String): StreamingQuery = lockFor(id).synchronized {
     val cfg = configs.get(id)
@@ -122,19 +133,15 @@ class ControlPlane(spark: SparkSession, checkpointRoot: String) {
     Option(queries.remove(id)).foreach(_.stop())
   }
 
-  /** One pipeline's status document (shared by the REST and gRPC
-    * facades). */
-  def statusJson(id: String): String = status(id)
-
   /** True when `id` is registered. */
   def isRegistered(id: String): Boolean = configs.get(id) != null
 
   /** True while the pipeline's streaming query (or supervisor) is
-    * live — config mutations against a live pipeline are rejected by
-    * the facades so status never reports "running" for a config that
-    * is not what's executing. A DEGRADED supervisor (retries
-    * exhausted, nothing executing) is NOT active: reconfiguring a
-    * crashed pipeline is the documented intervention path. */
+    * live — config mutations against a live pipeline are rejected so
+    * status never reports "running" for a config that is not what's
+    * executing. A DEGRADED supervisor (retries exhausted, nothing
+    * executing) is NOT active: reconfiguring a crashed pipeline is the
+    * documented intervention path. */
   def isActive(id: String): Boolean =
     Option(supervisors.get(id)).exists(_.status == "running") ||
       Option(queries.get(id)).exists(_.isActive)
@@ -148,12 +155,31 @@ class ControlPlane(spark: SparkSession, checkpointRoot: String) {
     configs.remove(id) != null
   }
 
-  /** Plan document for a provisioning set (shared by REST/gRPC). */
-  def planFor(ps: Seq[PipelineConfig]): String = planJson(ps)
-
-  /** Drained inspector sample for a pipeline (shared by REST/gRPC). */
+  /** Drained inspector sample for a pipeline. */
   def inspect(id: String): Seq[String] =
     Metrics.inspectorFor(id).map(_.drain()).getOrElse(Nil)
+
+  /** Every registered pipeline's status document, sorted by id. */
+  def listJson: String = registered.sorted.map(statusJson).mkString("[", ",", "]")
+
+  /** The pipeline's DLQ document; None for an unknown id. */
+  def dlqJson(id: String): Option[String] = config(id).map(c => dlqDoc(c.dlq))
+
+  /** Replace the pipeline's DLQ from a `{plugin, windowSize,
+    * windowNackThreshold}` object through [[mutate]] (a running query
+    * keeps its old DLQ); returns the new DLQ document. */
+  def updateDlq(id: String, d: JsonNode): String = {
+    val plugin = Option(d.get("plugin")).map(_.asText("builtin:log")).getOrElse("builtin:log")
+    def int(name: String) = Option(d.get(name)).map(_.asInt(0)).getOrElse(0)
+    dlqDoc(mutate(id)(_.copy(dlq = Some(DlqConfig(plugin,
+      windowSize = int("windowSize"), windowNackThreshold = int("windowNackThreshold"))))).dlq)
+  }
+
+  private def dlqDoc(dlq: Option[DlqConfig]): String = dlq match {
+    case Some(q) =>
+      s"""{"dlq":{"plugin":${jtext(q.plugin)},"windowSize":${q.windowSize},"windowNackThreshold":${q.windowNackThreshold}}}"""
+    case None => """{"dlq":null}"""
+  }
 
   /** The pipeline's lifecycle state string (shared by the status
     * document and the Prometheus status gauges). */
@@ -166,359 +192,292 @@ class ControlPlane(spark: SparkSession, checkpointRoot: String) {
     else "terminated"
   }
 
-  private def status(id: String): String = {
+  /** One pipeline's status document. */
+  def statusJson(id: String): String = {
     val sup = supervisors.get(id)
-    val state = stateOf(id)
     val restarts = if (sup == null) 0 else sup.restarts
     val snap = Metrics.snapshot(id)
-    s"""{"id":${JsonOps.render(JsonOps.mapper.getNodeFactory.textNode(id))},"status":"$state","restarts":$restarts,"batches":${snap.batches},"inputRows":${snap.inputRows},"rowsPerSecond":${snap.lastRowsPerSecond}}"""
-  }
-
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.add("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length)
-    val os = ex.getResponseBody
-    os.write(bytes); os.close()
-  }
-
-  private def respondYaml(ex: HttpExchange, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.add("Content-Type", "application/x-yaml")
-    ex.sendResponseHeaders(200, bytes.length)
-    val os = ex.getResponseBody
-    os.write(bytes); os.close()
+    s"""{"id":${jtext(id)},"status":"${stateOf(id)}","restarts":$restarts,"batches":${snap.batches},"inputRows":${snap.inputRows},"rowsPerSecond":${snap.lastRowsPerSecond}}"""
   }
 
   /** Terraform-style diff of a provisioning file against the registered
     * state (reference plan/apply): create / update / unchanged, plus
     * registered pipelines the file does not manage.
     */
-  private def planJson(ps: Seq[PipelineConfig]): String = {
+  def planFor(ps: Seq[PipelineConfig]): String = {
     val (create, existing) = ps.partition(p => configs.get(p.id) == null)
     val (unchanged, update) = existing.partition(p => configs.get(p.id) == p)
     val unmanaged = registered.filterNot(id => ps.exists(_.id == id)).sorted
-    def ids(xs: Seq[PipelineConfig]) = xs.map(p => s""""${p.id}"""").mkString("[", ",", "]")
+    def ids(xs: Seq[PipelineConfig]) = jarray(xs.map(_.id))
     s"""{"create":${ids(create)},"update":${ids(update)},""" +
-      s""""unchanged":${ids(unchanged)},""" +
-      s""""unmanaged":${unmanaged.map(s => s""""$s"""").mkString("[", ",", "]")}}"""
+      s""""unchanged":${ids(unchanged)},"unmanaged":${jarray(unmanaged)}}"""
   }
+
+  private def metricsText: String =
+    Metrics.prometheus(registered.map(id => id -> stateOf(id)))
+
+  /** The gRPC handler maps the connector and processor routes bridge
+    * onto ([[GrpcControlPlane.invokeUnary]]). */
+  private lazy val facade = new GrpcControlPlane(this)
 
   def start(port: Int): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    server.createContext("/v1/pipelines", (ex: HttpExchange) => {
-      try {
-        val path = ex.getRequestURI.getPath.stripPrefix("/v1/pipelines")
-          .stripPrefix("/").split("/").filter(_.nonEmpty)
-        (ex.getRequestMethod, path.toList) match {
-          case ("GET", Nil) =>
-            val items = registered.map(status).mkString("[", ",", "]")
-            respond(ex, 200, items)
-          case ("POST", Nil) | ("POST", "import" :: Nil) =>
-            val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-            val ps = Pipeline.fromYaml(body)
-            // Same invariant as /apply: a RUNNING pipeline's config is
-            // never swapped under it. Reject the whole import if any
-            // id it would CHANGE is active; ids whose config is
-            // identical pass through (idempotent re-import is fine).
-            val activeChanged = ps.filter(p =>
-              isActive(p.id) && configs.get(p.id) != p).map(_.id)
-            if (activeChanged.nonEmpty)
-              respond(ex, 409, s"""{"error":"pipelines running; stop before import: ${
-                activeChanged.sorted.mkString(", ")}"}""")
-            else {
-              // creates register; existing-id updates go through
-              // mutate(), which rechecks isActive inside the per-id
-              // monitor (a start racing this import loses cleanly)
-              ps.foreach { p =>
-                if (configs.get(p.id) == null) register(p)
-                else if (configs.get(p.id) != p) mutate(p.id)(_ => p)
-              }
-              respond(ex, 201, s"""{"created":[${ps.map(p => s""""${p.id}"""").mkString(",")}]}""")
-            }
-          case ("GET", "export" :: Nil) =>
-            val ps = registered.sorted.flatMap(id => Option(configs.get(id)))
-            respondYaml(ex, Pipeline.toYaml(ps))
-          case ("GET", id :: "export" :: Nil) =>
-            val cfg = configs.get(id)
-            if (cfg == null) respond(ex, 404, """{"error":"not found"}""")
-            else respondYaml(ex, Pipeline.toYaml(Seq(cfg)))
-          case ("POST", "plan" :: Nil) =>
-            val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-            respond(ex, 200, planJson(Pipeline.fromYaml(body)))
-          case ("POST", "apply" :: Nil) =>
-            val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-            val ps = Pipeline.fromYaml(body)
-            val plan = planJson(ps)
-            // Same invariant as the gRPC facade: a RUNNING pipeline's
-            // config is never swapped under it (status must describe
-            // what's executing). Reject the whole apply if any changed
-            // pipeline is active — stop it first, then re-apply.
-            val activeChanged = ps.filter(p =>
-              isActive(p.id) && configs.get(p.id) != p).map(_.id)
-            if (activeChanged.nonEmpty)
-              respond(ex, 409, s"""{"error":"pipelines running; stop before apply: ${
-                activeChanged.sorted.mkString(", ")}","plan":$plan}""")
-            else {
-              // creates go through register; updates through mutate(),
-              // which rechecks isActive inside the per-id monitor (a
-              // start racing this apply loses cleanly with a 400)
-              ps.foreach { p =>
-                if (configs.get(p.id) == null) register(p)
-                else if (configs.get(p.id) != p) mutate(p.id)(_ => p)
-              }
-              respond(ex, 200, plan)
-            }
-          case ("DELETE", id :: Nil) =>
-            stopPipeline(id)
-            val existed = configs.remove(id) != null
-            respond(ex, if (existed) 200 else 404,
-              s"""{"deleted":${existed}}""")
-          case ("POST", id :: "start" :: Nil) =>
-            // ?supervise=true → recovery loop instead of a bare query
-            if (Option(ex.getRequestURI.getQuery).exists(_.contains("supervise=true")))
-              superviseStart(id)
-            else startPipeline(id)
-            respond(ex, 200, status(id))
-          case ("POST", id :: "stop" :: Nil) =>
-            stopPipeline(id)
-            respond(ex, 200, status(id))
-          case ("GET", id :: "status" :: Nil) =>
-            respond(ex, 200, status(id))
-          case ("GET", id :: "inspect" :: Nil) =>
-            val sample = Metrics.inspectorFor(id).map(_.drain()).getOrElse(Nil)
-            respond(ex, 200, sample.mkString("[", ",", "]"))
-          // DLQ config (reference parity: GetDLQ/UpdateDLQ at
-          // GET/PUT /v1/pipelines/{id}/dead-letter-queue —
-          // proto/api/v1/api.proto:520-531)
-          case ("GET", id :: "dead-letter-queue" :: Nil) =>
-            config(id) match {
-              case None => respond(ex, 404, """{"error":"not found"}""")
-              case Some(cfg) => respond(ex, 200, cfg.dlq match {
-                case Some(q) =>
-                  s"""{"dlq":{"plugin":${JsonOps.render(JsonOps.mapper.getNodeFactory.textNode(q.plugin))},"windowSize":${q.windowSize},"windowNackThreshold":${q.windowNackThreshold}}}"""
-                case None => """{"dlq":null}"""
-              })
-            }
-          case ("PUT", id :: "dead-letter-queue" :: Nil) =>
-            val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-            val n = JsonOps.parse(body)
-            val d = Option(n.get("dlq")).getOrElse(n) // {dlq:{...}} or bare
-            // mutate() holds the same running-pipeline invariant as the
-            // gRPC facade: a live query keeps its old DLQ config
-            mutate(id)(cfg => cfg.copy(dlq = Some(DlqConfig(
-              plugin = Option(d.get("plugin")).map(_.asText("builtin:log"))
-                .getOrElse("builtin:log"),
-              windowSize = Option(d.get("windowSize")).map(_.asInt(0)).getOrElse(0),
-              windowNackThreshold = Option(d.get("windowNackThreshold"))
-                .map(_.asInt(0)).getOrElse(0)))))
-            val q = config(id).get.dlq.get
-            respond(ex, 200,
-              s"""{"dlq":{"plugin":${JsonOps.render(JsonOps.mapper.getNodeFactory.textNode(q.plugin))},"windowSize":${q.windowSize},"windowNackThreshold":${q.windowNackThreshold}}}""")
-          case _ => respond(ex, 404, """{"error":"not found"}""")
-        }
-      } catch {
-        case e: Exception =>
-          respond(ex, 400, s"""{"error":${JsonOps.render(
-            JsonOps.mapper.getNodeFactory.textNode(e.getMessage))}}""")
-      }
-    })
-    // Prometheus scrape endpoint (reference parity: the runtime serves
-    // promhttp at /metrics — pkg/conduit/runtime.go:51,73). Plain text
-    // exposition format rendered from the engine's own counters, no
-    // client library.
-    server.createContext("/metrics", (ex: HttpExchange) => {
-      try {
-        val body = Metrics.prometheus(registered.map(id => id -> stateOf(id)))
-        val bytes = body.getBytes(StandardCharsets.UTF_8)
-        ex.getResponseHeaders.add("Content-Type",
-          "text/plain; version=0.0.4; charset=utf-8")
-        ex.sendResponseHeaders(200, bytes.length)
-        val os = ex.getResponseBody
-        os.write(bytes); os.close()
-      } catch {
-        case e: Exception => respond(ex, 500, s"""{"error":${JsonOps.render(
-          JsonOps.mapper.getNodeFactory.textNode(e.getMessage))}}""")
-      }
-    })
-    // Connector/processor resource routes (reference parity: the
-    // gateway's /v1/connectors and /v1/processors HTTP bindings,
-    // api.proto:770-1103) — bridged onto the SAME handler maps the
-    // gRPC services run (GrpcControlPlane.invokeUnary), so the REST
-    // and gRPC views of a pipeline's topology cannot drift. Streaming
-    // inspect stays on /v1/pipelines/{id}/inspect and the gRPC stream.
-    val facade = new GrpcControlPlane(this)
-    def jtext(s: String): String =
-      JsonOps.render(JsonOps.mapper.getNodeFactory.textNode(s))
-    def restResource(base: String, service: String, noun: String,
-                     hasValidate: Boolean,
-                     inspectRoutes: Map[String, String]): Unit =
-      server.createContext(base, (ex: HttpExchange) => {
-        try {
-          val path = java.net.URLDecoder.decode(
-            ex.getRequestURI.getPath, "UTF-8").stripPrefix(base)
-            .stripPrefix("/").split("/").filter(_.nonEmpty).toList
-          def q(k: String): String = Option(ex.getRequestURI.getQuery)
-            .flatMap(_.split("&").find(_.startsWith(s"$k=")))
-            .map(s => java.net.URLDecoder.decode(
-              s.stripPrefix(s"$k="), "UTF-8")).getOrElse("")
-          def body(): String = new String(
-            ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-          def bodyWithId(id: String): String = {
-            val n = JsonOps.parseOrEmpty(body())
-              .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-            n.put("id", id)
-            JsonOps.render(n)
-          }
-          (ex.getRequestMethod, path) match {
-            case ("GET", Nil) =>
-              respond(ex, 200, facade.invokeUnary(service, s"List${noun}s",
-                s"""{"pipeline_id":${jtext(q("pipeline_id"))}}"""))
-            case ("GET", id :: Nil) =>
-              respond(ex, 200, facade.invokeUnary(service, s"Get$noun",
-                s"""{"id":${jtext(id)}}"""))
-            // proto inspect bindings (api.proto:795,1016,1027) bridged
-            // onto the SAME gRPC stream handlers, first drained
-            // payload: ?limit= / ?duration_ms= pass through (REST
-            // defaults duration_ms low — a GET should return, not
-            // hold the connection open like the gRPC stream)
-            case ("GET", id :: sub :: Nil) if inspectRoutes.contains(sub) =>
-              val limit = Some(q("limit")).filter(_.matches("\\d+"))
-                .getOrElse("100")
-              val dur = Some(q("duration_ms")).filter(_.matches("\\d+"))
-                .getOrElse("200")
-              val msgs = facade.invokeStreamCollect(service,
-                inspectRoutes(sub),
-                s"""{"id":${jtext(id)},"limit":$limit,"duration_ms":$dur}""")
-              respond(ex, 200, msgs.mkString("[", ",", "]"))
-            case ("POST", "validate" :: Nil) if hasValidate =>
-              respond(ex, 200,
-                facade.invokeUnary(service, s"Validate$noun", body()))
-            case ("POST", "validate" :: Nil) =>
-              // deliberate: the reference proto defines validation for
-              // connectors only (api.proto has no ValidateProcessor) —
-              // say so instead of a generic unknown-method fall-through
-              respond(ex, 404, s"""{"error":"validation is defined for """ +
-                s"""connectors only; ${noun.toLowerCase}s have no """ +
-                """validate RPC"}""")
-            case ("POST", Nil) =>
-              respond(ex, 200,
-                facade.invokeUnary(service, s"Create$noun", body()))
-            case ("PUT", id :: Nil) =>
-              respond(ex, 200,
-                facade.invokeUnary(service, s"Update$noun", bodyWithId(id)))
-            case ("DELETE", id :: Nil) =>
-              respond(ex, 200, facade.invokeUnary(service, s"Delete$noun",
-                s"""{"id":${jtext(id)}}"""))
-            case _ => respond(ex, 404, """{"error":"not found"}""")
-          }
-        } catch {
-          case e: NoSuchElementException =>
-            respond(ex, 404, s"""{"error":${jtext(
-              String.valueOf(e.getMessage))}}""")
-          case e: Exception =>
-            respond(ex, 400, s"""{"error":${jtext(
-              String.valueOf(e.getMessage))}}""")
-        }
-      })
-    ControlPlane.Resources.foreach(r =>
-      restResource(r.base, r.service, r.noun, r.hasValidate, r.inspectRoutes))
-
-    // OpenAPI document + explorer (reference parity: the runtime
-    // mounts its swagger JSON + UI at /openapi —
-    // pkg/http/openapi/openapi.go:31, pkg/conduit/runtime.go:974-983,
-    // advertised in the startup log at runtime.go:661). The document
-    // is generated from the SAME route table the resource handlers
-    // above are registered from (OpenApi.routes reads
-    // ControlPlane.Resources), so it cannot drift from the server.
-    server.createContext("/openapi.json", (ex: HttpExchange) =>
-      respond(ex, 200,
-        OpenApi.documentJson(graft.ops.PluginCatalog.Version)))
-    server.createContext("/openapi", (ex: HttpExchange) => {
-      val bytes = OpenApi.explorerHtml.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.add("Content-Type", "text/html; charset=utf-8")
-      ex.sendResponseHeaders(200, bytes.length)
-      val os = ex.getResponseBody
-      os.write(bytes); os.close()
-    })
-
-    // Health endpoint (reference parity: the gateway maps the gRPC
-    // health service to GET /healthz[?service=X] —
-    // pkg/conduit/runtime.go:946 WithHealthzEndpoint). SERVING for the
-    // server and every served API group; unknown services are 404.
-    server.createContext("/healthz", (ex: HttpExchange) => {
-      val svc = Option(ex.getRequestURI.getQuery)
-        .flatMap(_.split("&").find(_.startsWith("service=")))
-        .map(_.stripPrefix("service=")).getOrElse("")
-      val known = Set("", "PipelineService", "ConnectorService",
-        "ProcessorService", "InformationService").map(s =>
-        if (s.isEmpty) s else s"api.v1.$s") ++
-        Set("PipelineService", "ConnectorService", "ProcessorService",
-          "InformationService")
-      if (svc.isEmpty || known.contains(svc))
-        respond(ex, 200, """{"status":"SERVING"}""")
-      else respond(ex, 404, s"""{"error":"service '$svc' not found"}""")
-    })
-    // Processor-plugin discovery (reference parity: ListProcessorPlugins,
-    // GET /v1/processors/plugins with an optional name-regex filter —
-    // proto/api/v1/api.proto:1132-1137, spec shape :221-239): the
-    // generated catalogue rendered as ProcessorPluginSpecifications
-    // JSON, so a client can enumerate the ~100 named plugins and their
-    // parameter maps without reading source.
-    server.createContext("/v1/processors/plugins", (ex: HttpExchange) => {
-      try {
-        if (ex.getRequestMethod != "GET")
-          respond(ex, 404, """{"error":"not found"}""")
-        else {
-          val nameRe = Option(ex.getRequestURI.getQuery).toSeq
-            .flatMap(_.split("&")).find(_.startsWith("name="))
-            .map(q => java.net.URLDecoder.decode(q.drop(5), "UTF-8"))
-          respond(ex, 200, graft.ops.PluginCatalog.specsJson(nameRe))
-        }
-      } catch {
-        case e: Exception => respond(ex, 400, s"""{"error":${JsonOps.render(
-          JsonOps.mapper.getNodeFactory.textNode(e.getMessage))}}""")
-      }
-    })
-    // Connector-plugin discovery (reference parity: ListConnectorPlugins,
-    // GET /v1/connectors/plugins — proto/api/v1/api.proto:921-926, spec
-    // shape :196-218 with source_params / destination_params).
-    server.createContext("/v1/connectors/plugins", (ex: HttpExchange) => {
-      try {
-        if (ex.getRequestMethod != "GET")
-          respond(ex, 404, """{"error":"not found"}""")
-        else {
-          val nameRe = Option(ex.getRequestURI.getQuery).toSeq
-            .flatMap(_.split("&")).find(_.startsWith("name="))
-            .map(q => java.net.URLDecoder.decode(q.drop(5), "UTF-8"))
-          respond(ex, 200, graft.ops.PluginCatalog.connectorSpecsJson(nameRe))
-        }
-      } catch {
-        case e: Exception => respond(ex, 400, s"""{"error":${JsonOps.render(
-          JsonOps.mapper.getNodeFactory.textNode(e.getMessage))}}""")
-      }
-    })
-    // Runtime information (reference parity: InformationService.GetInfo,
-    // GET /info — proto/api/v1/api.proto:1202-1209).
-    server.createContext("/info", (ex: HttpExchange) => {
-      respond(ex, 200,
-        s"""{"version":"${graft.ops.PluginCatalog.Version}","os":"${
-          System.getProperty("os.name").toLowerCase}","arch":"${
-          System.getProperty("os.arch")}"}""")
-    })
+    contexts.foreach { ctx =>
+      val serve = Resources.find(_.base == ctx)
+        .fold[HttpExchange => Unit](serveRoute)(r => serveResource(r, _))
+      server.createContext(ctx, serve(_))
+    }
     server.setExecutor(null)
     server.start()
     server.getAddress.getPort
   }
 
+  /** Stop every pipeline this control plane started, bare or
+    * supervised, then the HTTP server. */
   def stop(): Unit = {
-    scala.jdk.CollectionConverters.EnumerationHasAsScala(queries.keys()).asScala
-      .foreach(stopPipeline)
+    (keys(queries) ++ keys(supervisors)).distinct.foreach(stopPipeline)
     if (server != null) server.stop(0)
+  }
+
+  private def respond(ex: HttpExchange, r: Reply): Unit = {
+    val bytes = r.body.getBytes(StandardCharsets.UTF_8)
+    ex.getResponseHeaders.add("Content-Type", r.contentType)
+    ex.sendResponseHeaders(r.code, bytes.length)
+    val os = ex.getResponseBody
+    os.write(bytes); os.close()
+  }
+
+  /** The first [[Routes]] entry whose method and path template fit
+    * the request handles it; none → 404, a failing handler → 400. */
+  private def serveRoute(ex: HttpExchange): Unit = {
+    val path = segments(ex.getRequestURI.getPath)
+    val reply = Routes.iterator
+      .flatMap(r => r.bind(ex.getRequestMethod, path).map(r -> _))
+      .nextOption() match {
+      case None => NotFound
+      case Some((r, id)) =>
+        try r.handle(this, new Call(ex, id))
+        catch { case e: Exception => Reply(400, errorJson(e.getMessage)) }
+    }
+    respond(ex, reply)
+  }
+
+  /** Connector/processor resource routes (reference parity: the
+    * gateway's /v1/connectors and /v1/processors HTTP bindings,
+    * api.proto:770-1103) — bridged onto the SAME handler maps the gRPC
+    * services run, so the REST and gRPC views of a pipeline's topology
+    * cannot drift. */
+  private def serveResource(r: ResourceDef, ex: HttpExchange): Unit = {
+    val c = new Call(ex, "")
+    val path = segments(URLDecoder.decode(ex.getRequestURI.getPath, "UTF-8")
+      .stripPrefix(r.base)).toList
+    def unary(method: String, req: String) =
+      Reply(200, facade.invokeUnary(r.service, method, req))
+    def idReq(id: String) = s"""{"id":${jtext(id)}}"""
+    val reply = try (ex.getRequestMethod, path) match {
+      case ("GET", Nil) => unary(s"List${r.noun}s",
+        s"""{"pipeline_id":${jtext(c.param("pipeline_id").getOrElse(""))}}""")
+      case ("GET", id :: Nil) => unary(s"Get${r.noun}", idReq(id))
+      // proto inspect bindings (api.proto:795,1016,1027) bridged onto
+      // the SAME gRPC stream handlers, first drained payload: ?limit= /
+      // ?duration_ms= pass through (REST defaults duration_ms low — a
+      // GET should return, not hold the connection open like the gRPC
+      // stream)
+      case ("GET", id :: sub :: Nil) if r.inspectRoutes.contains(sub) =>
+        def num(k: String, default: String) =
+          c.param(k).filter(_.matches("\\d+")).getOrElse(default)
+        val msgs = facade.invokeStreamCollect(r.service, r.inspectRoutes(sub),
+          s"""{"id":${jtext(id)},"limit":${num("limit", "100")},"duration_ms":${
+            num("duration_ms", "200")}}""")
+        Reply(200, msgs.mkString("[", ",", "]"))
+      case ("POST", "validate" :: Nil) if r.hasValidate =>
+        unary(s"Validate${r.noun}", c.body)
+      case ("POST", "validate" :: Nil) =>
+        // deliberate: the reference proto defines validation for
+        // connectors only (api.proto has no ValidateProcessor) — say
+        // so instead of a generic unknown-method fall-through
+        Reply(404, s"""{"error":"validation is defined for connectors """ +
+          s"""only; ${r.noun.toLowerCase}s have no validate RPC"}""")
+      case ("POST", Nil) => unary(s"Create${r.noun}", c.body)
+      case ("PUT", id :: Nil) =>
+        val n = JsonOps.parseOrEmpty(c.body)
+          .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        n.put("id", id)
+        unary(s"Update${r.noun}", JsonOps.render(n))
+      case ("DELETE", id :: Nil) => unary(s"Delete${r.noun}", idReq(id))
+      case _ => NotFound
+    } catch {
+      case e: NoSuchElementException => Reply(404, errorJson(e.getMessage))
+      case e: Exception => Reply(400, errorJson(e.getMessage))
+    }
+    respond(ex, reply)
   }
 }
 
 object ControlPlane {
+  /** Provisioning refused: pipelines whose config would change are
+    * running. REST answers 409, gRPC FAILED_PRECONDITION. */
+  final class PipelinesRunning(verb: String, ids: Seq[String])
+      extends IllegalStateException(
+        s"pipelines running; stop before $verb: ${ids.mkString(", ")}")
+
+  private[pipeline] def jtext(s: String): String =
+    JsonOps.render(JsonOps.mapper.getNodeFactory.textNode(s))
+  private def jarray(xs: Seq[String]): String = xs.map(jtext).mkString("[", ",", "]")
+  private def errorJson(msg: String): String =
+    s"""{"error":${jtext(String.valueOf(msg))}}"""
+  private def keys(m: ConcurrentHashMap[String, _]): Seq[String] =
+    scala.jdk.CollectionConverters.EnumerationHasAsScala(m.keys()).asScala.toSeq
+  private def segments(path: String): Seq[String] =
+    path.split("/").toSeq.filter(_.nonEmpty)
+
+  /** Version, OS and architecture — REST `GET /info` and gRPC
+    * `InformationService.GetInfo` serve this one document. */
+  def infoJson: String =
+    s"""{"version":${jtext(PluginCatalog.Version)},"os":${
+      jtext(sys.props.getOrElse("os.name", "").toLowerCase)},"arch":${
+      jtext(sys.props.getOrElse("os.arch", ""))}}"""
+
+  /** One REST request as a route handler sees it: the `{id}` path
+    * segment ("" when the route has none), query parameters, body. */
+  final class Call(ex: HttpExchange, val id: String) {
+    def body: String =
+      new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+    def param(k: String): Option[String] =
+      Option(ex.getRequestURI.getRawQuery).toSeq.flatMap(_.split("&"))
+        .find(_.startsWith(s"$k=")).map(q => URLDecoder.decode(q.drop(k.length + 1), "UTF-8"))
+  }
+
+  final case class Reply(code: Int, body: String,
+                         contentType: String = "application/json")
+  private val NotFound = Reply(404, """{"error":"not found"}""")
+  private def yaml(body: String) = Reply(200, body, "application/x-yaml")
+
+  /** One REST route: its OpenAPI entry and the handler `start` serves
+    * it with. */
+  final case class Endpoint(route: OpenApi.Route,
+                            handle: (ControlPlane, Call) => Reply) {
+    private val template = segments(route.path)
+
+    /** The HttpServer context this route is reached through: its path
+      * up to the first parameter. */
+    def context: String = "/" + template.takeWhile(_ != "{id}").mkString("/")
+
+    /** The `{id}` segment ("" without one) when the request fits. */
+    def bind(method: String, path: Seq[String]): Option[String] =
+      if (!method.equalsIgnoreCase(route.method) || path.size != template.size ||
+        !template.zip(path).forall { case (t, p) => t == "{id}" || t == p }) None
+      else Some(template.indexOf("{id}") match { case -1 => "" case i => path(i) })
+  }
+
+  private def at(method: String, path: String, operationId: String,
+                 tag: String, summary: String)(
+      handle: (ControlPlane, Call) => Reply): Endpoint =
+    Endpoint(OpenApi.Route(method, path, operationId, summary, tag), handle)
+
+  /** `POST /v1/pipelines` and `/import`: the upsert, 201 with the ids. */
+  private def importYaml(cp: ControlPlane, c: Call): Reply = {
+    val ps = Pipeline.fromYaml(c.body)
+    try { cp.provision(ps, "import"); Reply(201, s"""{"created":${jarray(ps.map(_.id))}}""") }
+    catch { case e: PipelinesRunning => Reply(409, errorJson(e.getMessage)) }
+  }
+
+  private def applyYaml(cp: ControlPlane, c: Call): Reply = {
+    val ps = Pipeline.fromYaml(c.body)
+    val plan = cp.planFor(ps)
+    try { cp.provision(ps, "apply"); Reply(200, plan) }
+    catch {
+      case e: PipelinesRunning =>
+        Reply(409, s"""{"error":${jtext(e.getMessage)},"plan":$plan}""")
+    }
+  }
+
+  private def pluginSpecs(noun: String, specs: Option[String] => String) =
+    at("get", s"/v1/${noun}s/plugins", s"List${noun.capitalize}Plugins",
+      s"${noun}s", s"${noun.capitalize}-plugin specifications (?name= regex filters)")(
+      (_, c) => Reply(200, specs(c.param("name"))))
+
+  /** The pipeline routes and the system routes, each declared once. */
+  val Routes: Seq[Endpoint] = Seq(
+    at("get", "/v1/pipelines", "ListPipelines", "pipelines",
+      "List registered pipelines with status")((cp, _) => Reply(200, cp.listJson)),
+    at("post", "/v1/pipelines", "CreatePipeline", "pipelines",
+      "Create pipelines from provisioning YAML")(importYaml),
+    at("post", "/v1/pipelines/import", "ImportPipelines", "pipelines",
+      "Import provisioning YAML (alias of create)")(importYaml),
+    at("get", "/v1/pipelines/export", "ExportPipelines", "pipelines",
+      "Export all registered pipelines as YAML")(
+      (cp, _) => yaml(Pipeline.toYaml(cp.registered.sorted.flatMap(cp.config)))),
+    at("post", "/v1/pipelines/plan", "PlanPipelines", "pipelines",
+      "Diff provisioning YAML against registered state")(
+      (cp, c) => Reply(200, cp.planFor(Pipeline.fromYaml(c.body)))),
+    at("post", "/v1/pipelines/apply", "ApplyPipelines", "pipelines",
+      "Apply provisioning YAML (register creates and updates)")(applyYaml),
+    at("post", "/v1/pipelines/{id}/start", "StartPipeline", "pipelines",
+      "Start the pipeline's streaming query (?supervise=true for the " +
+        "recovery loop)") { (cp, c) =>
+      if (c.param("supervise").contains("true")) cp.superviseStart(c.id)
+      else cp.startPipeline(c.id)
+      Reply(200, cp.statusJson(c.id))
+    },
+    at("post", "/v1/pipelines/{id}/stop", "StopPipeline", "pipelines",
+      "Stop the pipeline") { (cp, c) =>
+      cp.stopPipeline(c.id)
+      Reply(200, cp.statusJson(c.id))
+    },
+    at("get", "/v1/pipelines/{id}/status", "GetPipelineStatus", "pipelines",
+      "Lifecycle state, restart count and metrics snapshot")(
+      (cp, c) => Reply(200, cp.statusJson(c.id))),
+    at("get", "/v1/pipelines/{id}/export", "ExportPipeline", "pipelines",
+      "Export one pipeline as YAML")(
+      (cp, c) => cp.config(c.id).map(p => yaml(Pipeline.toYaml(Seq(p)))).getOrElse(NotFound)),
+    at("get", "/v1/pipelines/{id}/inspect", "InspectPipeline", "pipelines",
+      "Drain the pipeline's inspector tap sample")(
+      (cp, c) => Reply(200, cp.inspect(c.id).mkString("[", ",", "]"))),
+    // reference parity: GetDLQ/UpdateDLQ, proto/api/v1/api.proto:520-531
+    at("get", "/v1/pipelines/{id}/dead-letter-queue", "GetDLQ", "pipelines",
+      "Dead-letter-queue configuration")(
+      (cp, c) => cp.dlqJson(c.id).map(Reply(200, _)).getOrElse(NotFound)),
+    at("put", "/v1/pipelines/{id}/dead-letter-queue", "UpdateDLQ", "pipelines",
+      "Update dead-letter-queue configuration") { (cp, c) =>
+      val n = JsonOps.parse(c.body)
+      Reply(200, cp.updateDlq(c.id, Option(n.get("dlq")).getOrElse(n))) // {dlq:{...}} or bare
+    },
+    at("delete", "/v1/pipelines/{id}", "DeletePipeline", "pipelines",
+      "Stop and unregister the pipeline") { (cp, c) =>
+      val existed = cp.remove(c.id)
+      Reply(if (existed) 200 else 404, s"""{"deleted":$existed}""")
+    },
+    // reference parity: ListProcessorPlugins / ListConnectorPlugins,
+    // api.proto:921-926,1132-1137 (spec shapes :196-239)
+    pluginSpecs("processor", PluginCatalog.specsJson),
+    pluginSpecs("connector", PluginCatalog.connectorSpecsJson),
+    // reference parity: the gateway maps the gRPC health service to
+    // GET /healthz[?service=X] (pkg/conduit/runtime.go:946)
+    at("get", "/healthz", "Healthz", "system",
+      "Health of the server and its API services (?service= checks one)") { (_, c) =>
+      val svc = c.param("service").getOrElse("")
+      if (svc.isEmpty || GrpcControlPlane.HealthServices(svc))
+        Reply(200, """{"status":"SERVING"}""")
+      else Reply(404, errorJson(s"service '$svc' not found"))
+    },
+    // reference parity: the runtime serves promhttp at /metrics
+    // (pkg/conduit/runtime.go:51,73), rendered without a client library
+    at("get", "/metrics", "Metrics", "system",
+      "Prometheus text exposition of the engine's counters") { (cp, _) =>
+      try Reply(200, cp.metricsText, "text/plain; version=0.0.4; charset=utf-8")
+      catch { case e: Exception => Reply(500, errorJson(e.getMessage)) }
+    },
+    at("get", "/info", "GetInfo", "system", "Version, OS and architecture")(
+      (_, _) => Reply(200, infoJson)),
+    // reference parity: swagger JSON + UI at /openapi
+    // (pkg/http/openapi/openapi.go:31, pkg/conduit/runtime.go:974-983)
+    at("get", "/openapi.json", "OpenApiDocument", "system", "This document")(
+      (_, _) => Reply(200, OpenApi.documentJson)),
+    at("get", "/openapi", "OpenApiExplorer", "system",
+      "Self-contained HTML API explorer")(
+      (_, _) => Reply(200, OpenApi.explorerHtml, "text/html; charset=utf-8")))
+
   /** One gRPC-bridged REST resource: the base path, the gRPC service
     * its handlers live on, the noun its method names are built from,
     * whether the proto defines a Validate RPC for it (connectors
@@ -539,4 +498,7 @@ object ControlPlane {
       "Processor", hasValidate = false,
       inspectRoutes = Map("inspect-in" -> "InspectProcessorIn",
         "inspect-out" -> "InspectProcessorOut")))
+
+  /** Every HttpServer context `start` registers. */
+  def contexts: Seq[String] = Routes.map(_.context).distinct ++ Resources.map(_.base)
 }

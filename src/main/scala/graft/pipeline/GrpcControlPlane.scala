@@ -25,9 +25,14 @@ import graft.ops.Registry
   *    InspectOut(stream)/Get/Create/Update/Delete/
   *    ListProcessorPlugins).
   *
-  * Each RPC delegates to the same [[ControlPlane]] the REST facade
-  * wraps — one registry, multiple wire surfaces, exactly the
-  * reference's grpc-gateway arrangement in reverse.
+  * The PipelineService handlers only parse a request and render the
+  * answer: what each call does (provision, create, remove, list, DLQ,
+  * lifecycle) is decided by [[ControlPlane]], whose REST routes are
+  * the other adapter over the same methods. The connector and
+  * processor handlers here are the single implementation of those
+  * services; the REST `/v1/connectors` and `/v1/processors` routes
+  * call them through [[invokeUnary]] — the reference's grpc-gateway
+  * arrangement in reverse.
   *
   * ==Wire format (documented deviation)==
   * Method names and semantics mirror the proto services, but message
@@ -65,6 +70,7 @@ import graft.ops.Registry
   * embedded use get the in-process transport ([[serveInProcess]]).
   */
 class GrpcControlPlane(cp: ControlPlane) {
+  import ControlPlane.jtext
   import GrpcControlPlane._
 
   private var server: Server = _
@@ -74,8 +80,6 @@ class GrpcControlPlane(cp: ControlPlane) {
   private def node(s: String): JsonNode = JsonOps.parseOrEmpty(s)
   private def text(n: JsonNode, field: String): String =
     Option(n.get(field)).map(_.asText("")).getOrElse("")
-  private def jstr(s: String): String =
-    JsonOps.render(JsonOps.mapper.getNodeFactory.textNode(s))
 
   private def requireId(n: JsonNode): String = {
     val id = text(n, "id")
@@ -97,9 +101,10 @@ class GrpcControlPlane(cp: ControlPlane) {
     }
   }
 
+  private def unknownPipeline(pid: String) =
+    new IllegalArgumentException(s"unknown pipeline: $pid")
   private def configOf(pid: String): PipelineConfig =
-    cp.config(pid).getOrElse(
-      throw new IllegalArgumentException(s"unknown pipeline: $pid"))
+    cp.config(pid).getOrElse(throw unknownPipeline(pid))
 
   /** Pipelines named by a request: a provisioning `yaml` field, or a
     * minimal `config` object (the proto's Pipeline.Config analogue —
@@ -120,20 +125,10 @@ class GrpcControlPlane(cp: ControlPlane) {
   // ---- PipelineService ----------------------------------------------
 
   private val pipelineHandlers: Map[String, String => String] = Map(
-    "ListPipelines" -> { _ =>
-      s"""{"pipelines":${cp.registered.sorted.map(cp.statusJson)
-        .mkString("[", ",", "]")}}"""
-    },
+    "ListPipelines" -> { _ => s"""{"pipelines":${cp.listJson}}""" },
     "CreatePipeline" -> { req =>
       val ps = pipelinesOf(node(req))
-      // validate the whole batch before registering anything, so a
-      // duplicate later in a multi-pipeline YAML can't leave earlier
-      // entries registered behind an INVALID_ARGUMENT response
-      require(ps.map(_.id).distinct.size == ps.size,
-        s"duplicate ids in request: ${ps.map(_.id).mkString(", ")}")
-      val dup = ps.filter(p => cp.isRegistered(p.id))
-      require(dup.isEmpty, s"already exists: ${dup.map(_.id).mkString(", ")}")
-      ps.foreach(cp.register)
+      cp.create(ps)
       s"""{"pipeline":${cp.statusJson(ps.head.id)},"pipelines":${
         ps.map(p => cp.statusJson(p.id)).mkString("[", ",", "]")}}"""
     },
@@ -170,62 +165,32 @@ class GrpcControlPlane(cp: ControlPlane) {
     },
     "GetDLQ" -> { req =>
       val id = requireId(node(req))
-      val d = cp.config(id).flatMap(_.dlq)
-      d match {
-        case Some(q) =>
-          s"""{"dlq":{"plugin":${jstr(q.plugin)},"windowSize":${q.windowSize},"windowNackThreshold":${q.windowNackThreshold}}}"""
-        case None => """{"dlq":null}"""
-      }
+      cp.dlqJson(id).getOrElse(throw unknownPipeline(id))
     },
     "UpdateDLQ" -> { req =>
       val n = node(req)
       val id = requireId(n)
-      val d = Option(n.get("dlq")).getOrElse(
-        throw new IllegalArgumentException("missing field: dlq"))
-      // atomic check-and-replace: a concurrent delete maps to
-      // INVALID_ARGUMENT, a live query to FAILED_PRECONDITION (the
-      // running query keeps its old DLQ config — same invariant as
-      // UpdatePipeline), and the guard holds for the whole mutation
-      cp.mutate(id)(cfg => cfg.copy(dlq = Some(DlqConfig(
-        plugin = Option(d.get("plugin")).map(_.asText("builtin:log"))
-          .getOrElse("builtin:log"),
-        windowSize = Option(d.get("windowSize")).map(_.asInt(0)).getOrElse(0),
-        windowNackThreshold = Option(d.get("windowNackThreshold"))
-          .map(_.asInt(0)).getOrElse(0)))))
-      handlersDlqEcho(id)
+      cp.updateDlq(id, Option(n.get("dlq")).getOrElse(
+        throw new IllegalArgumentException("missing field: dlq")))
     },
     "ExportPipeline" -> { req =>
       val id = requireId(node(req))
-      s"""{"yaml":${jstr(Pipeline.toYaml(Seq(configOf(id))))}}"""
+      s"""{"yaml":${jtext(Pipeline.toYaml(Seq(configOf(id))))}}"""
     },
     "ImportPipeline" -> { req =>
       val ps = pipelinesOf(node(req))
-      requireNoneActive(ps)
-      ps.foreach(cp.register)
-      s"""{"ids":${ps.map(p => jstr(p.id)).mkString("[", ",", "]")}}"""
+      cp.provision(ps, "import")
+      s"""{"ids":${ps.map(p => jtext(p.id)).mkString("[", ",", "]")}}"""
     },
     "PlanPipeline" -> { req =>
       s"""{"plan":${cp.planFor(pipelinesOf(node(req)))}}"""
     },
     "ApplyPipeline" -> { req =>
       val ps = pipelinesOf(node(req))
-      requireNoneActive(ps)
       val plan = cp.planFor(ps)
-      ps.foreach(cp.register)
+      cp.provision(ps, "apply")
       s"""{"plan":$plan}"""
     })
-
-  /** Import/Apply overwrite whichever named pipelines already exist —
-    * the same running-config invariant as UpdatePipeline applies to
-    * every one of them. */
-  private def requireNoneActive(ps: Seq[PipelineConfig]): Unit = {
-    val live = ps.map(_.id).filter(cp.isActive)
-    if (live.nonEmpty) throw new IllegalStateException(
-      s"pipelines running: ${live.mkString(", ")}; stop them before applying")
-  }
-
-  private def handlersDlqEcho(id: String): String =
-    pipelineHandlers("GetDLQ")(s"""{"id":${jstr(id)}}""")
 
   // ---- ConnectorService ----------------------------------------------
 
@@ -595,31 +560,15 @@ class GrpcControlPlane(cp: ControlPlane) {
   // ---- InformationService (api.proto:1202) ---------------------------
 
   private val informationHandlers: Map[String, String => String] = Map(
-    "GetInfo" -> { _ =>
-      s"""{"info":{"version":${jstr(Metrics.Version)},"os":${
-        jstr(sys.props.getOrElse("os.name", "").toLowerCase)},"arch":${
-        jstr(sys.props.getOrElse("os.arch", ""))}}}"""
-    })
+    "GetInfo" -> { _ => s"""{"info":${ControlPlane.infoJson}}""" })
 
   // ---- grpc.health.v1.Health (reference: pkg/http/api/health_server
   // .go:48-74, registered with per-service checkers at
   // pkg/conduit/runtime.go:872-882) ------------------------------------
 
-  /** Service names accepted by the health checker — the reference
-    * registers SHORT names ("PipelineService"); the full proto names
-    * are accepted too so `grpc_health_probe -service=api.v1.X` works.
-    */
-  private val healthServices: Set[String] = {
-    val full = Set(GrpcControlPlane.ServiceName,
-      GrpcControlPlane.ConnectorServiceName,
-      GrpcControlPlane.ProcessorServiceName,
-      GrpcControlPlane.InformationServiceName)
-    full ++ full.map(_.stripPrefix("api.v1."))
-  }
-
   private def healthStatus(req: String): String = {
     val svc = text(node(req), "service")
-    if (svc.nonEmpty && !healthServices.contains(svc))
+    if (svc.nonEmpty && !HealthServices(svc))
       // NOT_FOUND, matching the reference (health_server.go:66)
       throw new NoSuchElementException(s"service '$svc' not found")
     // every served service is backed by the same in-process control
@@ -760,6 +709,17 @@ object GrpcControlPlane {
   val ProcessorServiceName = "api.v1.ProcessorService"
   val InformationServiceName = "api.v1.InformationService"
   val HealthServiceName = "grpc.health.v1.Health"
+
+  /** Service names the health checks accept — gRPC `Health/Check` and
+    * REST `GET /healthz` alike. The reference registers SHORT names
+    * ("PipelineService"); the full proto names are accepted too so
+    * `grpc_health_probe -service=api.v1.X` works.
+    */
+  val HealthServices: Set[String] = {
+    val full = Set(ServiceName, ConnectorServiceName, ProcessorServiceName,
+      InformationServiceName)
+    full ++ full.map(_.stripPrefix("api.v1."))
+  }
 
   /** Short-name aliases `Runner.source`/`Runner.write` accept beside
     * the canonical catalogue names. */

@@ -16,9 +16,6 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   */
 object Metrics {
 
-  /** Engine version string (shared with the gRPC InformationService). */
-  val Version = "v0.1.0"
-
   final case class QuerySnapshot(batches: Long, inputRows: Long,
                                  lastRowsPerSecond: Double)
 
@@ -119,7 +116,7 @@ object Metrics {
       sb.append(s"# HELP $name $help\n# TYPE $name $kind\n")
 
     header("graft_info", "Information about the engine.", "gauge")
-    sb.append("graft_info{version=\"").append(esc(Version))
+    sb.append("graft_info{version=\"").append(esc(graft.ops.PluginCatalog.Version))
       .append("\"} 1\n")
 
     header("graft_pipelines", "Number of pipelines by status.", "gauge")

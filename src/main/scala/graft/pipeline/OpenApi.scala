@@ -10,10 +10,10 @@ import graft.functions.JsonOps
   * runtime at `pkg/conduit/runtime.go:974-983` and advertised in the
   * startup log). The reference ships a protoc-generated
   * `api.swagger.json`; this engine has no protoc, so the document is
-  * rendered from the SAME route table [[ControlPlane]] registers its
-  * handlers from ([[ControlPlane.Resources]] for the gRPC-bridged
-  * resource routes) — the doc and the server cannot drift because
-  * they are two views of one `Seq[Route]`.
+  * rendered from the SAME route tables [[ControlPlane]] registers its
+  * handlers from ([[ControlPlane.Routes]] for the pipeline and system
+  * routes, [[ControlPlane.Resources]] for the gRPC-bridged resource
+  * routes) — the doc and the server are two views of one table.
   *
   * The explorer at `GET /openapi` is a single self-contained HTML
   * page (no CDN assets — the deployment target has no egress): it
@@ -22,51 +22,16 @@ import graft.functions.JsonOps
   */
 object OpenApi {
 
-  /** One REST operation: the unit both the server's route comment and
-    * the OpenAPI `paths` object are generated from.
-    */
+  /** One REST operation as the OpenAPI `paths` object lists it. */
   final case class Route(method: String, path: String, operationId: String,
                          summary: String, tag: String)
 
-  /** Every route the control plane serves. The /v1/connectors and
-    * /v1/processors entries are DERIVED from
-    * [[ControlPlane.Resources]] — the same values `start()` passes to
-    * its handler registration — so adding a resource route in one
-    * place surfaces it in the document automatically.
+  /** Every route the control plane serves: the pipeline and system
+    * routes of [[ControlPlane.Routes]], then the /v1/connectors and
+    * /v1/processors routes DERIVED from [[ControlPlane.Resources]] —
+    * the same values `start()` serves.
     */
-  def routes: Seq[Route] = pipelineRoutes ++ resourceRoutes ++ miscRoutes
-
-  private def pipelineRoutes: Seq[Route] = Seq(
-    Route("get", "/v1/pipelines", "ListPipelines",
-      "List registered pipelines with status", "pipelines"),
-    Route("post", "/v1/pipelines", "CreatePipeline",
-      "Create pipelines from provisioning YAML", "pipelines"),
-    Route("post", "/v1/pipelines/import", "ImportPipelines",
-      "Import provisioning YAML (alias of create)", "pipelines"),
-    Route("get", "/v1/pipelines/export", "ExportPipelines",
-      "Export all registered pipelines as YAML", "pipelines"),
-    Route("post", "/v1/pipelines/plan", "PlanPipelines",
-      "Diff provisioning YAML against registered state", "pipelines"),
-    Route("post", "/v1/pipelines/apply", "ApplyPipelines",
-      "Apply provisioning YAML (register creates and updates)",
-      "pipelines"),
-    Route("post", "/v1/pipelines/{id}/start", "StartPipeline",
-      "Start the pipeline's streaming query (?supervise=true for the " +
-        "recovery loop)", "pipelines"),
-    Route("post", "/v1/pipelines/{id}/stop", "StopPipeline",
-      "Stop the pipeline", "pipelines"),
-    Route("get", "/v1/pipelines/{id}/status", "GetPipelineStatus",
-      "Lifecycle state, restart count and metrics snapshot", "pipelines"),
-    Route("get", "/v1/pipelines/{id}/export", "ExportPipeline",
-      "Export one pipeline as YAML", "pipelines"),
-    Route("get", "/v1/pipelines/{id}/inspect", "InspectPipeline",
-      "Drain the pipeline's inspector tap sample", "pipelines"),
-    Route("get", "/v1/pipelines/{id}/dead-letter-queue", "GetDLQ",
-      "Dead-letter-queue configuration", "pipelines"),
-    Route("put", "/v1/pipelines/{id}/dead-letter-queue", "UpdateDLQ",
-      "Update dead-letter-queue configuration", "pipelines"),
-    Route("delete", "/v1/pipelines/{id}", "DeletePipeline",
-      "Stop and unregister the pipeline", "pipelines"))
+  def routes: Seq[Route] = ControlPlane.Routes.map(_.route) ++ resourceRoutes
 
   private def resourceRoutes: Seq[Route] =
     ControlPlane.Resources.flatMap { r =>
@@ -76,8 +41,6 @@ object OpenApi {
           s"List ${tag} (?pipeline_id= filters)", tag),
         Route("post", r.base, s"Create${r.noun}",
           s"Create a ${r.noun.toLowerCase}", tag),
-        Route("get", s"${r.base}/plugins", s"List${r.noun}Plugins",
-          s"${r.noun}-plugin specifications (?name= regex filters)", tag),
         Route("get", s"${r.base}/{id}", s"Get${r.noun}",
           s"Get one ${r.noun.toLowerCase} by composite id", tag),
         Route("put", s"${r.base}/{id}", s"Update${r.noun}",
@@ -99,23 +62,10 @@ object OpenApi {
       base ++ validate ++ inspects
     }
 
-  private def miscRoutes: Seq[Route] = Seq(
-    Route("get", "/healthz", "Healthz",
-      "Health of the server and its API services (?service= checks one)",
-      "system"),
-    Route("get", "/metrics", "Metrics",
-      "Prometheus text exposition of the engine's counters", "system"),
-    Route("get", "/info", "GetInfo", "Version, OS and architecture",
-      "system"),
-    Route("get", "/openapi.json", "OpenApiDocument",
-      "This document", "system"),
-    Route("get", "/openapi", "OpenApiExplorer",
-      "Self-contained HTML API explorer", "system"))
-
   /** The OpenAPI 3 document as JSON, built with a real JSON writer
     * (never string-spliced) so it always parses.
     */
-  def documentJson(version: String): String = {
+  def documentJson: String = {
     val m = JsonOps.mapper
     val root = m.createObjectNode()
     root.put("openapi", "3.0.3")
@@ -124,7 +74,7 @@ object OpenApi {
     info.put("description",
       "REST facade over the pipeline engine's gRPC control services " +
         "(same handler maps, one vocabulary).")
-    info.put("version", version)
+    info.put("version", graft.ops.PluginCatalog.Version)
     val paths = root.putObject("paths")
     routes.groupBy(_.path).toSeq.sortBy(_._1).foreach { case (path, ops) =>
       val p = paths.putObject(path)

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analytics.Fences
 import graft.functions.JsonOps
-import graft.pipeline.ControlPlane
+import graft.pipeline.{ControlPlane, GrpcControlPlane, OpenApi, Pipeline}
 
 /** Drives the REST control plane over HTTP: create from YAML, start,
   * status, inspect, stop.
@@ -313,6 +313,100 @@ class ControlPlaneSpec extends AnyFunSuite {
       assert(!(sup3 eq sup1) && sup3.status == sup3.Status.Running)
       cp.stopPipeline("cp-sup")
       assert(sup3.status == sup3.Status.Stopped)
+    } finally cp.stop()
+  }
+
+  test("stop() also stops supervised pipelines") {
+    val cp = new ControlPlane(spark, Fences.tempDir("cp-stop-sup"))
+    cp.register(Pipeline("cp-stop-sup")
+      .source("gen", "builtin:generator",
+        "format.options.id" -> "int", "recordCount" -> "1000000", "rate" -> "1000")
+      .destination("out", "null"))
+    val sup = cp.superviseStart("cp-stop-sup")
+    val deadline = System.currentTimeMillis() + 60000
+    while (!sup.query.exists(_.isActive) && System.currentTimeMillis() < deadline)
+      Thread.sleep(100)
+    val q = sup.query.getOrElse(fail("the supervisor never started its query"))
+    cp.stop()
+    assert(sup.status == sup.Status.Stopped, "cp.stop() must reach the supervisor")
+    assert(!q.isActive, "the supervised query must not outlive cp.stop()")
+  }
+
+  test("REST /info, gRPC GetInfo and graft_info serve one version") {
+    val cp = new ControlPlane(spark, Fences.tempDir("cp-ver"))
+    val port = cp.start(0)
+    val grpc = new GrpcControlPlane(cp)
+    grpc.serveInProcess("cp-ver")
+    val cli = GrpcControlPlane.inProcessClient("cp-ver")
+    val client = HttpClient.newHttpClient()
+    def get(p: String): String =
+      client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$port$p")).GET().build(),
+        HttpResponse.BodyHandlers.ofString()).body()
+    try {
+      val rest = JsonOps.parse(get("/info")).get("version").asText
+      val rpc = JsonOps.parse(cli.call(GrpcControlPlane.InformationServiceName,
+        "GetInfo", "{}")).get("info").get("version").asText
+      val gauge = """graft_info\{version="([^"]*)"\} 1""".r
+        .findFirstMatchIn(get("/metrics")).map(_.group(1))
+      assert(rest == graft.ops.PluginCatalog.Version)
+      assert(rpc == rest, s"gRPC GetInfo $rpc vs REST /info $rest")
+      assert(gauge.contains(rest), s"graft_info $gauge vs REST /info $rest")
+    } finally { cli.close(); grpc.stop(); cp.stop() }
+  }
+
+  test("every documented route is served and every served context is documented") {
+    val cp = new ControlPlane(spark, Fences.tempDir("cp-parity"))
+    val port = cp.start(0)
+    val client = HttpClient.newHttpClient()
+    def send(method: String, p: String, body: String = ""): HttpResponse[String] =
+      client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:$port$p"))
+        .method(method, HttpRequest.BodyPublishers.ofString(body)).build(),
+        HttpResponse.BodyHandlers.ofString())
+    val pipelineYaml = Pipeline.toYaml(Seq(Pipeline("cp-par")
+      .source("gen", "builtin:generator",
+        "format.options.id" -> "int", "recordCount" -> "10")
+      .destination("out", "null")))
+    try {
+      assert(send("POST", "/v1/pipelines", pipelineYaml).statusCode() == 201)
+      assert(send("POST", "/v1/processors",
+        """{"pipeline_id":"cp-par","id":"p1","plugin":"base64.encode",""" +
+          """"settings":{"field":".Payload.After"}}""").statusCode() == 200)
+      val seeded = Pipeline.toYaml(cp.config("cp-par").toSeq)
+      // one request per documented route; deletes last, the pipeline's
+      // own delete after its components'
+      val routes = OpenApi.routes.sortBy(r =>
+        if (r.method != "delete") 0 else if (r.path.startsWith("/v1/pipelines")) 2 else 1)
+      for (r <- routes) {
+        val id =
+          if (r.path.startsWith("/v1/pipelines")) "cp-par"
+          else if (r.path.startsWith("/v1/connectors")) "cp-par:gen"
+          else "cp-par:p1"
+        val body = (r.method, r.path) match {
+          case ("post", p) if p.startsWith("/v1/pipelines") => seeded
+          case ("put", p) if p.endsWith("dead-letter-queue") =>
+            """{"plugin":"builtin:log","windowSize":4}"""
+          case ("post", "/v1/connectors") =>
+            """{"pipeline_id":"cp-par","type":"destination","plugin":"memory","id":"out2"}"""
+          case ("post", "/v1/connectors/validate") =>
+            """{"type":"destination","plugin":"memory"}"""
+          case ("post", "/v1/processors") =>
+            """{"pipeline_id":"cp-par","id":"p2","plugin":"base64.encode",""" +
+              """"settings":{"field":".Payload.After"}}"""
+          case _ => "{}"
+        }
+        val query = if (r.path.contains("inspect")) "?duration_ms=1" else ""
+        val resp = send(r.method.toUpperCase, r.path.replace("{id}", id) + query, body)
+        assert(resp.body() != """{"error":"not found"}""",
+          s"${r.method} ${r.path} fell through to the router's 404")
+        assert(resp.statusCode() / 100 == 2,
+          s"${r.method} ${r.path}: ${resp.statusCode()} ${resp.body().take(200)}")
+      }
+      assert(!cp.isRegistered("cp-par"))
+      val paths = JsonOps.parse(send("GET", "/openapi.json").body()).get("paths")
+      ControlPlane.contexts.foreach(ctx =>
+        assert(paths.get(ctx) != null, s"served context $ctx is not documented"))
     } finally cp.stop()
   }
 }

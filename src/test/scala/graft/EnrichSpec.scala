@@ -257,4 +257,23 @@ class EnrichSpec extends AnyFunSuite {
     assert(message("cohere.command", "backoffRetry.factor" -> "x2") ==
       "cohere.command: setting backoffRetry.factor must be a number, got \"x2\"")
   }
+
+  test("a malformed webhook or LLM retry setting names the plugin, the setting and the value") {
+    def webhook(setting: (String, String)): String =
+      intercept[IllegalArgumentException](WebhookHttp(
+        Map("request.url" -> "http://svc/x", setting), FakeTransport("t9"))).getMessage
+    assert(webhook("backoffRetry.min" -> "soon") == "webhook.http: setting " +
+      "backoffRetry.min must be a duration such as 250ms or 5s, got \"soon\"")
+    assert(webhook("backoffRetry.max" -> "1.5s") == "webhook.http: setting " +
+      "backoffRetry.max must be a duration such as 250ms or 5s, got \"1.5s\"")
+    assert(webhook("backoffRetry.count" -> "three") ==
+      "webhook.http: setting backoffRetry.count must be an integer, got \"three\"")
+    assert(webhook("backoffRetry.factor" -> "x2") ==
+      "webhook.http: setting backoffRetry.factor must be a number, got \"x2\"")
+    val llm = intercept[IllegalArgumentException](LlmProcessor("cohere.embed",
+      Map("initial_backoff" -> "10 min"), FakeTransport("t9"))
+      .transform(genRecords(1))).getMessage
+    assert(llm == "cohere.embed: setting initial_backoff must be a duration " +
+      "such as 250ms or 5s, got \"10 min\"")
+  }
 }

@@ -457,6 +457,38 @@ class GrpcControlPlaneSpec extends AnyFunSuite {
     cp.stop()
   }
 
+  test("Import/Apply accept a running pipeline's identical config and refuse a changed one") {
+    val cp = new ControlPlane(spark, Fences.tempDir("grpc_cp_run"))
+    val svc = new GrpcControlPlane(cp)
+    svc.serveInProcess("grpc-spec-run")
+    val cli = GrpcControlPlane.inProcessClient("grpc-spec-run")
+    def yamlAt(rate: String) = s"""{"yaml":${quote(Pipeline.toYaml(Seq(
+      Pipeline("grun")
+        .source("gen", "builtin:generator", "format.options.id" -> "int", "rate" -> rate)
+        .destination("out", "null"))))}}"""
+    def rate = cp.config("grun").get.sources.head.settings("rate")
+    try {
+      cli.call("CreatePipeline", yamlAt("100"))
+      cli.call("StartPipeline", """{"id":"grun"}""")
+      try {
+        for (m <- Seq("ApplyPipeline", "ImportPipeline")) {
+          cli.call(m, yamlAt("100")) // unchanged: a no-op success
+          val ex = intercept[org.sparkproject.connect.grpc.StatusRuntimeException] {
+            cli.call(m, yamlAt("200"))
+          }
+          assert(ex.getStatus.getCode ==
+            org.sparkproject.connect.grpc.Status.Code.FAILED_PRECONDITION, s"$m: $ex")
+          assert(rate == "100", s"$m must leave the running config in place")
+        }
+        assert(cp.isActive("grun"))
+      } finally cli.call("StopPipeline", """{"id":"grun"}""")
+      cli.call("ApplyPipeline", yamlAt("200"))
+      assert(rate == "200")
+      cli.call("ImportPipeline", yamlAt("300"))
+      assert(rate == "300")
+    } finally { cli.close(); svc.stop(); cp.stop() }
+  }
+
   private def quote(s: String): String =
     JsonOps.render(JsonOps.mapper.getNodeFactory.textNode(s))
 }

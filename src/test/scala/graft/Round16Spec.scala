@@ -541,6 +541,15 @@ class Round16Spec extends AnyFunSuite {
       lists("cohere.embed", "inputField", "outputField", "field", "result.field")
       for (p <- Seq("cohere.command", "cohere.rerank"))
         lists(p, "request.body", "response.body", "field", "result.field")
+      for (p <- Seq("openai.embed", "openai.embeddings", "openai.textgen",
+          "cohere.command", "cohere.embed", "cohere.rerank", "ollama.request", "ollama"))
+        lists(p, "batchSize", "maxTextsPerRequest", "backoffRetry.count", "max_retries",
+          "backoffRetry.min", "initial_backoff", "backoffRetry.max", "max_backoff",
+          "backoffRetry.factor", "backoff_factor", "apiKey", "api_key")
+      assert(params("cohere.embed").get("batchSize").get("default").asText == "96")
+      assert(params("openai.textgen").get("batchSize").get("default").asText == "1")
+      assert(params("ollama").get("backoffRetry.min").get("default").asText == "100ms")
+      lists("webhook.http", "request.contentType", "response.status")
       assert(params("openai.embed").get("field").get("default").asText == ".Payload.After")
       assert(params("ollama").get("url").get("default").asText == "http://localhost:11434")
       // name-regex filter narrows like the reference request
