@@ -171,8 +171,7 @@ class ControlPlane(spark: SparkSession, checkpointRoot: String) {
   def updateDlq(id: String, d: JsonNode): String = {
     val plugin = Option(d.get("plugin")).map(_.asText("builtin:log")).getOrElse("builtin:log")
     def int(name: String) = Option(d.get(name)).map(_.asInt(0)).getOrElse(0)
-    dlqDoc(mutate(id)(_.copy(dlq = Some(DlqConfig(plugin,
-      windowSize = int("windowSize"), windowNackThreshold = int("windowNackThreshold"))))).dlq)
+    dlqDoc(mutate(id)(_.withDlq(plugin, int("windowSize"), int("windowNackThreshold"))).dlq)
   }
 
   private def dlqDoc(dlq: Option[DlqConfig]): String = dlq match {
@@ -222,11 +221,7 @@ class ControlPlane(spark: SparkSession, checkpointRoot: String) {
 
   def start(port: Int): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    contexts.foreach { ctx =>
-      val serve = Resources.find(_.base == ctx)
-        .fold[HttpExchange => Unit](serveRoute)(r => serveResource(r, _))
-      server.createContext(ctx, serve(_))
-    }
+    contexts.foreach(ctx => server.createContext(ctx, ex => serve(ex)))
     server.setExecutor(null)
     server.start()
     server.getAddress.getPort
@@ -248,18 +243,22 @@ class ControlPlane(spark: SparkSession, checkpointRoot: String) {
   }
 
   /** The first [[Routes]] entry whose method and path template fit
-    * the request handles it; none → 404, a failing handler → 400. */
-  private def serveRoute(ex: HttpExchange): Unit = {
+    * the request handles it (a failing handler → 400), else the
+    * [[Resources]] entry whose base the path lies under; none → 404.
+    * Every context is served here because HttpServer picks a context
+    * by string prefix: `/v1/processors/plugins` also receives
+    * `/v1/processors/plugins-etl:p1`, which is a processor id. */
+  private def serve(ex: HttpExchange): Unit = {
     val path = segments(ex.getRequestURI.getPath)
-    val reply = Routes.iterator
-      .flatMap(r => r.bind(ex.getRequestMethod, path).map(r -> _))
+    Routes.iterator.flatMap(r => r.bind(ex.getRequestMethod, path).map(r -> _))
       .nextOption() match {
-      case None => NotFound
       case Some((r, id)) =>
-        try r.handle(this, new Call(ex, id))
-        catch { case e: Exception => Reply(400, errorJson(e.getMessage)) }
+        respond(ex, try r.handle(this, new Call(ex, id))
+          catch { case e: Exception => Reply(400, errorJson(e.getMessage)) })
+      case None =>
+        Resources.find(r => path.startsWith(segments(r.base)))
+          .fold(respond(ex, NotFound))(serveResource(_, ex))
     }
-    respond(ex, reply)
   }
 
   /** Connector/processor resource routes (reference parity: the
@@ -269,8 +268,7 @@ class ControlPlane(spark: SparkSession, checkpointRoot: String) {
     * cannot drift. */
   private def serveResource(r: ResourceDef, ex: HttpExchange): Unit = {
     val c = new Call(ex, "")
-    val path = segments(URLDecoder.decode(ex.getRequestURI.getPath, "UTF-8")
-      .stripPrefix(r.base)).toList
+    val path = segments(ex.getRequestURI.getPath.stripPrefix(r.base)).toList
     def unary(method: String, req: String) =
       Reply(200, facade.invokeUnary(r.service, method, req))
     def idReq(id: String) = s"""{"id":${jtext(id)}}"""

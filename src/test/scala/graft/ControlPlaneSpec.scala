@@ -150,6 +150,49 @@ class ControlPlaneSpec extends AnyFunSuite {
     } finally cp.stop()
   }
 
+  test("REST resource ids are percent-decoded once") {
+    val cp = new ControlPlane(spark, Fences.tempDir("cp-enc"))
+    val port = cp.start(0)
+    val client = HttpClient.newHttpClient()
+    def get(p: String): HttpResponse[String] =
+      client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$port$p")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+    try {
+      cp.register(Pipeline("cp+1%")
+        .source("gen", "builtin:generator", "format.options.id" -> "int")
+        .destination("out", "null"))
+      val r = get("/v1/connectors/cp%2B1%25:gen")
+      assert(r.statusCode() == 200, r.body())
+      assert(JsonOps.parse(r.body()).get("connector")
+        .get("pipeline_id").asText() == "cp+1%")
+    } finally cp.stop()
+  }
+
+  test("a resource id that starts with a route's path reaches its resource") {
+    val cp = new ControlPlane(spark, Fences.tempDir("cp-shadow"))
+    val port = cp.start(0)
+    val client = HttpClient.newHttpClient()
+    def get(p: String): HttpResponse[String] =
+      client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$port$p")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+    try {
+      // HttpServer hands these to the /v1/{connectors,processors}/plugins
+      // contexts, whose string prefix they share
+      cp.register(Pipeline("plugins-etl")
+        .source("gen", "builtin:generator", "format.options.id" -> "int")
+        .processor("p1", "base64.encode", "field" -> ".Payload.After")
+        .destination("out", "null"))
+      for ((noun, id, plugin) <- Seq(("connector", "gen", "builtin:generator"),
+          ("processor", "p1", "base64.encode"))) {
+        val r = get(s"/v1/${noun}s/plugins-etl:$id")
+        assert(r.statusCode() == 200, r.body().take(200))
+        assert(JsonOps.parse(r.body()).get(noun).get("plugin").asText() == plugin)
+      }
+    } finally cp.stop()
+  }
+
   test("GET /openapi.json is OpenAPI 3 and describes every served route") {
     val ckpt = Fences.tempDir("cp-oas")
     val cp = new ControlPlane(spark, ckpt)
