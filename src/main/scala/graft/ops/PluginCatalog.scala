@@ -3,7 +3,8 @@ package graft.ops
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 
-import Registry.{Setting, entries, opt, req}
+import Plugins.{opt, req}
+import Registry.{Setting, entries}
 
 /** Generated plugin catalogue: renders [[Registry.entries]] (one per
   * named processor plugin, with its settings and a runnable YAML

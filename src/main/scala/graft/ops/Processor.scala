@@ -44,6 +44,24 @@ trait Processor extends Serializable {
     }
 }
 
+object Processor {
+  /** The processor `plugin` whose transform is `f`. Given a `batchOnly`
+    * reason, it rejects a streaming frame with that reason instead of
+    * Spark's opaque streaming AnalysisException from deep in the plan.
+    */
+  def apply(plugin: String, batchOnly: String = "")(
+      f: DataFrame => DataFrame): Processor = new Fn(plugin, batchOnly, f)
+
+  private final class Fn(val plugin: String, batchOnly: String,
+                         f: DataFrame => DataFrame) extends Processor {
+    override def transform(df: DataFrame): DataFrame = {
+      require(batchOnly.isEmpty || !df.isStreaming, s"$plugin is batch-only " +
+        s"($batchOnly); run the pipeline with --batch or apply it foreachBatch")
+      f(df)
+    }
+  }
+}
+
 /** Record-local column-rewrite processor (SingleRecord semantics). */
 trait ColumnProcessor extends Processor {
   /** Column rewrites; key = CDC column name. */
@@ -74,6 +92,20 @@ trait ColumnProcessor extends Processor {
       name -> when(coalesce(cond, lit(false)), c).otherwise(col(name))
     }
     base.withColumns(gated).drop(tmp.keys.toSeq: _*)
+  }
+}
+
+object ColumnProcessor {
+  /** The column processor `plugin` with rewrites `f` and temp columns
+    * `temp`. */
+  def apply(plugin: String,
+            temp: DataFrame => Map[String, Column] = _ => Map.empty)(
+      f: DataFrame => Map[String, Column]): ColumnProcessor = new Fn(plugin, temp, f)
+
+  private final class Fn(val plugin: String, temp: DataFrame => Map[String, Column],
+                         f: DataFrame => Map[String, Column]) extends ColumnProcessor {
+    override def tempColumns(df: DataFrame): Map[String, Column] = temp(df)
+    override def rewrites(df: DataFrame): Map[String, Column] = f(df)
   }
 }
 

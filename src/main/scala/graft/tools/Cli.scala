@@ -1,7 +1,8 @@
 package graft.tools
 
-import java.net.URI
+import java.net.{URI, URLEncoder}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
 import com.fasterxml.jackson.databind.JsonNode
@@ -282,7 +283,7 @@ object Cli {
     JsonOps.mapper.writerWithDefaultPrettyPrinter().writeValueAsString(n)
 
   private def pluginsLs(rest: List[String], baseUrl: String): (Int, String) = {
-    val q = rest.headOption.map(r => s"?name=$r").getOrElse("")
+    val q = rest.headOption.map(r => s"?name=${URLEncoder.encode(r, UTF_8)}").getOrElse("")
     (for {
       procs <- get(baseUrl, s"/v1/processors/plugins$q")
       conns <- get(baseUrl, s"/v1/connectors/plugins$q")

@@ -9,7 +9,7 @@ import graft.model.Cdc
 import graft.ops.Registry
 import graft.pipeline.{ConnectorConfig, PipelineConfig, ProcessorConfig, Pipeline => Dsl}
 
-/** The round-8 analytics families on the registry/YAML surface:
+/** Registry analytics plugins, part 1, on the registry/YAML surface:
   * privacy.pseudonymize / kanon / noise, layout.key, cdc.scd2,
   * graph.pagerank / links — each created from pure string settings
   * and checked against its Scala operator.

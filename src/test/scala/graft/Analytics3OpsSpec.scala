@@ -9,7 +9,7 @@ import graft.model.Cdc
 import graft.ops.Registry
 import graft.pipeline.{PipelineConfig, ProcessorConfig, Pipeline => Dsl}
 
-/** The round-14 registry promotions (Analytics3Ops): text curation
+/** Registry analytics plugins, part 2: text curation
   * annotators, near-dup/semantic dedup reshapes, similarity search,
   * temperature sampling, outlier screens, and sketches — each created
   * from pure string settings and checked against its Scala operator.

@@ -9,7 +9,7 @@ import graft.model.Cdc
 import graft.ops.Registry
 import graft.pipeline.{PipelineConfig, ProcessorConfig, Pipeline => Dsl}
 
-/** The round-15 registry promotions (Analytics4Ops): k-fold
+/** Registry analytics plugins, part 3: k-fold
   * assignment, classifier quality gates, OOV screens, sequence
   * packing, negative sampling, and int8 quantization — each created
   * from pure string settings and checked against its Scala operator.

@@ -166,6 +166,19 @@ class CliSpec extends AnyFunSuite {
     }
   }
 
+  test("plugins ls sends its regex URL-encoded") {
+    val cp = new ControlPlane(spark, Fences.tempDir("cli-regex-ckpt"))
+    val base = s"http://127.0.0.1:${cp.start(0)}"
+    try {
+      val (ac, aout) = Cli.run(Array("plugins", "ls", "^json\\.de"), base)
+      assert(ac == 0 && aout.contains("json.decode") && !aout.contains("json.encode"),
+        aout)
+      val (sc, sout) = Cli.run(Array("plugins", "ls", "^(json|avro)\\.encode$| x"), base)
+      assert(sc == 0 && sout.contains("json.encode") && sout.contains("avro.encode") &&
+        !sout.contains("json.decode"), sout)
+    } finally cp.stop()
+  }
+
   test("config prints every documented setting with provenance") {
     // defaults: every knob present, every source `default` (version
     // is the build constant)

@@ -31,6 +31,15 @@ class PluginCatalogSpec extends AnyFunSuite {
     }
   }
 
+  test("every example builds a processor serving the entry's own plugin name") {
+    // the aliases build the processor of the plugin they alias
+    val aliases = Map("openai.embeddings" -> "openai.embed", "ollama" -> "ollama.request")
+    Registry.entries.foreach { e =>
+      assert(Registry.create(e.plugin, e.example).plugin ==
+        aliases.getOrElse(e.plugin, e.plugin), e.plugin)
+    }
+  }
+
   test("every entry has a one-line summary and documented settings") {
     Registry.entries.foreach { e =>
       assert(e.summary.nonEmpty && !e.summary.contains('\n'), e.plugin)
@@ -74,6 +83,40 @@ class PluginCatalogSpec extends AnyFunSuite {
       "sample.mixture: targets entry must be name:number, got de:lots")
     assert(message("filter", "sdk.schema.avro" -> "{}", "sdk.schema.id" -> "one") ==
       "filter: setting sdk.schema.id must be an integer, got \"one\"")
+  }
+
+  test("a malformed list item names the plugin, the setting and the item") {
+    def message(plugin: String, settings: (String, String)*): String =
+      intercept[IllegalArgumentException](
+        Registry.create(plugin, settings.toMap)).getMessage
+    assert(message("sample.split", "group" -> ".Payload.After.id",
+      "fractions" -> "train:0.8,val") ==
+      "sample.split: fractions entry must be name:number, got val")
+    assert(message("sketch.kll", "value" -> ".Payload.After.v", "id" -> ".Payload.After.id",
+      "quantiles" -> "p50:5000,p90") ==
+      "sketch.kll: quantiles entry must be name:integer, got p90")
+    assert(message("sketch.kll", "value" -> ".Payload.After.v", "id" -> ".Payload.After.id",
+      "quantiles" -> "p50:half") ==
+      "sketch.kll: quantiles entry must be name:integer, got p50:half")
+    assert(message("sketch.hist", "groups" -> ".Payload.After.g",
+      "value" -> ".Payload.After.v", "quantiles" -> "0.5,high") ==
+      "sketch.hist: quantiles entry must be a number, got high")
+    assert(message("linkage.score", "id" -> ".Payload.After.id",
+      "block" -> ".Payload.After.zip", "fields" -> ".Payload.After.name:0.9") ==
+      "linkage.score: fields entry must be REF:m:u, got .Payload.After.name:0.9")
+    assert(message("linkage.score", "id" -> ".Payload.After.id",
+      "block" -> ".Payload.After.zip", "fields" -> ".Payload.After.name:0.9:low") ==
+      "linkage.score: fields entry must be REF:m:u, got .Payload.After.name:0.9:low")
+    assert(message("field.rename", "mapping" -> ".Payload.After.a") ==
+      "field.rename: mapping entry must be from:to, got .Payload.After.a")
+    def dq(checks: String) = message("dq.validate", "checks" -> checks)
+    val shape = "not_null|in_range|values_in|unique|distinct_between:REF[:args]"
+    assert(dq("not_null:.Payload.After.x;in_range:.Payload.After.x:1") ==
+      s"dq.validate: checks entry must be $shape, got in_range:.Payload.After.x:1")
+    assert(dq("not_null:.Payload.After.x:most") ==
+      s"dq.validate: checks entry must be $shape, got not_null:.Payload.After.x:most")
+    assert(dq("no_such:.Payload.After.x") ==
+      s"dq.validate: checks entry must be $shape, got no_such:.Payload.After.x")
   }
 
   test("committed PLUGINS.md matches a regeneration") {

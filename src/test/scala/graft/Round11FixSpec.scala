@@ -35,17 +35,12 @@ class Round11FixSpec extends AnyFunSuite {
   lazy val spark = Spark.session
   import spark.implicits._
 
-  // exposes the protected registrar for direct testing
-  private class FenceHarness extends BatchFenceRelease {
-    def rotate(): Seq[DataFrame] => Unit = rotateFences()
-  }
-
   test("BatchFenceRelease: batch n's fences released when batch n+1 builds") {
-    val h = new FenceHarness
+    val h = new BatchFenceRelease
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("s", "d")
 
     var batch1: Seq[DataFrame] = Nil
-    val hook1 = h.rotate()
+    val hook1 = h.rotateFences()
     val r1 = Graph.pageRank(edges, "s", "d", iterations = 2, eager = false,
       onFences = fs => { batch1 = fs; hook1(fs) })
     val ranks1 = r1.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -55,7 +50,7 @@ class Round11FixSpec extends AnyFunSuite {
 
     // batch 2 arrives: building its plan rotates batch 1's fences out
     var batch2: Seq[DataFrame] = Nil
-    val hook2 = h.rotate()
+    val hook2 = h.rotateFences()
     assert(batch1.forall(_.storageLevel == StorageLevel.NONE),
       "rotate must unpersist the previous batch's fences")
     val r2 = Graph.pageRank(edges, "s", "d", iterations = 2, eager = false,
@@ -64,7 +59,7 @@ class Round11FixSpec extends AnyFunSuite {
     assert(ranks1 == ranks2, "results must be identical across batches")
     assert(batch2.forall(_.storageLevel != StorageLevel.NONE))
     // hygiene for the rest of the suite
-    h.rotate()
+    h.rotateFences()
     assert(batch2.forall(_.storageLevel == StorageLevel.NONE))
   }
 
